@@ -109,12 +109,15 @@ def serve(spark: SparkSession, sf_dir: str, route: str, **params) -> str:
         # excludes). A prefix match would be wrong: '1995-1' must match
         # only month 1, never 1995-10/11/12, and each given part is
         # compared against the zero-padded storage form individually.
+        # Only the date portion of "YYYY-MM-DD HH:MM:SS" is split, so
+        # the day part is "DD", not "DD HH:MM:SS".
         d = str(params["date"])  # "YYYY[-M[-D]]"
         given = d.split("-")
         widths = (4, 2, 2)
+        date_parts = F.split(F.substring("start_time", 1, 10), "-")
         cond = F.lit(True)
         for i, part in enumerate(given[:3]):
-            stored = F.split(F.col("start_time"), "-").getItem(i)
+            stored = date_parts.getItem(i)
             cond = cond & (stored == part.zfill(widths[i]))
         return _records(rides.filter(cond))
     if route == "/ride/del":

@@ -204,7 +204,7 @@ class SchemaDriftError(RuntimeError):
 def assert_schemas(spark: SparkSession, sf_dir: str) -> None:
     """Pre-flight: verify every table's post-normalization dtypes.
 
-    Invoked by bench.py, tools/driver_sim.py, and the test conftest so a
+    Invoked by tools/driver_sim.py and the test conftest so a
     future testdata regeneration that changes physical types fails here
     with one descriptive message naming the table+column, rather than as
     18 scattered DATATYPE_MISMATCH AnalysisExceptions mid-run.

@@ -339,26 +339,15 @@ def _assign_nearest(d: DataFrame, cents: DataFrame) -> DataFrame:
     every semantic-index builder (codebook training, corpus
     assignment, incremental screens) runs.
 
-    Two bit-identical implementations sit behind this dispatcher
-    (VERDICT r10 task 2):
-
-    - ``arrow`` (default): a vectorized numpy kernel over
-      ``mapInPandas`` — the BUILD path. Per-element SQL ``aggregate``
-      folds are 10-100× off vectorized math, and the one-time ×100
-      artifact build was ~850 s of HOF-dot time; the kernel replays
-      the exact IEEE op sequence (see ``_assign_nearest_arrow``) so
-      its argmax is bit-equal, which the full oracle matrix at both
-      SFs plus tests/test_assign_kernel_parity.py enforce.
-    - ``hof``: the pure-JVM column-expression leg (broadcast codebook,
-      packed-BIGINT max partial agg) — the reference semantics the
-      oracle SQL mirrors, kept fully wired and plan-asserted
-      (``SPARK_GRAFT_ASSIGN_KERNEL=hof`` switches every call site
-      back).
+    Runs the vectorized numpy kernel over ``mapInPandas``
+    (``_assign_nearest_arrow``, VERDICT r10 task 2). Per-element SQL
+    ``aggregate`` folds are 10-100× off vectorized math, and the
+    one-time ×100 artifact build was ~850 s of HOF-dot time; the
+    kernel replays the exact IEEE op sequence of the pure-JVM
+    ``_assign_nearest_hof`` leg — the reference semantics the oracle
+    SQL mirrors — so its argmax is bit-equal, which the full oracle
+    matrix plus tests/test_assign_kernel_parity.py enforce.
     """
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ASSIGN_KERNEL", "arrow") == "hof":
-        return _assign_nearest_hof(d, cents)
     return _assign_nearest_arrow(d, cents)
 
 

@@ -346,7 +346,11 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: per-(type, minute) mean via one partial agg (decimal-exact,
     4 dp); the spine is ``sequence()`` per type (no global calendar
     cross join); bracketing observations come from two running
-    ``last/first(ignorenulls)`` window pairs over the SPINE, whose
+    ``last(ignorenulls)`` window pairs over the SPINE, one ascending
+    and one descending in ``m`` — both framed unboundedPreceding →
+    currentRow, so each is one streaming pass. A forward frame
+    (currentRow → unboundedFollowing) is re-evaluated per row and
+    grows with the square of a type's span. The spine's
     size is time-range-bounded (minutes in span × types), not
     corpus-bounded — at 100 TB the event count grows but the spine
     does not, and the per-type window state is one scalar. The
@@ -382,8 +386,8 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fwd = (
         Window.partitionBy("event_type")
-        .orderBy("m")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.col("m").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     m_obs = F.when(F.col("v").isNotNull(), F.col("m"))
     j = j.select(
@@ -392,8 +396,8 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         F.last("v", ignorenulls=True).over(back).alias("pv"),
         F.last(m_obs, ignorenulls=True).over(back).alias("pm"),
-        F.first("v", ignorenulls=True).over(fwd).alias("nv"),
-        F.first(m_obs, ignorenulls=True).over(fwd).alias("nm"),
+        F.last("v", ignorenulls=True).over(fwd).alias("nv"),
+        F.last(m_obs, ignorenulls=True).over(fwd).alias("nm"),
     )
     interp = (
         F.col("pv")

@@ -2,7 +2,7 @@
 
 The engine pins a few *runtime-settable* SQL confs so results are
 deterministic regardless of who built the session (driver harness, tests,
-bench):
+perfbench):
 
 - ``spark.sql.session.timeZone=UTC`` — timestamp→string parity
   (reference formats local-time strings, main.py:137; we pin UTC, see
@@ -21,27 +21,22 @@ import os
 from pyspark.sql import SparkSession
 
 #: Build-time (STATIC) confs — effective only when set on the builder
-#: (get_spark, bench.py, tools/opt_measure.py); attempting them on a
-#: live session raises, which apply_runtime_confs tolerates.
+#: (get_spark); attempting them on a live session raises, which
+#: apply_runtime_confs tolerates.
 STATIC_CONFS: dict[str, str] = {
-    # r11: a 162-query bench cycles ~1000 whole-stage-codegen units
-    # through the DEFAULT 100-entry compile cache, so by the time the
-    # timed loop reaches a query, the code its sf0.001 warmup compiled
-    # has been evicted and the timed run RE-COMPILES it — defeating the
-    # bench's stated steady-state methodology (measured: 4.6 s first
-    # noop write vs 1.0 s steady on one wide projection; the delta is
-    # pure janino). JVM-local JIT cache, scale-independent (a cluster
-    # pays compiles per executor the same way). r12 (VERDICT r11 item
-    # 6): clean steal-stamped A/B of one full 162-query sf0.1 pass —
-    # 100 entries: 177.4 s, 2000: 196.3 s, 20000: 160.1 s; against
-    # 20000 the per-query median is +0.075 s (100) / +0.14 s (2000)
-    # with the gaps concentrated in the plan-heaviest queries, i.e.
-    # the suite cycles more units than 2000 holds (warmup-SF AQE plans
-    # differ from the timed-SF plans, so each query contributes both).
-    # 20000 holds everything; env-tunable for re-A/B.
-    "spark.sql.codegen.cache.maxEntries": os.environ.get(
-        "SPARK_GRAFT_CODEGEN_CACHE", "20000"
-    ),
+    # r11: a long-lived session that runs many distinct queries (162
+    # in the measured workload) cycles ~1000 whole-stage-codegen units
+    # through the DEFAULT 100-entry compile cache, so a query's code is
+    # evicted before it runs again and is RE-COMPILED (measured: 4.6 s
+    # first noop write vs 1.0 s steady on one wide projection; the
+    # delta is pure janino). JVM-local JIT cache, scale-independent (a
+    # cluster pays compiles per executor the same way). r12: clean
+    # steal-stamped A/B of one full 162-query sf0.1 pass — 100 entries:
+    # 177.4 s, 2000: 196.3 s, 20000: 160.1 s; against 20000 the
+    # per-query median is +0.075 s (100) / +0.14 s (2000) with the gaps
+    # concentrated in the plan-heaviest queries, i.e. the pass cycles
+    # more units than 2000 holds. 20000 holds everything.
+    "spark.sql.codegen.cache.maxEntries": "20000",
 }
 
 #: Runtime-settable confs applied to ANY session handed to the engine.
@@ -99,7 +94,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falls back to
     ``local[*]``). ``spark.sql.shuffle.partitions`` defaults to the CPU
     count — at real cluster scale you would size this to data volume
-    (~128 MB per shuffle partition), not CPUs; bench.py documents this.
+    (~128 MB per shuffle partition), not CPUs.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:

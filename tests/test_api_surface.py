@@ -52,11 +52,18 @@ def test_age_exact_and_range(spark):
 
 
 def test_daily_prefix_levels_nest(spark):
-    day = _get(spark, "/daily", date="1995-01-01")
     month = _get(spark, "/daily", date="1995-01")
     year = _get(spark, "/daily", date="1995")
+    assert month  # the fixture has January 1995 rides
+    date = month[0]["start_time"][:10]  # a full Y-M-D present in the data
+    day = _get(spark, "/daily", date=date)
+    # the stored start_time carries a time of day; a full date must
+    # still match every ride on that day
+    assert day
+    assert {r["ride_id"] for r in day} == {
+        r["ride_id"] for r in month if r["start_time"].startswith(date)
+    }
     assert len(day) <= len(month) <= len(year)
-    assert all(r["start_time"].startswith("1995-01-01") for r in day)
 
 
 def test_daily_month_is_part_equality_not_prefix(spark):

@@ -1,9 +1,9 @@
 """Arrow assignment-kernel parity (VERDICT r10 task 2).
 
-``_assign_nearest`` dispatches to a vectorized numpy ``mapInPandas``
-kernel by default (the BUILD path — the ×100 semantic-artifact build
-was ~850 s of per-element HOF folds) with the pure-JVM HOF leg kept
-behind ``SPARK_GRAFT_ASSIGN_KERNEL=hof``. The kernel replays the HOF
+``_assign_nearest`` runs a vectorized numpy ``mapInPandas`` kernel
+(the BUILD path — the ×100 semantic-artifact build was ~850 s of
+per-element HOF folds); the pure-JVM HOF leg is kept as the reference
+these tests compare against. The kernel replays the HOF
 leg's exact IEEE op order (position-sequential left-fold accumulate,
 repr-based HALF_UP at .5 boundaries, packed-BIGINT argmax), so its
 assignment must be BIT-EQUAL, not approximately equal. These tests
@@ -122,14 +122,3 @@ def test_leg_plan_shapes(spark):
     assert "Join" not in arrow_plan and "HashAggregate" not in arrow_plan
     hof_plan = plan_text(_assign_nearest_hof(d, cents))
     assert "MapInPandas" not in hof_plan
-
-
-def test_dispatcher_env_override(spark, monkeypatch):
-    from deloton_solo_spark.operators.similarity import _assign_nearest
-
-    d = _fixture_vectors(spark)
-    cents = _trained_cents(d)
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_KERNEL", "hof")
-    assert "MapInPandas" not in plan_text(_assign_nearest(d, cents))
-    monkeypatch.delenv("SPARK_GRAFT_ASSIGN_KERNEL")
-    assert "MapInPandas" in plan_text(_assign_nearest(d, cents))

@@ -1,6 +1,6 @@
 """Prose-count drift gate (VERDICT r7 task 5): the numbers quoted in
-SURVEY.md §9 and BASELINE.md must equal what tools/counts.py derives
-from the registry and bench.HEADLINE — no hand-edited counts."""
+SURVEY.md §9 and README.md must equal what tools/counts.py derives
+from the registry — no hand-edited counts."""
 
 from __future__ import annotations
 

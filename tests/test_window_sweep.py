@@ -21,6 +21,8 @@ tables at the test scale factor.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -286,9 +288,25 @@ def _sweepable():
     )
 
 
+# A (currentRow, unboundedFollowing) frame is re-evaluated for every
+# row, so its cost grows with the square of the partition's rows. The
+# same result comes from the reversed order framed (unboundedPreceding,
+# currentRow), which streams. Full (unbounded, unbounded) frames are
+# computed once per partition and stay allowed.
+_FORWARD_FRAME_RE = re.compile(
+    r"specifiedwindowframe\((?:Row|Range)Frame, currentrow\$\(\), "
+    r"unboundedfollowing\$\(\)\)"
+)
+
+
 @pytest.mark.parametrize("name", _sweepable())
 def test_no_unpartitioned_window_over_unbounded_input(spark, name):
     plan = plan_text(all_queries()[name].fn(spark, SF_DIR))
+    assert not _FORWARD_FRAME_RE.search(plan), (
+        f"{name} plans a (currentRow, unboundedFollowing) window frame, "
+        "quadratic in the partition's rows — order descending and frame "
+        "(unboundedPreceding, currentRow) instead"
+    )
     specs = unpartitioned_window_specs(plan)
     if name in ALLOWED_GLOBAL_WINDOWS:
         # a stale allowlist entry would mask future regressions

@@ -7,7 +7,7 @@ prose artifacts quote (VERDICT r7 task 5: stop hand-editing counts).
 
 The checked claims:
 - SURVEY.md §9 header:  "<N> registered queries ... <M> with exact"
-- BASELINE.md headline: "**<H> queries**" (the bench HEADLINE size)
+- README.md:            "<N> registered queries, <M> with exact DuckDB"
 
 Exit 0 = docs match the registry; 1 = drift (the failing claim is
 printed). tests/test_counts_in_sync.py runs --check in the suite, so
@@ -27,7 +27,6 @@ sys.path.insert(0, str(ROOT))
 
 
 def registry_counts() -> dict:
-    from bench import HEADLINE
     from deloton_solo_spark.registry import all_queries
 
     qs = all_queries()
@@ -36,50 +35,10 @@ def registry_counts() -> dict:
         "registered": len(qs),
         "oracle_exact": oracle_backed,
         "rows_only": len(qs) - oracle_backed,
-        "bench_headline": len(HEADLINE),
         "rows_only_names": sorted(
             n for n, s in qs.items() if s.oracle is None
         ),
     }
-
-
-def _authoritative_bench_detail(root: Path) -> Path | None:
-    """The bench artifact the prose gate enforces against.
-
-    Builder-sealed runs only (VERDICT r10 task 1): the round driver's
-    end-of-round snapshot re-runs bench and overwrites
-    BENCH_detail_r{N}.json — three rounds in a row that left the tree's
-    prose gate red against numbers the builder never sealed. bench.py
-    now writes sealed runs to BENCH_detail_r{NN}_sealed.json too (a
-    name the driver never touches); this picks the highest-round sealed
-    artifact, falling back to plain files whose provenance says
-    sealed/explicit-round (pre-r11 sealed runs). Rounds compare as
-    parsed ints, not lexicographically (ADVICE r10: r100 would sort
-    before r99).
-    """
-    best: tuple[int, int, Path] | None = None  # (round, sealed_pref, path)
-    for p in root.glob("BENCH_detail_r*.json"):
-        m = re.search(r"_r(\d+)(_sealed)?\.json$", p.name)
-        if not m:
-            continue
-        n_round = int(m.group(1))
-        if m.group(2):
-            sealed_pref = 1
-        else:
-            try:
-                prov = json.loads(p.read_text()).get("provenance", {})
-            except (OSError, ValueError):
-                continue
-            explicit = not str(prov.get("round_env", "inferred:")).startswith(
-                "inferred:"
-            )
-            if not (prov.get("sealed") or explicit):
-                continue  # driver snapshot — never authoritative
-            sealed_pref = 0
-        key = (n_round, sealed_pref, p)
-        if best is None or key[:2] > best[:2]:
-            best = key
-    return best[2] if best else None
 
 
 def check(counts: dict, root: Path = ROOT) -> list[str]:
@@ -119,39 +78,6 @@ def check(counts: dict, root: Path = ROOT) -> list[str]:
                 f"README.md says {m.group(1)}/{m.group(2)}, registry has "
                 f"{counts['registered']}/{counts['oracle_exact']}"
             )
-
-    baseline = (root / "BASELINE.md").read_text()
-    hs = [int(x) for x in re.findall(r"\*\*(\d+) queries\*\*", baseline)]
-    if not hs:
-        errors.append("BASELINE.md '**<N> queries**' headline not found")
-    elif counts["bench_headline"] not in hs:
-        errors.append(
-            f"BASELINE.md headline says {hs} queries, bench HEADLINE "
-            f"has {counts['bench_headline']}"
-        )
-
-    # Committed-artifact drift gate (VERDICT r9 item 3, hardened r11):
-    # the newest BUILDER-SEALED BENCH_detail artifact is what BASELINE's
-    # prose row must quote (total + r1-anchor to 0.1 s). Driver
-    # snapshots (round_env "inferred:N", no sealed twin) are ignored —
-    # they legitimately differ and used to flip this gate red at the
-    # tree after every end-of-round commit.
-    authoritative = _authoritative_bench_detail(root)
-    if authoritative is not None:
-        detail = json.loads(authoritative.read_text())
-        for key, label in (
-            ("value", "total"),
-            ("value_r1_29q_subset", "r1 anchor"),
-        ):
-            v = detail.get(key)
-            if v is None:
-                continue
-            want = f"{v:.1f} s"
-            if want not in baseline:
-                errors.append(
-                    f"BASELINE.md never quotes the sealed "
-                    f"{authoritative.name} {label} ({want})"
-                )
     return errors
 
 

@@ -19,7 +19,8 @@ import argparse
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -33,17 +34,20 @@ def main() -> int:
     ap.add_argument(
         "--out-json",
         default=None,
-        help="write the per-query result matrix (the CORRECTNESS_full "
-        "artifact) to this path",
+        help="write the per-query result matrix to this path; it must "
+        "lie outside the repository (matrices are run output, not "
+        "committed files)",
     )
     ap.add_argument(
         "--only",
         default=None,
         help="comma-separated query names (or substrings) to gate — "
         "fast iteration on a few operators; the full run stays the "
-        "default and the committed artifact must come from a full run",
+        "default and --out-json needs a full run",
     )
     args = ap.parse_args()
+    if args.out_json and Path(args.out_json).resolve().is_relative_to(ROOT):
+        ap.error(f"--out-json {args.out_json} is inside the repository")
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -143,10 +147,10 @@ def main() -> int:
     if args.out_json:
         import json
 
-        # Artifact-integrity gate (round-7 verdict item 1): the committed
-        # CORRECTNESS_full matrix must cover EVERY registered query — a
-        # partial run (--only, or a registry that grew after the run
-        # started) must refuse to masquerade as the full artifact.
+        # Matrix-integrity gate (round-7 verdict item 1): the written
+        # matrix must cover EVERY registered query — a partial run
+        # (--only, or a registry that grew after the run started) must
+        # refuse to masquerade as the full matrix.
         from deloton_solo_spark.registry import all_queries
 
         n_reg = len(all_queries())

@@ -9,8 +9,7 @@ genuine-perturbation embeddings — generalized from a Python
 per-copy union loop to one crossJoin with a copies frame, since a
 1000-branch unionAll is planner-hostile) and runs each target op in
 a FRESH UI-enabled session so per-stage shuffle/spill bytes come out
-of the REST status API alongside the wall time (the
-tools/spill_metrics.py evidence, inline). This is the first probe
+of the REST status API alongside the wall time. This is the first probe
 scale where the NVMe-bandwidth residual should dominate measurably;
 the things to verify are (a) candidates stay LINEAR in corpus size
 and (b) spill stays 0 at the default heap.
@@ -57,8 +56,8 @@ QUERIES = [
 
 
 def _ui_session(app_name: str):
-    """Fresh UI-enabled session with the engine's runtime confs (the
-    spill_metrics.py builder) — per-op isolation, r11 probe policy."""
+    """Fresh UI-enabled session with the engine's runtime confs —
+    per-op isolation, r11 probe policy."""
     import os
 
     from pyspark.sql import SparkSession

@@ -336,8 +336,8 @@ def main() -> int:
     ok = True
     for name in queries:
         fn = specs[name].fn
-        # warm BOTH data sizes once before timing (steady-state policy,
-        # as in bench.py): plans can embed size-derived literals (LSH
+        # warm BOTH data sizes once before timing (steady-state
+        # policy): plans can embed size-derived literals (LSH
         # p/L) or take different AQE decisions at 10x, so the 10x plan
         # shape compiles fresh and must not be charged to the timed run
         fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
