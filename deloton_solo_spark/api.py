@@ -72,28 +72,38 @@ def _rides(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def serve(spark: SparkSession, sf_dir: str, route: str, **params) -> str:
     """Dispatch a reference route to its engine query; returns the JSON
-    records string the Flask handler would have returned."""
-    users, rides = _users(spark, sf_dir), _rides(spark, sf_dir)
+    records string the Flask handler would have returned. Each route
+    loads only the tables it reads: ``/`` none, ``/rides/gender`` both,
+    every other route one; an unknown route raises ``ValueError``
+    before any table is read."""
     if route == "/":
         return json.dumps({"status": "ok"})  # api.py:57-59
     if route == "/ride":
         return _records(
-            rides.filter(F.col("ride_id") == int(params["ride_id"]))
+            _rides(spark, sf_dir).filter(
+                F.col("ride_id") == int(params["ride_id"])
+            )
         )
     if route == "/riders":
-        return _records(users, limit=params.get("limit"))
+        return _records(_users(spark, sf_dir), limit=params.get("limit"))
     if route == "/rider":
         return _records(
-            users.filter(F.col("user_id") == int(params["user_id"]))
+            _users(spark, sf_dir).filter(
+                F.col("user_id") == int(params["user_id"])
+            )
         )
     if route == "/riders/gender":
-        return _records(users.filter(F.col("gender") == params["gender"]))
+        return _records(
+            _users(spark, sf_dir).filter(F.col("gender") == params["gender"])
+        )
     if route == "/rides":
-        return _records(rides, limit=params.get("limit"))
+        return _records(_rides(spark, sf_dir), limit=params.get("limit"))
     if route == "/rides/gender":
-        j = users.select("user_id", "gender", "age").join(rides, "user_id")
+        users = _users(spark, sf_dir).select("user_id", "gender", "age")
+        j = users.join(_rides(spark, sf_dir), "user_id")
         return _records(j.filter(F.col("gender") == params["gender"]))
     if route == "/riders2":
+        users = _users(spark, sf_dir)
         num = str(params["number"])
         if "-" in num:  # age range "lo-hi" (api.py:113-118)
             lo, hi = (int(x) for x in num.split("-"))
@@ -101,7 +111,9 @@ def serve(spark: SparkSession, sf_dir: str, route: str, **params) -> str:
         return _records(users.filter(F.col("age") == int(num)))
     if route == "/rider/rides":
         return _records(
-            rides.filter(F.col("user_id") == int(params["user_id"]))
+            _rides(spark, sf_dir).filter(
+                F.col("user_id") == int(params["user_id"])
+            )
         )
     if route == "/daily":
         # per-PART string equality on the split date (api.py:148-181,
@@ -119,13 +131,13 @@ def serve(spark: SparkSession, sf_dir: str, route: str, **params) -> str:
         for i, part in enumerate(given[:3]):
             stored = date_parts.getItem(i)
             cond = cond & (stored == part.zfill(widths[i]))
-        return _records(rides.filter(cond))
+        return _records(_rides(spark, sf_dir).filter(cond))
     if route == "/ride/del":
         keys = spark.createDataFrame(
             [(int(params["ride_id"]),)], "ride_id long"
         )
-        return _records(
-            delete_by_keys(rides, F.broadcast(keys), ["ride_id"]),
-            limit=params.get("limit"),
+        kept = delete_by_keys(
+            _rides(spark, sf_dir), F.broadcast(keys), ["ride_id"]
         )
+        return _records(kept, limit=params.get("limit"))
     raise ValueError(f"unknown route: {route}")

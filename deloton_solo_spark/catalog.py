@@ -10,6 +10,15 @@ sql_wrapper.py:41) with explicit, typed DataFrames. Covers:
 - S7 ``catalog_list_tables`` (test.ipynb cell-3) —
   ``spark.catalog.listTables`` over registered temp views.
 
+Schema memo: Spark runs one job per ``spark.read.parquet`` just to read
+a footer and infer the schema. ``load_table`` infers each single-file
+footer schema once per process and reads the file with that schema on
+every later call, which launches no job. The memo is keyed by what the
+file contains (its parquet footer schema, plus the session values of
+the confs that change inference), never by path or mtime, so a file
+rewritten in place with another schema is inferred again. It holds at
+most ``_SCHEMA_MEMO_SIZE`` schemas and evicts the oldest.
+
 Scale note: at 100 TB these would be partitioned/bucketed external
 tables; the loaders keep all reads as plain parquet scans so partition
 pruning and row-group filter pushdown apply unchanged.
@@ -17,8 +26,15 @@ pruning and row-group filter pushdown apply unchanged.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import apply_runtime_confs
 
@@ -91,8 +107,74 @@ def no_pushdown(cond: F.Column) -> F.Column:
     return cond & (F.monotonically_increasing_id() >= 0)
 
 
+#: Session confs that change the schema Spark infers from a parquet
+#: footer; their values are part of the schema memo's key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+#: Footer key-value entry holding the schema of a file Spark wrote;
+#: Spark's inference prefers it to the parquet schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: Most footer schemas the memo holds; beyond it the oldest is evicted.
+_SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _footer_key(spark: SparkSession, path: str) -> tuple | None:
+    """The schema memo's key for a single parquet file: its footer
+    schema as parquet stores it, Spark's own schema entry if the footer
+    has one, and the inference confs. ``None`` for a directory, a
+    non-local path or a footer pyarrow cannot read.
+
+    The parquet schema, not the Arrow schema ``pq.read_schema``
+    returns, because two footers can map to one Arrow type but to
+    different Spark types: INT96 and INT64 TIMESTAMP(NANOS) are both
+    Arrow ``timestamp[ns]``, while Spark reads them as timestamp and
+    bigint."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        meta = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    # str() of a ParquetSchema opens with a line naming the object's address
+    schema = str(meta.schema).split("\n", 1)[1]
+    spark_schema = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return schema, spark_schema, confs
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a single file's schema
+    only on a memo miss."""
+    key = _footer_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    with _SCHEMA_MEMO_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_MEMO_LOCK:
+        _SCHEMA_MEMO[key] = df.schema
+        if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+            _SCHEMA_MEMO.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table, normalizing types.
+
+    A single-file table's schema is inferred once per footer schema and
+    inference-conf values (at most ``_SCHEMA_MEMO_SIZE`` are kept, the
+    oldest evicted first); later calls read with the memoized schema,
+    which launches no Spark job. Each call still returns a new relation
+    with its own attribute IDs, so self-joins of two loads never alias
+    columns. A directory is inferred on every call.
 
     ``events.ts`` has shipped in two physical shapes across testdata
     generations, and this loader normalizes BOTH to a session-TZ
@@ -106,7 +188,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       the semantics match the nanos path bit-for-bit.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -5,11 +5,14 @@ route returns the JSON-records shape the Flask API produced
 
 from __future__ import annotations
 
+import itertools
 import json
+import shutil
 
 import pytest
 
 from deloton_solo_spark.api import serve
+from deloton_solo_spark.catalog import load_table
 
 from .conftest import SF_DIR
 
@@ -88,3 +91,49 @@ def test_delete_removes_exactly_one_key(spark):
 def test_full_scans_serialize(spark, route):
     recs = _get(spark, route, limit=10)
     assert len(recs) == 10
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """Run ``fn()`` under its own Spark job group; return how many jobs
+    it launched."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_reads_launch_no_schema_jobs(spark):
+    """An unchanged file's schema is inferred once, so a repeated load
+    launches no job and a point lookup runs exactly its collect."""
+    load_table(spark, SF_DIR, "orders")
+    serve(spark, SF_DIR, "/ride", ride_id=5)  # warm
+    assert _jobs(spark, lambda: load_table(spark, SF_DIR, "orders")) == 0
+    assert _jobs(spark, lambda: serve(spark, SF_DIR, "/ride", ride_id=7)) == 1
+    assert _jobs(spark, lambda: serve(spark, SF_DIR, "/")) == 0
+
+
+@pytest.mark.parametrize(
+    "table, requests",
+    [
+        ("customer", [("/rider", {"user_id": 7}), ("/riders", {"limit": 5})]),
+        ("orders", [("/ride", {"ride_id": 5}), ("/daily", {"date": "1995-01"})]),
+    ],
+)
+def test_routes_read_only_their_tables(spark, tmp_path, table, requests):
+    """A catalog holding one table answers every route that reads only
+    that table, with the same JSON as the full catalog."""
+    shutil.copy(f"{SF_DIR}/{table}.parquet", tmp_path / f"{table}.parquet")
+    for route, params in requests:
+        got = serve(spark, str(tmp_path), route, **params)
+        assert json.loads(got)
+        assert got == serve(spark, SF_DIR, route, **params)
+    with pytest.raises(ValueError, match="unknown route"):
+        serve(spark, str(tmp_path), "/nope")

@@ -16,6 +16,7 @@ errors. These tests pin the two defenses:
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 
 import pyarrow as pa
@@ -102,3 +103,52 @@ def test_load_table_normalizes_date_typed_columns(spark, tmp_path):
     # midnight wall-clock values — the date survives exactly
     row = df.orderBy("o_orderkey").select("o_orderdate").first()
     assert row[0].hour == 0 and row[0].minute == 0
+
+
+@pytest.mark.parametrize(
+    "second",
+    # INT96 and INT64 nanos footers share one Arrow type, timestamp[ns]:
+    # a memo keyed by the Arrow schema would collide on them
+    [pa.timestamp("us"), "int96"],
+    ids=["nanos_then_ntz_us", "nanos_then_int96"],
+)
+def test_schema_memo_is_keyed_by_content(spark, tmp_path, second):
+    """A file rewritten at the same path with another ``ts`` type is
+    inferred again: a memo keyed by path or mtime would read the second
+    file with the first file's bigint ``ts``."""
+    path = tmp_path / "events.parquet"
+    for ts_type in (pa.timestamp("ns"), second):
+        if ts_type == "int96":
+            _write_events(path, pa.timestamp("ns"))
+            pq.write_table(
+                pq.read_table(str(path)), str(path),
+                use_deprecated_int96_timestamps=True,
+            )
+        else:
+            _write_events(path, ts_type)
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = [r.ts for r in df.orderBy("event_id").select("ts").collect()]
+        assert got == [r[1] for r in _ROWS]
+
+
+def test_schema_memo_sees_same_size_rename(spark, tmp_path):
+    """A column renamed to a name of the same length, with the old
+    mtime kept (as a filesystem with coarse mtimes leaves a quick
+    rewrite): size and mtime are unchanged, and the memo must still
+    return the new name."""
+    path = tmp_path / "events.parquet"
+    _write_events(path, pa.timestamp("us"))
+    before = path.stat()
+    assert "props" in load_table(spark, str(tmp_path), "events").columns
+    table = pq.read_table(str(path))
+    renamed = ["propz" if c == "props" else c for c in table.column_names]
+    pq.write_table(table.rename_columns(renamed), str(path))
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = path.stat()
+    assert (after.st_size, after.st_mtime_ns) == (
+        before.st_size, before.st_mtime_ns,
+    )
+    df = load_table(spark, str(tmp_path), "events")
+    assert "propz" in df.columns and "props" not in df.columns
+    assert df.select("propz").collect()[0][0] == "{}"
