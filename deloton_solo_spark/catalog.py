@@ -16,8 +16,8 @@ footer schema once per process and reads the file with that schema on
 every later call, which launches no job. The memo is keyed by what the
 file contains (its parquet footer schema, plus the session values of
 the confs that change inference), never by path or mtime, so a file
-rewritten in place with another schema is inferred again. It holds at
-most ``_SCHEMA_MEMO_SIZE`` schemas and evicts the oldest.
+rewritten in place with another schema is inferred again. It is a
+``memo.Memo`` of 256 schemas, the least recently used evicted first.
 
 Scale note: at 100 TB these would be partitioned/bucketed external
 tables; the loaders keep all reads as plain parquet scans so partition
@@ -27,15 +27,13 @@ pruning and row-group filter pushdown apply unchanged.
 from __future__ import annotations
 
 import os
-import threading
-from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
+from .memo import Memo
 from .session import apply_runtime_confs
 
 #: Tables the driver ships at /root/testdata/sf*/ (TESTDATA.md).
@@ -51,9 +49,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: Small dimension tables — always broadcast-joinable.
-DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -118,10 +113,8 @@ _INFERENCE_CONFS = (
 #: Footer key-value entry holding the schema of a file Spark wrote;
 #: Spark's inference prefers it to the parquet schema.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-#: Most footer schemas the memo holds; beyond it the oldest is evicted.
-_SCHEMA_MEMO_SIZE = 256
-_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
-_SCHEMA_MEMO_LOCK = threading.Lock()
+#: Footer schemas already inferred, keyed by ``_footer_key``.
+_SCHEMA_MEMO = Memo(256)
 
 
 def _footer_key(spark: SparkSession, path: str) -> tuple | None:
@@ -154,24 +147,18 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     key = _footer_key(spark, path)
     if key is None:
         return spark.read.parquet(path)
-    with _SCHEMA_MEMO_LOCK:
-        schema = _SCHEMA_MEMO.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    with _SCHEMA_MEMO_LOCK:
-        _SCHEMA_MEMO[key] = df.schema
-        if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
-            _SCHEMA_MEMO.popitem(last=False)
-    return df
+    schema = _SCHEMA_MEMO.get_or_put(
+        key, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table, normalizing types.
 
     A single-file table's schema is inferred once per footer schema and
-    inference-conf values (at most ``_SCHEMA_MEMO_SIZE`` are kept, the
-    oldest evicted first); later calls read with the memoized schema,
+    inference-conf values (at most 256 are kept, the least recently
+    used evicted first); later calls read with the memoized schema,
     which launches no Spark job. Each call still returns a new relation
     with its own attribute IDs, so self-joins of two loads never alias
     columns. A directory is inferred on every call.

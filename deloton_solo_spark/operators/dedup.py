@@ -20,13 +20,17 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import random
+import shutil
+from hashlib import md5
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, no_pushdown, spread_scan
 from ..functions.vectors import as_double, cosine, cosine_oracle_sql
+from ..memo import ARTIFACTS, input_identity
 from ..registry import query
+from ..session import scratch_dir
 
 JACCARD_THRESHOLD = 0.6
 COSINE_THRESHOLD = 0.30
@@ -1636,23 +1640,12 @@ def incremental_minhash_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     key); the screen is one hash-only equi-join on (band, bkey) + a
     per-batch-doc count — per-ingest cost ∝ batch size and collision
     count, never corpus size."""
-    from ..session import scratch_dir
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("source") == "src0")
-    batch = docs.filter(F.col("source") != "src0")
-
-    idx_path = scratch_dir("incr_mh_index")
-    _mh_bands_of_sig(_mh_sig(corpus)).write.mode("overwrite").parquet(
-        idx_path
+    batch = load_table(spark, sf_dir, "documents").filter(
+        F.col("source") != "src0"
     )
-    index = spark.read.parquet(idx_path).withColumnRenamed(
-        "doc_id", "corpus_doc"
-    )
-
     cand = (
         _mh_bands_of_sig(_mh_sig(batch))
-        .join(index, ["band", "bkey"])
+        .join(_corpus_band_index(spark, sf_dir), ["band", "bkey"])
         .groupBy("doc_id")
         .agg(
             F.countDistinct("corpus_doc")
@@ -1670,6 +1663,21 @@ def incremental_minhash_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             (n > 0).alias("is_near_dup_of_corpus"),
         )
     )
+
+
+def _corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(corpus_doc, band, bkey)``: the standing corpus's (src0)
+    persisted MinHash band index, shared by the batch and streaming
+    near-dup screens."""
+    corpus = load_table(spark, sf_dir, "documents").filter(
+        F.col("source") == "src0"
+    )
+    return _persisted_doc_artifact(
+        spark,
+        sf_dir,
+        "incr_mh_index",
+        lambda: _mh_bands_of_sig(_mh_sig(corpus)),
+    ).withColumnRenamed("doc_id", "corpus_doc")
 
 
 # X107 — exact-substring dedup REWRITE (cut the duplicated spans) --------
@@ -1753,11 +1761,9 @@ def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id hash join — statistics-driven either way. (This is also
     # the operational artifact: a deployment persists the cut plan
     # before rewriting in place.)
-    from ..session import scratch_dir
-
-    mask_path = scratch_dir("substr_rewrite_mask")
-    mask.write.mode("overwrite").parquet(mask_path)
-    mask = spark.read.parquet(mask_path)
+    mask = _persisted_doc_artifact(
+        spark, sf_dir, "substr_rewrite_mask", lambda: mask
+    )
     docs = load_table(spark, sf_dir, "documents")
     # join RAW docs first, tokenize AFTER (the chunk_dedup_rewrite
     # discipline): the reconstruction is then a narrow array program
@@ -2494,22 +2500,21 @@ def incremental_substring_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus size; every exchange carries (ids, int offsets,
     16-byte hashes); the islands window partitions by (batch doc,
     corpus doc, diagonal) — candidate-bounded."""
-    from ..session import scratch_dir
-
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("source") == "src0")
     batch = docs.filter(F.col("source") != "src0")
 
-    idx_path = scratch_dir("incr_sub_index")
     # r11: both gram builds are spread_scan-gated — each md5-gram
     # projection ran as a single task off the one-file local scan
     # (the corpus index build + batch grams dominated the measured
     # 2.5-3.2 s); no-op at deploy scale (catalog.spread_scan).
-    _gram_frame(spread_scan(corpus, "doc_id")).write.mode(
-        "overwrite"
-    ).parquet(idx_path)
     cg = (
-        spark.read.parquet(idx_path)
+        _persisted_doc_artifact(
+            spark,
+            sf_dir,
+            "incr_sub_index",
+            lambda: _gram_frame(spread_scan(corpus, "doc_id")),
+        )
         .withColumnRenamed("doc_id", "cdoc")
         .withColumnRenamed("i", "ic")
     )
@@ -2926,64 +2931,31 @@ def _winnow_fp_frame(
     return fps.join(hot, "fp16", "left_anti")
 
 
-#: Session-scoped persisted-artifact memo (the similarity-side
-#: ``_artifact_memo`` discipline, r8, with PARQUET persistence instead
-#: of a heap checkpoint): keyed by (applicationId, tag, documents
-#: input files) so an artifact is reused only within the session that
-#: wrote it and only for the same corpus. Values are (DataFrame,
-#: parquet path) so dead-session eviction can reclaim the directory
-#: too (ADVICE r10).
-_DOC_ARTIFACT_MEMO: dict[tuple, tuple[DataFrame, str]] = {}
-
-
 def _persisted_doc_artifact(
     spark: SparkSession, sf_dir: str, tag: str, build
 ) -> DataFrame:
     """Build-once / read-everywhere parquet artifact derived from the
-    documents table: ``build()`` runs once per (session, tag, corpus),
-    lands in a scratch parquet directory, and every consumer scans the
-    DISK-backed columnar table — no raw-text heap checkpoints (the
-    ×100 probe's OOM class), and at deploy scale this IS the written
-    index a pipeline hands between jobs."""
-    docs = load_table(spark, sf_dir, "documents")
-    key = (
-        spark.sparkContext.applicationId,
-        tag,
-        tuple(sorted(docs.inputFiles())),
+    documents table: ``build()`` runs once per ``memo.ARTIFACTS`` key
+    (session, tag, documents content), lands in a scratch parquet
+    directory named by the key's digest (no other session or corpus
+    version overwrites files a live frame scans; dropping the entry
+    deletes it), and every consumer scans the DISK-backed columnar
+    table — no raw-text heap checkpoints (the ×100 probe's OOM class),
+    and at deploy scale this IS the written index a pipeline hands
+    between jobs."""
+    app = spark.sparkContext.applicationId
+    key = (app, tag, input_identity(load_table(spark, sf_dir, "documents")))
+    path = scratch_dir(f"{tag}_{md5(repr(key).encode()).hexdigest()[:16]}")
+
+    def persist() -> DataFrame:
+        build().write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    if key[2] is None:
+        return persist()
+    return ARTIFACTS.get_or_put(
+        key, persist, app, lambda: shutil.rmtree(path, ignore_errors=True)
     )
-    hit = _DOC_ARTIFACT_MEMO.get(key)
-    if hit is not None:
-        return hit[0]
-    from hashlib import md5 as _md5
-
-    from ..session import scratch_dir
-
-    # On miss, evict entries owned by DEAD SparkSessions (ADVICE r10:
-    # a long-lived process cycling many sessions otherwise accumulates
-    # DataFrame refs and per-session parquet dirs for the process
-    # lifetime). PySpark runs one SparkContext per process, so any
-    # memoized applicationId other than the caller's belongs to a
-    # stopped session — its frames are unscannable and its directory
-    # unreachable; reclaim both.
-    import shutil as _shutil
-
-    for k in [k for k in _DOC_ARTIFACT_MEMO if k[0] != key[0]]:
-        _, dead_path = _DOC_ARTIFACT_MEMO.pop(k)
-        _shutil.rmtree(dead_path, ignore_errors=True)
-
-    # One directory per (SESSION, corpus): the corpus fingerprint keeps
-    # sf0.001 / sf0.01 fixtures apart, and the applicationId component
-    # keeps two SparkSessions in the same process apart — without it a
-    # second session's overwrite could delete parquet files a still-live
-    # first session's cached DataFrame will scan (scratch_dir's
-    # no-clobber guarantee is per-PROCESS, not per-session; ADVICE r9).
-    fp = _md5("\n".join(key[2]).encode()).hexdigest()[:12]
-    app = key[0].replace("-", "")[-12:]
-    path = scratch_dir(f"{tag}_{app}_{fp}")
-    build().write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    _DOC_ARTIFACT_MEMO[key] = (out, path)
-    return out
 
 
 def _winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1219,21 +1219,14 @@ def streaming_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size; the index is the only corpus-derived input and at
     deploy it refreshes by snapshot swap (streaming_static_enrich's
     discipline)."""
-    from .dedup import _mh_band_structs, _mh_bands_of_sig, _mh_sig
+    from .dedup import _corpus_band_index, _mh_band_structs
 
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("source") == "src0")
-    batch = docs.filter(F.col("source") != "src0").select("doc_id", "text")
-
-    from ..session import scratch_dir
-
-    idx_path = scratch_dir("stream_mh_index")
-    _mh_bands_of_sig(_mh_sig(corpus)).write.mode("overwrite").parquet(
-        idx_path
+    batch = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("source") != "src0")
+        .select("doc_id", "text")
     )
-    index = spark.read.parquet(idx_path).withColumnRenamed(
-        "doc_id", "corpus_doc"
-    )
+    index = _corpus_band_index(spark, sf_dir)
 
     src, out = _scratch("ndscreen_src_"), _scratch("ndscreen_out_")
     ckpt = _scratch("ndscreen_ckpt_")

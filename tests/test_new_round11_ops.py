@@ -62,15 +62,23 @@ def test_doc_artifact_memo_evicts_dead_sessions(spark, tmp_path):
     """ADVICE r10: _persisted_doc_artifact must evict memo entries (and
     their scratch parquet dirs) owned by stopped SparkSessions on the
     next miss, instead of accumulating them for the process lifetime."""
+    import shutil
+
     import pyspark.sql.functions as F
 
+    from deloton_solo_spark.memo import ARTIFACTS
     from deloton_solo_spark.operators import dedup as dd
 
     dead_dir = tmp_path / "dead_artifact"
     dead_dir.mkdir()
     (dead_dir / "part-0.parquet").write_bytes(b"x")
     dead_key = ("app-dead-123", "sometag", ("f1.parquet",))
-    dd._DOC_ARTIFACT_MEMO[dead_key] = (None, str(dead_dir))
+    ARTIFACTS.put(
+        dead_key,
+        None,
+        owner="app-dead-123",
+        cleanup=lambda: shutil.rmtree(dead_dir, ignore_errors=True),
+    )
 
     out = dd._persisted_doc_artifact(
         spark,
@@ -79,7 +87,7 @@ def test_doc_artifact_memo_evicts_dead_sessions(spark, tmp_path):
         lambda: spark.range(3).select(F.col("id").alias("doc_id")),
     )
     assert out.count() == 3
-    assert dead_key not in dd._DOC_ARTIFACT_MEMO
+    assert dead_key not in ARTIFACTS.keys()
     assert not dead_dir.exists()
     # the live entry survives a subsequent hit and returns the frame
     out2 = dd._persisted_doc_artifact(

@@ -596,7 +596,7 @@ def test_winnowing_consumers_read_persisted_index(spark):
     # each plan scans the index exactly once per join leg (pairs:
     # self-join = one FileScan node reused; rewrite: fingerprint legs
     # read the index, documents parquet is scanned for text only).
-    from deloton_solo_spark.operators import dedup as dd
+    from deloton_solo_spark.memo import ARTIFACTS
 
     pairs = plan_text(spark, "winnowing_fingerprint_pairs")
     assert "winnow_fp_index" in pairs, "pairs: not reading the index"
@@ -609,7 +609,7 @@ def test_winnowing_consumers_read_persisted_index(spark):
     # building the rewrite must not add a second index for this corpus
     # (same session + same documents files → same persisted index).
     def memo_tags():
-        return sorted(k[1] for k in dd._DOC_ARTIFACT_MEMO)
+        return sorted(k[1] for k in ARTIFACTS.keys())
 
     tags_before = memo_tags()
     assert "winnow_fp_index" in tags_before, "pairs did not register the index"
@@ -760,13 +760,13 @@ def test_shingle_family_reads_shared_index(spark):
     # r9: the corpus shingle consumers read ONE persisted parquet index
     # — building two of them must not register a second artifact for
     # the same corpus, and the second plan must scan the index path
-    from deloton_solo_spark.operators import dedup as dd
+    from deloton_solo_spark.memo import ARTIFACTS
 
     p1 = plan_text(spark, "near_dedup_ngram_jaccard")
-    n_after_first = len(dd._DOC_ARTIFACT_MEMO)
+    n_after_first = len(ARTIFACTS)
     p2 = plan_text(spark, "contamination_check")
     assert "shingle_index" in p1 and "shingle_index" in p2
-    assert len(dd._DOC_ARTIFACT_MEMO) == n_after_first, "index rebuilt"
+    assert len(ARTIFACTS) == n_after_first, "index rebuilt"
 
 
 def test_prefix_filter_verify_never_sorts_arrays(spark):
