@@ -25,6 +25,18 @@ Route → semantics (site cites the reference):
 Table mapping on the driver testdata: users ≙ customer
 (c_custkey/c_mktsegment/c_acctbal), rides ≙ orders (o_orderkey/
 o_custkey/o_orderdate) — same shapes the relational operators use.
+
+Resolver: the users and rides route frames are resolved once per
+session, file content (``memo.input_identity``: path, size,
+``mtime_ns``, ``ctime_ns``, footer digest), session time zone and
+broadcast threshold, and kept in ``_FRAMES``, a ``memo.Memo`` of 8
+frames owned by the SparkContext's applicationId. A frame whose Spark
+size estimate is within ``spark.sql.autoBroadcastJoinThreshold`` is
+held as a driver-local relation, so filters, projections, limits and
+the JSON serialization over it fold at optimization time and a point
+lookup runs no Spark job; a larger one (or any, with the threshold at
+-1) stays a parquet relation. The memory bound is entries × threshold.
+Joins still run Spark jobs.
 """
 
 from __future__ import annotations
@@ -35,7 +47,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .memo import Memo, input_identity
 from .operators.sinks import delete_by_keys
+from .session import apply_runtime_confs
+
+#: Resolved route frames, keyed by ``_resolved``; at most 8 × the
+#: broadcast threshold of rows are held locally.
+_FRAMES = Memo(8)
+
+#: Session confs a resolved frame depends on: the zone of its
+#: timestamp-to-string casts and the size bound of a local leaf.
+_FRAME_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.autoBroadcastJoinThreshold",
+)
 
 
 def _records(df: DataFrame, limit: int | None = None) -> str:
@@ -44,29 +69,77 @@ def _records(df: DataFrame, limit: int | None = None) -> str:
     serialization boundary (the rows leave Spark here), so the
     ``collect()`` is the declared edge, not a distributed-op smell.
     ``limit`` guards driver memory for full-table routes (the
-    reference materializes everything; at scale you paginate)."""
+    reference materializes everything; at scale you paginate).
+
+    Each row is serialized by ``to_json(struct(*cols))``, which gives
+    the same bytes as ``df.toJSON()``; unlike ``toJSON``'s RDD path it
+    stays a Catalyst expression, so over a local relation the whole
+    query folds at optimization time and the collect runs no job."""
     if limit is not None:
         df = df.limit(limit)
-    rows = df.toJSON().collect()
-    return "[" + ",".join(rows) + "]"
+    rows = df.select(F.to_json(F.struct(*df.columns))).collect()
+    return "[" + ",".join(r[0] for r in rows) + "]"
+
+
+def _localized(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` collected once into a driver-local relation if Spark's
+    size estimate of it is within the broadcast threshold; ``df``
+    itself otherwise, or when the threshold is negative. The rows go
+    JVM-side only: they never cross into Python."""
+    jspark = spark._jsparkSession
+    bound = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if bound < 0 or size > bound:
+        return df
+    rows = df._jdf.collectAsList()
+    return DataFrame(jspark.createDataFrame(rows, df._jdf.schema()), spark)
+
+
+def _resolved(spark: SparkSession, sf_dir: str, name: str, project) -> DataFrame:
+    """``project(load_table(spark, sf_dir, name))`` from ``_FRAMES``,
+    built through ``_localized`` on a miss. The key holds the session,
+    since a frame runs in the session that built it, the file's
+    ``input_identity`` and the ``_FRAME_CONFS`` values. A table that is
+    not a single local parquet file is loaded on every call."""
+    path = f"{sf_dir}/{name}.parquet"
+    ident = input_identity([path])
+    if ident is None:
+        return project(load_table(spark, sf_dir, name))
+    confs = tuple(spark.conf.get(k) for k in _FRAME_CONFS)
+    key = (spark._jsparkSession.sessionUUID(), ident, confs)
+    return _FRAMES.get_or_put(
+        key,
+        lambda: _localized(spark, project(load_table(spark, sf_dir, name))),
+        spark.sparkContext.applicationId,
+    )
 
 
 def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_name").alias("name"),
-        F.col("c_mktsegment").alias("gender"),  # categorical stand-in
-        (F.col("c_custkey") % 60 + 18).alias("age"),  # deterministic age
-        F.col("c_acctbal").alias("acctbal"),
+    return _resolved(
+        spark,
+        sf_dir,
+        "customer",
+        lambda t: t.select(
+            F.col("c_custkey").alias("user_id"),
+            F.col("c_name").alias("name"),
+            F.col("c_mktsegment").alias("gender"),  # categorical stand-in
+            (F.col("c_custkey") % 60 + 18).alias("age"),  # deterministic age
+            F.col("c_acctbal").alias("acctbal"),
+        ),
     )
 
 
 def _rides(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("ride_id"),
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").cast("string").alias("start_time"),
-        F.col("o_totalprice").alias("duration"),
+    return _resolved(
+        spark,
+        sf_dir,
+        "orders",
+        lambda t: t.select(
+            F.col("o_orderkey").alias("ride_id"),
+            F.col("o_custkey").alias("user_id"),
+            F.col("o_orderdate").cast("string").alias("start_time"),
+            F.col("o_totalprice").alias("duration"),
+        ),
     )
 
 
@@ -75,9 +148,11 @@ def serve(spark: SparkSession, sf_dir: str, route: str, **params) -> str:
     records string the Flask handler would have returned. Each route
     loads only the tables it reads: ``/`` none, ``/rides/gender`` both,
     every other route one; an unknown route raises ``ValueError``
-    before any table is read."""
+    before any table is read. Every route but ``/`` first pins the
+    engine's runtime confs, as ``load_table`` does."""
     if route == "/":
         return json.dumps({"status": "ok"})  # api.py:57-59
+    apply_runtime_confs(spark)
     if route == "/ride":
         return _records(
             _rides(spark, sf_dir).filter(

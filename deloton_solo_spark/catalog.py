@@ -19,6 +19,13 @@ the confs that change inference), never by path or mtime, so a file
 rewritten in place with another schema is inferred again. It is a
 ``memo.Memo`` of 256 schemas, the least recently used evicted first.
 
+Resolved frames: ``load_table`` returns a new relation on every call,
+so self-joins of two loads never alias columns. Frames are reused only
+by ``api``'s resolver, which calls ``load_table`` once per session,
+file content (``memo.input_identity``) and time zone and broadcast
+threshold, and holds a broadcast-sized route frame as a driver-local
+relation (8 frames at most, so at most 8 × the threshold).
+
 Scale note: at 100 TB these would be partitioned/bucketed external
 tables; the loaders keep all reads as plain parquet scans so partition
 pruning and row-group filter pushdown apply unchanged.

@@ -1,8 +1,10 @@
 """The engine's one memo mechanism, :class:`Memo`. ``catalog`` keeps its
-footer schemas in one; :data:`ARTIFACTS` holds the corpus artifacts
-(``similarity``'s checkpoints, ``dedup``'s parquet indexes and masks),
-keyed by :func:`input_identity` so a corpus rewritten in place at the
-same path is rebuilt, never served stale.
+footer schemas in one; ``api`` keeps its resolved route frames in one
+(8 frames, each within the broadcast threshold when held locally);
+:data:`ARTIFACTS` holds the corpus artifacts (``similarity``'s
+checkpoints, ``dedup``'s parquet indexes and masks). The last two are
+keyed by :func:`input_identity` of their files, so a table or corpus
+rewritten in place at the same path is rebuilt, never served stale.
 """
 
 from __future__ import annotations
@@ -66,18 +68,23 @@ class Memo:
 ARTIFACTS = Memo(128)
 
 
-def input_identity(df) -> tuple | None:
-    """``(uri, size, mtime_ns, footer digest)`` of each of ``df``'s
-    input files; a parquet footer's length is in the file's last 8
-    bytes. ``None`` if ``df`` reads no file or an input is not a
-    readable local parquet file: the caller builds without memoizing."""
+def input_identity(paths) -> tuple | None:
+    """``(path, size, mtime_ns, ctime_ns, footer digest)`` of each file
+    in ``paths`` (local paths or ``file:`` URIs, such as a frame's
+    ``inputFiles()``); a parquet footer's length is in the file's last
+    8 bytes. A rewrite can keep the size and the footer (same row
+    groups and statistics) and reset the mtime with ``os.utime``, but
+    it cannot reset the ctime. ``None`` if ``paths`` is empty or a path
+    is not a readable local parquet file: the caller builds without
+    memoizing."""
     ident = []
-    for uri in sorted(df.inputFiles()):
+    for uri in sorted(paths):
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
+        local = unquote(parsed.path) if parsed.scheme else uri
         try:
-            with open(unquote(parsed.path), "rb") as f:
+            with open(local, "rb") as f:
                 st = os.fstat(f.fileno())
                 f.seek(-8, os.SEEK_END)
                 tail = f.read(8)
@@ -87,5 +94,5 @@ def input_identity(df) -> tuple | None:
                 footer = hashlib.blake2b(f.read(), digest_size=16).digest()
         except (OSError, ValueError):
             return None
-        ident.append((uri, st.st_size, st.st_mtime_ns, footer))
+        ident.append((uri, st.st_size, st.st_mtime_ns, st.st_ctime_ns, footer))
     return tuple(ident) or None

@@ -2944,7 +2944,8 @@ def _persisted_doc_artifact(
     and at deploy scale this IS the written index a pipeline hands
     between jobs."""
     app = spark.sparkContext.applicationId
-    key = (app, tag, input_identity(load_table(spark, sf_dir, "documents")))
+    docs = load_table(spark, sf_dir, "documents")
+    key = (app, tag, input_identity(docs.inputFiles()))
     path = scratch_dir(f"{tag}_{md5(repr(key).encode()).hexdigest()[:16]}")
 
     def persist() -> DataFrame:

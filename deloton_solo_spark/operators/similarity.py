@@ -563,12 +563,12 @@ def _artifact_memo(d: DataFrame, tag: str, build) -> DataFrame:
     """Memoize ``build()`` (a localCheckpointed artifact derived from
     frame ``d``: "train once, persist, share across assignment / IVF
     probing / cell profiling") in ``memo.ARTIFACTS`` per (session, tag,
-    analyzed plan, ``input_identity(d)``). Expression ids (#123) and
-    lambda-variable suffixes (x_7) are per-construction counters and
-    are normalized out of the key."""
+    analyzed plan, ``input_identity(d.inputFiles())``). Expression ids
+    (#123) and lambda-variable suffixes (x_7) are per-construction
+    counters and are normalized out of the key."""
     import re as _re
 
-    ident = input_identity(d)
+    ident = input_identity(d.inputFiles())
     if ident is None:
         return build()
     app_id = d.sparkSession.sparkContext.applicationId

@@ -14,6 +14,7 @@ import shutil
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import TABLES, load_table, register_views
 from ..registry import query
@@ -27,27 +28,26 @@ def idempotent_append(df: DataFrame, path: str, keys: list[str]) -> None:
     equivalent of INSERT … ON CONFLICT DO NOTHING (sql_wrapper.py:44-46).
 
     Implementation: left-anti join the incoming batch against the
-    existing keys, then append. At scale the existing-side read prunes
-    to the key columns only; with Delta available this becomes
+    existing keys, then append. The existing side is read with the
+    batch's own key schema, so it prunes to the key columns and runs no
+    schema-inference job; with Delta available this becomes
     ``MERGE WHEN NOT MATCHED THEN INSERT`` inside ``foreachBatch``
     (SURVEY.md §4 upsert row).
     """
     spark = df.sparkSession
     batch = df.dropDuplicates(keys)
+    key_schema = StructType([df.schema[k] for k in keys])
     try:
-        existing = spark.read.parquet(path).select(*keys)
+        existing = spark.read.schema(key_schema).parquet(path)
     except AnalysisException as exc:
-        # Only a genuinely-absent sink counts as "first write"
-        # (PATH_NOT_FOUND, or a created-but-empty dir from an empty
-        # first micro-batch → UNABLE_TO_INFER_SCHEMA). Any OTHER read
-        # failure (corrupt footer, permissions, transient IO) must
-        # propagate — degrading it to a plain append would silently
-        # break the exactly-once guarantee with duplicate rows.
+        # Only a genuinely-absent sink counts as "first write"; an
+        # empty directory reads as no keys. Any OTHER read failure
+        # (corrupt footer, permissions, transient IO) must propagate —
+        # degrading it to a plain append would silently break the
+        # exactly-once guarantee with duplicate rows. With a known
+        # schema a corrupt footer surfaces when the join reads it.
         cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        first_write = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        if cond not in first_write and not any(
-            c in str(exc) for c in first_write
-        ):
+        if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(exc):
             raise
         existing = None
     if existing is not None:

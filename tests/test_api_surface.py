@@ -7,10 +7,16 @@ from __future__ import annotations
 
 import itertools
 import json
+import os
 import shutil
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from deloton_solo_spark import api
 from deloton_solo_spark.api import serve
 from deloton_solo_spark.catalog import load_table
 
@@ -112,11 +118,12 @@ def _jobs(spark, fn):
 
 def test_repeated_reads_launch_no_schema_jobs(spark):
     """An unchanged file's schema is inferred once, so a repeated load
-    launches no job and a point lookup runs exactly its collect."""
+    launches no job, and a point lookup over its resolved local route
+    frame launches none either."""
     load_table(spark, SF_DIR, "orders")
     serve(spark, SF_DIR, "/ride", ride_id=5)  # warm
     assert _jobs(spark, lambda: load_table(spark, SF_DIR, "orders")) == 0
-    assert _jobs(spark, lambda: serve(spark, SF_DIR, "/ride", ride_id=7)) == 1
+    assert _jobs(spark, lambda: serve(spark, SF_DIR, "/ride", ride_id=7)) == 0
     assert _jobs(spark, lambda: serve(spark, SF_DIR, "/")) == 0
 
 
@@ -137,3 +144,122 @@ def test_routes_read_only_their_tables(spark, tmp_path, table, requests):
         assert got == serve(spark, SF_DIR, route, **params)
     with pytest.raises(ValueError, match="unknown route"):
         serve(spark, str(tmp_path), "/nope")
+
+
+#: One request per route shape, with parameters that match rows at
+#: sf0.001 (the byte-identity test also requires a non-empty answer).
+_REQUESTS = [
+    ("/ride", {"ride_id": 5}),
+    ("/rider", {"user_id": 7}),
+    ("/rider/rides", {"user_id": 7}),
+    ("/riders", {"limit": 5}),
+    ("/riders/gender", {"gender": "BUILDING"}),
+    ("/riders2", {"number": "30"}),
+    ("/riders2", {"number": "30-35"}),
+    ("/daily", {"date": "1995"}),
+    ("/daily", {"date": "1995-01"}),
+    ("/daily", {"date": "1995-01-20"}),
+    ("/rides/gender", {"gender": "BUILDING"}),
+]
+
+
+def _fresh_parquet_serve(spark, route, params):
+    """``serve`` as it answered before the resolver: each route frame
+    is built over a fresh ``load_table`` relation and serialized with
+    ``toJSON``."""
+
+    def resolved(spark, sf_dir, name, project):
+        return project(load_table(spark, sf_dir, name))
+
+    def records(df, limit=None):
+        if limit is not None:
+            df = df.limit(limit)
+        return "[" + ",".join(df.toJSON().collect()) + "]"
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(api, "_resolved", resolved)
+        mp.setattr(api, "_records", records)
+        return serve(spark, SF_DIR, route, **params)
+
+
+@pytest.mark.parametrize(
+    "route, params", _REQUESTS, ids=[f"{r}{p}" for r, p in _REQUESTS]
+)
+def test_routes_match_fresh_parquet_tojson_bytes(spark, route, params):
+    """Every route's JSON is byte-identical to ``toJSON`` over a fresh
+    parquet frame, whichever leaf the resolver holds."""
+    got = serve(spark, SF_DIR, route, **params)
+    assert json.loads(got)
+    assert got == _fresh_parquet_serve(spark, route, params)
+
+
+def test_resolver_sees_in_place_rewrite(spark, tmp_path):
+    """A table rewritten in place, even at the same size and with its
+    mtime reset, is resolved again: ``/ride`` returns the new value."""
+    path = tmp_path / "orders.parquet"
+    shutil.copy(f"{SF_DIR}/orders.parquet", path)
+    table = pq.read_table(path)
+    row = table["o_orderkey"].to_pylist().index(5)
+    prices = table["o_totalprice"].to_pylist()
+    col = table.schema.get_field_index("o_totalprice")
+
+    def ride_price():
+        (rec,) = json.loads(serve(spark, str(tmp_path), "/ride", ride_id=5))
+        return rec["duration"]
+
+    assert ride_price() == prices[row]
+    sizes = []
+    for bump in (1.0, 2.0):
+        prices[row] += bump
+        before = os.stat(path)
+        pq.write_table(
+            table.set_column(col, "o_totalprice", pa.array(prices)), path
+        )
+        os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+        sizes.append(os.stat(path).st_size)
+        assert os.stat(path).st_mtime_ns == before.st_mtime_ns
+        assert ride_price() == prices[row]
+    assert sizes[0] == sizes[1]  # the second rewrite kept the size too
+
+
+def test_parquet_leaf_answers_the_same(spark):
+    """With broadcasting off the resolver keeps the parquet relation:
+    the answers are unchanged, and a point lookup runs its one job.
+    The join's row order is its strategy's, which the threshold also
+    picks (sort-merge instead of broadcast), so it is compared as a
+    multiset."""
+    local = [serve(spark, SF_DIR, r, **p) for r, p in _REQUESTS]
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        parquet = [serve(spark, SF_DIR, r, **p) for r, p in _REQUESTS]
+        jobs = _jobs(spark, lambda: serve(spark, SF_DIR, "/ride", ride_id=7))
+    finally:
+        spark.conf.set(conf, old)
+    for (route, _), a, b in zip(_REQUESTS, parquet, local):
+        if route == "/rides/gender":
+            a, b = (sorted(json.dumps(r) for r in json.loads(x)) for x in (a, b))
+        assert a == b, route
+    assert jobs == 1
+
+
+def test_concurrent_requests_get_serial_answers(spark, tmp_path):
+    """Eight threads issuing mixed routes against a catalog the
+    resolver has not seen get exactly the serial answers."""
+    for table in ("customer", "orders"):
+        shutil.copy(f"{SF_DIR}/{table}.parquet", tmp_path / f"{table}.parquet")
+    requests = _REQUESTS * 3
+    serial = [serve(spark, SF_DIR, r, **p) for r, p in requests]
+
+    def one(request):
+        route, params = request
+        return serve(spark, str(tmp_path), route, **params)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            assert list(pool.map(one, requests, timeout=600)) == serial
+    finally:
+        sys.setswitchinterval(interval)

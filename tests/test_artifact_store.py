@@ -42,21 +42,13 @@ def test_memo_new_owner_drops_old_owners_entries():
     assert m.keys() == ["z"] and cleaned == ["x"]
 
 
-class _Frame:
-    def __init__(self, *files):
-        self.files = list(files)
-
-    def inputFiles(self):
-        return self.files
-
-
 def test_input_identity_sees_same_size_rewrite_with_reset_mtime(tmp_path):
     path = tmp_path / "t.parquet"
     pq.write_table(pa.table({"v": pa.array([1, 2, 3], pa.int64())}), path)
     before = os.stat(path)
-    ident = input_identity(_Frame(f"file://{path}"))
+    ident = input_identity([f"file://{path}"])
     assert ident is not None
-    assert ident == input_identity(_Frame(f"file://{path}"))
+    assert ident == input_identity([f"file://{path}"])
     pq.write_table(pa.table({"v": pa.array([4, 5, 6], pa.int64())}), path)
     os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
     after = os.stat(path)
@@ -64,16 +56,16 @@ def test_input_identity_sees_same_size_rewrite_with_reset_mtime(tmp_path):
         before.st_size,
         before.st_mtime_ns,
     )
-    assert input_identity(_Frame(f"file://{path}")) != ident
+    assert input_identity([f"file://{path}"]) != ident
 
 
 def test_input_identity_is_none_when_not_memoizable(tmp_path):
     text = tmp_path / "t.json"
     text.write_text("{}\n")
-    assert input_identity(_Frame()) is None
-    assert input_identity(_Frame(f"file://{text}")) is None
-    assert input_identity(_Frame(f"file://{tmp_path}/missing.parquet")) is None
-    assert input_identity(_Frame("hdfs://nn/t.parquet")) is None
+    assert input_identity([]) is None
+    assert input_identity([f"file://{text}"]) is None
+    assert input_identity([f"file://{tmp_path}/missing.parquet"]) is None
+    assert input_identity(["hdfs://nn/t.parquet"]) is None
 
 
 _REWRITE_QUERIES = (

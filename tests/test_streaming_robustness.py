@@ -246,6 +246,45 @@ def test_idempotent_append_propagates_real_read_errors(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
+def test_idempotent_append_reads_existing_keys_without_inference(
+    spark, tmp_path
+):
+    """The existing keys are read with the batch's own key schema: one
+    Spark job fewer per call than an inferring read, the same rows
+    kept, and an empty sink directory reads as holding no keys."""
+    from deloton_solo_spark.operators.sinks import idempotent_append
+
+    from .test_api_surface import _jobs
+
+    sink = str(tmp_path / "sink")
+    inferring = str(tmp_path / "inferring")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").write.parquet(
+        sink
+    )
+    shutil.copytree(sink, inferring)
+    batch = spark.createDataFrame([(2, "b"), (3, "c")], "k long, v string")
+
+    def append_inferring():
+        existing = spark.read.parquet(inferring).select("k")
+        batch.dropDuplicates(["k"]).join(existing, ["k"], "left_anti").write.mode(
+            "append"
+        ).parquet(inferring)
+
+    inferring_jobs = _jobs(spark, append_inferring)
+    assert _jobs(spark, lambda: idempotent_append(batch, sink, ["k"])) == (
+        inferring_jobs - 1
+    )
+    assert sorted(spark.read.parquet(sink).collect()) == sorted(
+        spark.read.parquet(inferring).collect()
+    )
+    assert spark.read.parquet(sink).count() == 3
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    idempotent_append(batch, str(empty), ["k"])
+    assert spark.read.parquet(str(empty)).count() == 2
+
+
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     """Compaction must shrink the file count to the byte-target shape
     and keep the row set bit-identical (no shuffle, only concat)."""
