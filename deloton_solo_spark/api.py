@@ -52,7 +52,9 @@ from .operators.sinks import delete_by_keys
 from .session import apply_runtime_confs
 
 #: Resolved route frames, keyed by ``_resolved``; at most 8 × the
-#: broadcast threshold of rows are held locally.
+#: broadcast threshold of rows are held locally. A serve benchmark run
+#: peaks at 2 entries (one catalog's users and rides); the tier-1 suite,
+#: which serves many catalog copies, reaches the bound and evicts.
 _FRAMES = Memo(8)
 
 #: Session confs a resolved frame depends on: the zone of its

@@ -120,7 +120,9 @@ _INFERENCE_CONFS = (
 #: Footer key-value entry holding the schema of a file Spark wrote;
 #: Spark's inference prefers it to the parquet schema.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-#: Footer schemas already inferred, keyed by ``_footer_key``.
+#: Footer schemas already inferred, keyed by ``_footer_key``. The
+#: tier-1 suite peaks at 16 entries, a batch benchmark run at 3 and a
+#: serve run at 2, so it never evicts.
 _SCHEMA_MEMO = Memo(256)
 
 
@@ -312,15 +314,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return list(TABLES)
-
-
-def cache_hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The sane replacement for the reference's stale module-global
-    cache (api.py:30-35, SURVEY.md §3.3): an explicit, refreshable
-    `.cache()` on a hot base table. Subsequent plans read
-    InMemoryTableScan instead of re-scanning parquet; `unpersist()` or
-    re-calling refreshes. At cluster scale this is executor-memory
-    columnar caching (MEMORY_AND_DISK), sized per table."""
-    df = load_table(spark, sf_dir, name).cache()
-    df.count()  # materialize now, like the reference's import-time load
-    return df

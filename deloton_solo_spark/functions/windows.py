@@ -87,7 +87,6 @@ def distributed_row_number(
     df: DataFrame,
     order_cols: list[Column],
     out_name: str = "rn",
-    parts: int = RANK_PARTS,
     with_total: str | None = None,
 ) -> DataFrame:
     """Global 1-based ``row_number`` over ``order_cols`` (which must be
@@ -99,7 +98,7 @@ def distributed_row_number(
     ``repartitionByRange`` co-locates each key range (equal keys never
     straddle partitions); per-partition ``row_number`` is bounded by
     partition size; the ONLY global window left is the carry over ONE
-    ROW PER RANGE PARTITION (``parts`` rows at any scale — the
+    ROW PER RANGE PARTITION (``RANK_PARTS`` rows at any scale — the
     prefix_sum discipline above). localCheckpoint pins the
     reservoir-sampled range boundaries so the counts branch and the
     ranked branch observe identical partitioning (task-retry race).
@@ -108,7 +107,7 @@ def distributed_row_number(
     name, broadcast from the same per-partition counts (no extra scan).
 
     Storage lifecycle (ADVICE r7): ONE checkpoint per call — ``counts``
-    (≤ ``parts`` rows) stays lazy, since determinism only needs the
+    (≤ ``RANK_PARTS`` rows) stays lazy, since determinism only needs the
     pinned ``parted`` it derives from; its two tiny consumers re-scan
     the in-memory checkpoint instead of materializing a second copy.
     The ``parted`` checkpoint is a LogicalRDD node of the returned
@@ -119,7 +118,7 @@ def distributed_row_number(
     alive, by construction, not by leak.
     """
     parted = (
-        df.repartitionByRange(parts, *order_cols)
+        df.repartitionByRange(RANK_PARTS, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()
     )
@@ -181,7 +180,6 @@ def grouped_prefix_sum(
     order_cols: list[str],
     value: Column,
     out_name: str,
-    parts: int = RANK_PARTS,
 ) -> DataFrame:
     """PER-GROUP running sum of ``value`` ordered by ``order_cols``
     WITHOUT per-group sort-window state bounded by the group size —
@@ -192,7 +190,7 @@ def grouped_prefix_sum(
     ``repartitionByRange(group, order)`` co-locates each (group, order)
     range; within-partition running sums are bounded by PARTITION size
     (not group size); the carry is one row per (partition, group) —
-    ≤ ``parts × |groups|`` rows, windowed group-wise over the partition
+    ≤ ``RANK_PARTS × |groups|`` rows, windowed group-wise over the partition
     id and broadcast back. localCheckpoint pins the sampled range
     boundaries so the carry branch and the ranked branch observe the
     same partitioning (the distributed_row_number discipline).
@@ -206,7 +204,7 @@ def grouped_prefix_sum(
     ``order_cols``.
     """
     parted = (
-        df.repartitionByRange(parts, *group_cols, *order_cols)
+        df.repartitionByRange(RANK_PARTS, *group_cols, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__v", value)
         .localCheckpoint()

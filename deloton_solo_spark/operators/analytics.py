@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.epoch import epoch_us
+from ..functions.parity import exact_round, md5_int, tokens
 from ..functions.quantiles import exact_quantiles_two_pass
 from ..functions.windows import distributed_row_number, ntile_from_rank
 from ..registry import query
@@ -281,14 +282,11 @@ def percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable map-side) — same plan shape, bounded memory."""
     o = load_table(spark, sf_dir, "orders")
 
-    def r4(c: F.Column) -> F.Column:
-        return F.round(c.cast("decimal(28,10)"), 4).cast("double")
-
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        r4(F.percentile("o_totalprice", F.lit(0.5))).alias("p50"),
-        r4(F.percentile("o_totalprice", F.lit(0.9))).alias("p90"),
-        r4(F.percentile("o_totalprice", F.lit(0.99))).alias("p99"),
+        exact_round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("p50"),
+        exact_round(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("p90"),
+        exact_round(F.percentile("o_totalprice", F.lit(0.99)), 4).alias("p99"),
     )
 
 
@@ -466,14 +464,9 @@ def trailing_hour_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         "user_id",
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).over(w).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("sum_1h"),
+        exact_round(
+            F.sum(F.col("value").cast("decimal(18,2)")).over(w), 4
+        ).alias("sum_1h"),
     )
 
 
@@ -546,7 +539,7 @@ def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     views; plain explode silently loses rows). Narrow row-expanding
     map, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    toks = tokens()
     return docs.select(
         "doc_id", F.posexplode_outer(toks).alias("pos", "token")
     )
@@ -644,9 +637,7 @@ def moments_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "o_orderpriority",
         "n",
-        F.round((s1d / nd).cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("mean"),
+        exact_round(s1d / nd, 4).alias("mean"),
         F.round(
             ((s2d - s1d * s1d / nd) / (nd - 1)).cast("decimal(38,6)"), 2
         )
@@ -711,9 +702,7 @@ def corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "l_returnflag",
         "n",
-        F.round(corr.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("corr_qty_price"),
+        exact_round(corr, 4).alias("corr_qty_price"),
     )
 
 
@@ -729,12 +718,7 @@ _CMS_K = 20
 
 
 def _cms_bucket(tok: F.Column, j: int) -> F.Column:
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}|"), tok)), 1, 7), 16, 10
-        ).cast("long")
-        % _CMS_W
-    )
+    return md5_int(F.concat(F.lit(f"{j}|"), tok), 7).cast("long") % _CMS_W
 
 
 def _cms_bucket_sql(tok: str, j: int) -> str:
@@ -789,11 +773,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     so, given the fixed hash family, which is why the oracle can check
     the sketch output exactly rather than within a bound."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        ).alias("tok")
-    )
+    tok = docs.select(F.explode(tokens()).alias("tok"))
     keyed = tok.select(
         "tok",
         F.posexplode(
@@ -934,9 +914,6 @@ def customer_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend, [F.col("spend"), F.col("c_custkey")], with_total="__n"
     )
 
-    def r4(col: F.Column) -> F.Column:
-        return F.round(col.cast("decimal(28,10)"), 4).cast("double")
-
     # percent_rank is defined as 0.0 for n == 1 (no peers) — same guard
     # Spark's PercentRank applies before dividing by n-1.
     pr = F.when(
@@ -948,8 +925,8 @@ def customer_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select(
         "c_custkey",
         "spend",
-        r4(pr).alias("pct_rank"),
-        r4(cm).alias("cume"),
+        exact_round(pr, 4).alias("pct_rank"),
+        exact_round(cm, 4).alias("cume"),
     )
 
 
@@ -1032,15 +1009,12 @@ def partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean = F.sum("n").cast("double") / F.count(F.lit(1))
 
-    def r4(c: F.Column) -> F.Column:
-        return F.round(c.cast("decimal(28,10)"), 4).cast("double")
-
     return per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.min("n").alias("min_rows"),
         F.max("n").alias("max_rows"),
-        r4(mean).alias("mean_rows"),
-        r4(F.max("n").cast("double") / mean).alias("skew_factor"),
+        exact_round(mean, 4).alias("mean_rows"),
+        exact_round(F.max("n").cast("double") / mean, 4).alias("skew_factor"),
         F.sum(F.when(F.col("n") >= 7, 1).otherwise(0)).alias("n_hot_keys"),
     )
 
@@ -1153,7 +1127,7 @@ def hll_explicit_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         (raw <= 2.5 * _HLL_M) & (n_empty > 0),
         F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / n_empty),
     ).otherwise(raw)
-    est = F.round(corrected.cast("decimal(28,10)"), 4).cast("double")
+    est = exact_round(corrected, 4)
     return (
         s.join(F.broadcast(exact), "event_type")
         .select("event_type", est.alias("est_users"), "n_exact")
@@ -1451,9 +1425,7 @@ def hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(raw)
         return s.select(
             *keys,
-            F.round(corrected.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("est"),
+            exact_round(corrected, 4).alias("est"),
         )
 
     types = regs.select("event_type").distinct()
@@ -1517,14 +1489,9 @@ def hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_a",
             "est_b",
             "est_union",
-            F.round(
-                (
-                    F.col("est_a") + F.col("est_b") - F.col("est_union")
-                ).cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("est_intersection"),
+            exact_round(
+                F.col("est_a") + F.col("est_b") - F.col("est_union"), 4
+            ).alias("est_intersection"),
             "n_exact_a",
             "n_exact_b",
             F.coalesce("n_both", F.lit(0)).cast("bigint").alias(
@@ -1632,11 +1599,7 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = q.select(
         "n_total",
         *[
-            F.round(
-                F.element_at("qv", i + 1).cast("decimal(28,10)"), 4
-            )
-            .cast("double")
-            .alias(f"q{i}")
+            exact_round(F.element_at("qv", i + 1), 4).alias(f"q{i}")
             for i in range(EDH_BUCKETS + 1)
         ]
     )
@@ -1683,15 +1646,11 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lo",
             "hi",
             F.coalesce("n_rows", F.lit(0)).cast("bigint").alias("n_rows"),
-            F.round(
-                (
-                    F.coalesce("n_rows", F.lit(0)).cast("double")
-                    / F.col("n_total").cast("double")
-                ).cast("decimal(28,10)"),
+            exact_round(
+                F.coalesce("n_rows", F.lit(0)).cast("double")
+                / F.col("n_total").cast("double"),
                 4,
-            )
-            .cast("double")
-            .alias("share"),
+            ).alias("share"),
         )
     )
 
@@ -1753,7 +1712,7 @@ def mad_robust_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "value",
-            F.round(rz.cast("decimal(28,10)"), 4).cast("double").alias("rz"),
+            exact_round(rz, 4).alias("rz"),
         )
     )
 
@@ -1851,21 +1810,14 @@ def bloom_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "k",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("b"),
-                                F.col("i").cast("string"),
-                                F.lit("-"),
-                                F.col("k").cast("string"),
-                            )
-                        ),
-                        1,
-                        12,
+                md5_int(
+                    F.concat(
+                        F.lit("b"),
+                        F.col("i").cast("string"),
+                        F.lit("-"),
+                        F.col("k").cast("string"),
                     ),
-                    16,
-                    10,
+                    12,
                 ).cast("bigint")
                 % BLOOM_M
             ).alias("pos"),
@@ -1906,19 +1858,10 @@ def bloom_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_probes",
         "bits_set",
         "fp_count",
-        F.round(
-            (F.col("fp_count").cast("double") / F.col("n_probes").cast("double"))
-            .cast("decimal(28,10)"),
-            8,
-        )
-        .cast("double")
-        .alias("fpr_observed"),
-        F.round(
-            (density * density * density * density).cast("decimal(28,10)"),
-            8,
-        )
-        .cast("double")
-        .alias("fpr_expected"),
+        exact_round(
+            F.col("fp_count").cast("double") / F.col("n_probes").cast("double"), 8
+        ).alias("fpr_observed"),
+        exact_round(density * density * density * density, 8).alias("fpr_expected"),
     )
 
 
@@ -2090,14 +2033,8 @@ def join_size_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
     sampled = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("js-"), F.col("user_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
+        md5_int(
+            F.concat(F.lit("js-"), F.col("user_id").cast("string")), 7
         ).cast("bigint")
         % JSE_MOD
         == 0
@@ -2124,30 +2061,20 @@ def join_size_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         "exact_pairs",
         "est_sample_pairs",
-        F.round(uni.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("est_uniform_pairs"),
-        F.round(
-            (
-                F.abs(
-                    F.col("est_sample_pairs")
-                    - F.col("exact_pairs").cast("double")
-                )
-                / F.col("exact_pairs").cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(uni, 4).alias("est_uniform_pairs"),
+        exact_round(
+            F.abs(
+                F.col("est_sample_pairs")
+                - F.col("exact_pairs").cast("double")
+            )
+            / F.col("exact_pairs").cast("double"),
             4,
-        )
-        .cast("double")
-        .alias("err_sample"),
-        F.round(
-            (
-                F.abs(uni - F.col("exact_pairs").cast("double"))
-                / F.col("exact_pairs").cast("double")
-            ).cast("decimal(28,10)"),
+        ).alias("err_sample"),
+        exact_round(
+            F.abs(uni - F.col("exact_pairs").cast("double"))
+            / F.col("exact_pairs").cast("double"),
             4,
-        )
-        .cast("double")
-        .alias("err_uniform"),
+        ).alias("err_uniform"),
     )
 
 
@@ -2244,24 +2171,13 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "digit",
             n_obs.alias("n_obs"),
-            F.round(
-                (n_obs.cast("double") / F.col("n_total").cast("double"))
-                .cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("share_obs"),
+            exact_round(
+                n_obs.cast("double") / F.col("n_total").cast("double"), 4
+            ).alias("share_obs"),
             "p_benford",
-            F.round(
-                (
-                    dev
-                    * dev
-                    / (F.col("p_benford") * F.col("n_total").cast("double"))
-                ).cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("chi2_term"),
+            exact_round(
+                dev * dev / (F.col("p_benford") * F.col("n_total").cast("double")), 4
+            ).alias("chi2_term"),
         )
     )
 
@@ -2344,15 +2260,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = ev.distinct().select(
         "event_type",
         "user_id",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("kmv-"), F.col("user_id").cast("string"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        )
+        md5_int(F.concat(F.lit("kmv-"), F.col("user_id").cast("string")), 13)
         .cast("bigint")
         .alias("hv"),
     )
@@ -2379,20 +2287,16 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_in_sketch") < KMV_K,
             F.col("n_in_sketch").cast("double"),
         )
-        .otherwise(
-            F.round(est.cast("decimal(28,10)"), 4).cast("double")
-        )
+        .otherwise(exact_round(est, 4))
         .alias("est_distinct"),
         "n_exact",
         F.when(F.col("n_in_sketch") < KMV_K, F.lit(0.0))
         .otherwise(
-            F.round(
-                (
-                    F.abs(est - F.col("n_exact").cast("double"))
-                    / F.col("n_exact").cast("double")
-                ).cast("decimal(28,10)"),
+            exact_round(
+                F.abs(est - F.col("n_exact").cast("double"))
+                / F.col("n_exact").cast("double"),
                 4,
-            ).cast("double")
+            )
         )
         .alias("rel_err"),
     )
@@ -2506,19 +2410,8 @@ def trend_regression_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(slope.cast("decimal(38,20)"), 18)
         .cast("double")
         .alias("slope_per_sec"),
-        F.round(
-            ((syd - slope * sxd) / nd).cast("decimal(28,10)"), 4
-        )
-        .cast("double")
-        .alias("intercept"),
-        F.round(
-            ((num * num) / (den * (nd * syyd - syd * syd))).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("r2"),
+        exact_round((syd - slope * sxd) / nd, 4).alias("intercept"),
+        exact_round((num * num) / (den * (nd * syyd - syd * syd)), 4).alias("r2"),
     )
 
 
@@ -2620,17 +2513,7 @@ def jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = ev.select(
         "event_type",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("jk-"), F.col("event_id").cast("string"))
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        )
+        md5_int(F.concat(F.lit("jk-"), F.col("event_id").cast("string")), 1)
         .cast("bigint")
         .alias("g"),
         F.col("value").cast("decimal(18,2)").alias("y"),
@@ -2687,18 +2570,10 @@ def jackknife_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n",
-            F.round(mean_d.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("mean_value"),
-            F.round(se.cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("se_jack"),
-            F.round((mean_d - 1.96 * se).cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("ci_lo"),
-            F.round((mean_d + 1.96 * se).cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("ci_hi"),
+            exact_round(mean_d, 4).alias("mean_value"),
+            exact_round(se, 6).alias("se_jack"),
+            exact_round(mean_d - 1.96 * se, 4).alias("ci_lo"),
+            exact_round(mean_d + 1.96 * se, 4).alias("ci_hi"),
         )
     )
 
@@ -2774,12 +2649,8 @@ def chi2_independence_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "source",
             n_obs.alias("n_obs"),
-            F.round(e.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("expected"),
-            F.round((dev * dev / e).cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("chi2_term"),
+            exact_round(e, 4).alias("expected"),
+            exact_round(dev * dev / e, 6).alias("chi2_term"),
         )
     )
 
@@ -2867,11 +2738,7 @@ def ks_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = docs.select(
         "lang",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("x"),
+        F.size(tokens()).cast("long").alias("x"),
     )
     c = t.groupBy("x").agg(
         F.sum(F.when(F.col("lang") == KS_LANG_A, 1).otherwise(0))
@@ -2947,12 +2814,8 @@ def ks_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.crossJoin(F.broadcast(nn)).select(
         "n_a",
         "n_b",
-        F.round(F.col("ks_d").cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("ks_d"),
-        F.round(crit.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("ks_crit_95"),
+        exact_round(F.col("ks_d"), 6).alias("ks_d"),
+        exact_round(crit, 6).alias("ks_crit_95"),
         (F.col("ks_d") > crit).alias("reject_same_dist"),
     )
 
@@ -3272,29 +3135,12 @@ def market_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     totd = F.col("tot").cast("double")
     return s.select(
         "n",
-        F.round(totd.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("total_revenue"),
-        F.round(
-            (
-                F.lit(2.0) * F.col("srx").cast("double") / (nd * totd)
-                - (nd + 1) / nd
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("gini"),
-        F.round(F.col("hhi_sum").cast("double").cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("hhi"),
-        F.round(
-            (F.col("top10_rev").cast("double") / totd).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("top10_share"),
+        exact_round(totd, 4).alias("total_revenue"),
+        exact_round(
+            F.lit(2.0) * F.col("srx").cast("double") / (nd * totd) - (nd + 1) / nd, 6
+        ).alias("gini"),
+        exact_round(F.col("hhi_sum").cast("double"), 6).alias("hhi"),
+        exact_round(F.col("top10_rev").cast("double") / totd, 6).alias("top10_share"),
     )
 
 
@@ -3411,14 +3257,7 @@ def mann_whitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n1").alias("n_en"),
         (F.col("n") - F.col("n1")).alias("n_other"),
         u_stat.alias("u_stat"),
-        F.round(
-            ((u_stat - n1d * n2d / F.lit(2.0)) / sigma).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("z_score"),
+        exact_round((u_stat - n1d * n2d / F.lit(2.0)) / sigma, 6).alias("z_score"),
     )
 
 
@@ -3621,9 +3460,7 @@ def revenue_yoy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mo",
         cur.alias("revenue"),
         prv.alias("revenue_prev_year"),
-        F.round(((cur - prv) / prv).cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("yoy_growth"),
+        exact_round((cur - prv) / prv, 6).alias("yoy_growth"),
     )
 
 
@@ -3815,15 +3652,9 @@ def topn_with_other_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.min("rk_group").cast("bigint").alias("display_rank"),
             F.sum("rev_dec").cast("double").alias("revenue"),
-            F.round(
-                (
-                    F.sum("rev_dec").cast("double")
-                    / F.col("t").cast("double")
-                ).cast("decimal(28,10)"),
-                6,
-            )
-            .cast("double")
-            .alias("revenue_share"),
+            exact_round(
+                F.sum("rev_dec").cast("double") / F.col("t").cast("double"), 6
+            ).alias("revenue_share"),
         )
         .drop("t")
     )
@@ -3896,17 +3727,10 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.crossJoin(F.broadcast(tot)).select(
         "suppkey",
         "key_rows",
-        F.round(
-            (F.col("key_rows").cast("double") / F.col("n_rows")).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("share"),
-        F.round(ratio.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("ratio_to_mean"),
+        exact_round(
+            F.col("key_rows").cast("double") / F.col("n_rows"), 6
+        ).alias("share"),
+        exact_round(ratio, 4).alias("ratio_to_mean"),
         (ratio > SKEW_FLAG_RATIO).alias("needs_salt"),
     )
 
@@ -4092,21 +3916,14 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(BOOT_REPS - 1))).alias("b"),
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("boot-"),
-                        F.col("b").cast("string"),
-                        F.lit("-"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                7,
+        md5_int(
+            F.concat(
+                F.lit("boot-"),
+                F.col("b").cast("string"),
+                F.lit("-"),
+                F.col("doc_id").cast("string"),
             ),
-            16,
-            10,
+            7,
         ).cast("long")
         / F.lit(_BOOT_DENOM)
     )
@@ -4176,32 +3993,19 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_docs",
             F.col("nb").alias("n_replicates"),
-            F.round(
-                (F.col("sx").cast("double") / F.col("n_docs").cast("double")).cast(
-                    "decimal(28,10)"
-                ),
-                4,
-            )
-            .cast("double")
-            .alias("raw_mean"),
-            F.round(F.col("mu").cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("boot_mean"),
-            F.round(
+            exact_round(
+                F.col("sx").cast("double") / F.col("n_docs").cast("double"), 4
+            ).alias("raw_mean"),
+            exact_round(F.col("mu"), 4).alias("boot_mean"),
+            exact_round(
                 F.sqrt(
                     F.col("sd2").cast("double")
                     / (F.col("nb") - 1).cast("double")
-                ).cast("decimal(28,10)"),
+                ),
                 6,
-            )
-            .cast("double")
-            .alias("se_boot"),
-            F.round(F.col("qlo").cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("ci_lo"),
-            F.round(F.col("qhi").cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("ci_hi"),
+            ).alias("se_boot"),
+            exact_round(F.col("qlo"), 4).alias("ci_lo"),
+            exact_round(F.col("qhi"), 4).alias("ci_hi"),
         )
     )
 
@@ -4265,10 +4069,9 @@ def winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice"
     )
-    r4 = lambda c: F.round(c.cast("decimal(28,10)"), 4).cast("double")
     q = orders.groupBy("o_orderpriority").agg(
-        r4(F.percentile("o_totalprice", F.lit(WINSOR_LO))).alias("p_lo"),
-        r4(F.percentile("o_totalprice", F.lit(WINSOR_HI))).alias("p_hi"),
+        exact_round(F.percentile("o_totalprice", F.lit(WINSOR_LO)), 4).alias("p_lo"),
+        exact_round(F.percentile("o_totalprice", F.lit(WINSOR_HI)), 4).alias("p_hi"),
     )
     clipped = F.least(
         F.greatest(F.col("o_totalprice"), F.col("p_lo")), F.col("p_hi")
@@ -4288,15 +4091,17 @@ def winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_clip_hi"),
-            r4(
+            exact_round(
                 F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast(
                     "double"
                 )
-                / F.count(F.lit(1))
+                / F.count(F.lit(1)),
+                4,
             ).alias("raw_mean"),
-            r4(
+            exact_round(
                 F.sum(clipped.cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
+                / F.count(F.lit(1)),
+                4,
             ).alias("winsor_mean"),
         )
     )
@@ -4777,7 +4582,6 @@ def bh_fdr_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ss2").cast("double")
         - F.col("s2").cast("double") * F.col("s2").cast("double") / F.col("n2")
     ) / (F.col("n2") - 1)
-    r6 = lambda c: F.round(c.cast("decimal(28,10)"), 6).cast("double")
     # n >= 2 in BOTH halves keeps the (n-1) variance denominators
     # well-defined and pins m_tests to the same family in both
     # engines (a type present in only one half never enters — the
@@ -4789,8 +4593,8 @@ def bh_fdr_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n1",
             "n2",
-            r6(
-                (m1 - m2) / F.sqrt(v1 / F.col("n1") + v2 / F.col("n2"))
+            exact_round(
+                (m1 - m2) / F.sqrt(v1 / F.col("n1") + v2 / F.col("n2")), 6
             ).alias("z"),
         )
     )
@@ -4809,9 +4613,7 @@ def bh_fdr_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(_AS_A[0])
     ) * t
     tail = F.lit(0.5) * poly * F.exp(-x * x)
-    pv = zt.select(
-        "event_type", "n1", "n2", "z", r6(2.0 * tail).alias("p")
-    )
+    pv = zt.select("event_type", "n1", "n2", "z", exact_round(2.0 * tail, 6).alias("p"))
     wr = Window.orderBy("p", "event_type")
     ranked = pv.select(
         "*",
@@ -4839,7 +4641,7 @@ def bh_fdr_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "z",
         "p",
         F.col("rnk").alias("p_rank"),
-        r6(F.lit(BH_Q) * F.col("rnk") / F.col("m_tests")).alias(
+        exact_round(F.lit(BH_Q) * F.col("rnk") / F.col("m_tests"), 6).alias(
             "bh_threshold"
         ),
         (F.col("rnk") <= F.col("k")).alias("rejected"),
@@ -4943,15 +4745,11 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("tb") > F.col("ta"))
             .select(
                 "event_type",
-                F.round(
-                    (
-                        (F.col("yb") - F.col("ya"))
-                        / ((F.col("tb") - F.col("ta")) / 3600000000.0)
-                    ).cast("decimal(28,10)"),
+                exact_round(
+                    (F.col("yb") - F.col("ya"))
+                    / ((F.col("tb") - F.col("ta")) / 3600000000.0),
                     6,
-                )
-                .cast("double")
-                .alias("slope"),
+                ).alias("slope"),
             )
         )
         slopes = s if slopes is None else slopes.unionAll(s)
@@ -4968,18 +4766,21 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dist.groupBy("event_type").agg(
         F.sum("f").cast("bigint").alias("n_pairs"),
-        F.round(
-            F.percentile("slope", F.lit(0.5), F.col("f")).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("sen_slope"),
+        exact_round(
+            F.percentile("slope", F.lit(0.5), F.col("f")), 6
+        ).alias("sen_slope"),
     )
 
 
 # X268 — CUPED variance reduction for experiments ----------------------------
+def _treatment_arm() -> F.Column:
+    """The experiment arm of ``user_id`` by the parity of its salted
+    hash; CUPED and the two-proportion z-test share it."""
+    salted = F.concat(F.lit("arm-"), F.col("user_id").cast("string"))
+    even = md5_int(salted, 1).cast("long") % 2 == 0
+    return F.when(even, "treatment").otherwise("control")
+
+
 def _cuped_oracle() -> str:
     return """
     WITH med AS (
@@ -5081,20 +4882,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = exact_quantiles_two_pass(ev, "tu", [0.5]).select(
         F.element_at("qv", 1).alias("tmid")
     )
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm-"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "treatment",
-    ).otherwise("control")
+    arm = _treatment_arm()
     per_user = (
         ev.crossJoin(F.broadcast(med))
         .groupBy("user_id")
@@ -5146,7 +4934,6 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("th")
     )
     arm_stats = moments(per_user, ["arm"])
-    r4 = lambda c: F.round(c.cast("decimal(28,10)"), 4).cast("double")
     cy = F.col("syy").cast("double") - F.col("sy").cast("double") * F.col(
         "sy"
     ).cast("double") / F.col("n")
@@ -5159,15 +4946,16 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return arm_stats.crossJoin(F.broadcast(th)).select(
         "arm",
         "n",
-        r4(F.col("sy").cast("double") / F.col("n")).alias("mean_y"),
-        r4(cy / (F.col("n") - 1)).alias("var_y"),
-        r4(
+        exact_round(F.col("sy").cast("double") / F.col("n"), 4).alias("mean_y"),
+        exact_round(cy / (F.col("n") - 1), 4).alias("var_y"),
+        exact_round(
             (
                 cy
                 - 2 * F.col("th") * cxy
                 + F.col("th") * F.col("th") * cx
             )
-            / (F.col("n") - 1)
+            / (F.col("n") - 1),
+            4,
         ).alias("var_y_cuped"),
     )
 
@@ -5263,14 +5051,13 @@ def power_analysis_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sqrt(var_y)
         * F.sqrt(F.lit(4.0) / F.col("n_units"))
     )
-    r = lambda c, d: F.round(c.cast("decimal(28,10)"), d).cast("double")
     return m.select(
         "event_type",
         "n_units",
-        r(mean_y, 4).alias("mean_y"),
-        r(F.sqrt(var_y), 4).alias("sd_y"),
-        r(mde, 4).alias("mde_abs"),
-        r(mde / mean_y, 6).alias("mde_rel"),
+        exact_round(mean_y, 4).alias("mean_y"),
+        exact_round(F.sqrt(var_y), 4).alias("sd_y"),
+        exact_round(mde, 4).alias("mde_abs"),
+        exact_round(mde / mean_y, 6).alias("mde_rel"),
     )
 
 
@@ -5360,22 +5147,7 @@ def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("converted")
         )
     )
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("arm-"), F.col("user_id").cast("string"))
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "treatment",
-    ).otherwise("control")
+    arm = _treatment_arm()
     g = (
         per_user.select(arm.alias("arm"), "converted")
         .groupBy("arm")
@@ -5396,17 +5168,17 @@ def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pp = (F.col("ct") + F.col("cc")).cast("double") / (
         F.col("nt") + F.col("nc")
     )
-    r6 = lambda col: F.round(col.cast("decimal(28,10)"), 6).cast("double")
     z = wide.select(
         "nt",
         "ct",
         "nc",
         "cc",
-        r6(
+        exact_round(
             (pt - pc)
             / F.sqrt(
                 pp * (1.0 - pp) * (1.0 / F.col("nt") + 1.0 / F.col("nc"))
-            )
+            ),
+            6,
         ).alias("zval"),
     )
     x = F.abs(F.col("zval")) / F.lit(1.4142135623730951)
@@ -5429,10 +5201,12 @@ def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ct").alias("conv_treatment"),
         F.col("nc").alias("n_control"),
         F.col("cc").alias("conv_control"),
-        r6(F.col("ct").cast("double") / F.col("nt")).alias("rate_treatment"),
-        r6(F.col("cc").cast("double") / F.col("nc")).alias("rate_control"),
+        exact_round(F.col("ct").cast("double") / F.col("nt"), 6).alias(
+            "rate_treatment"
+        ),
+        exact_round(F.col("cc").cast("double") / F.col("nc"), 6).alias("rate_control"),
         F.col("zval").alias("z"),
-        r6(2.0 * tail).alias("p_value"),
+        exact_round(2.0 * tail, 6).alias("p_value"),
     )
 
 
@@ -5559,13 +5333,12 @@ def conformal_calibration_report(
         .otherwise("test")
     )
     ev = ev.withColumn("part", part)
-    r6 = lambda c: F.round(c.cast("decimal(28,10)"), 6).cast("double")
     mu = (
         ev.filter(F.col("part") == "train")
         .groupBy("event_type")
         .agg(
-            r6(
-                F.sum("y").cast("double") / F.count(F.lit(1))
+            exact_round(
+                F.sum("y").cast("double") / F.count(F.lit(1)), 6
             ).alias("m"),
             F.count(F.lit(1)).cast("bigint").alias("n_train"),
         )
@@ -5579,7 +5352,7 @@ def conformal_calibration_report(
             "event_id",
             "n_train",
             "m",
-            r6(F.abs(F.col("y").cast("double") - F.col("m"))).alias("s"),
+            exact_round(F.abs(F.col("y").cast("double") - F.col("m")), 6).alias("s"),
         )
     )
     wr = Window.partitionBy("event_type").orderBy("s", "event_id")
@@ -5611,7 +5384,7 @@ def conformal_calibration_report(
         .groupBy("event_type", "n_train", "n_cal", "m", "q_hat")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_test"),
-            r6(
+            exact_round(
                 F.sum(
                     F.when(
                         F.col("q_hat").isNull()
@@ -5619,7 +5392,8 @@ def conformal_calibration_report(
                         1,
                     ).otherwise(0)
                 ).cast("double")
-                / F.count(F.lit(1))
+                / F.count(F.lit(1)),
+                6,
             ).alias("coverage"),
         )
         .select(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, no_pushdown, spread_scan
+from ..functions.parity import exact_round, md5_int, tokens
 from ..registry import query
 
 #: non-overlapping words per dedup chunk (CCNet-style "line" dedup unit).
@@ -44,13 +45,6 @@ KFOLDS = 5
 CONTAIN_SHINGLE = 3
 #: containment threshold (|A∩B| / min(|A|,|B|)).
 CONTAIN_MIN = 0.8
-
-
-def _tokens() -> F.Column:
-    """Whitespace tokens of ``text``, lowercased — the one tokenizer every
-    corpus operator (and its oracle) shares, byte-identical to the DuckDB
-    ``regexp_extract_all(lower(text), '\\S+')`` twin."""
-    return F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
 
 
 def _empty_str_array() -> F.Column:
@@ -91,7 +85,7 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on chunk_hash. At 100 TB the shuffle payload is hashes,
     never text."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     n_chunks = (F.size(t) / CHUNK_WORDS).cast("int")
     chunks = F.when(
         n_chunks > 0,
@@ -142,7 +136,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (narrow), partial agg before the exchange, then
     ``orderBy().limit()`` → TakeOrderedAndProject."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     pairs = F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -200,12 +194,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = Window.partitionBy("event_type")
     return g.withColumn(
         "p",
-        F.round(
-            (F.col("n").cast("double") / F.sum("n").over(wt)).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        ).cast("double"),
+        exact_round(F.col("n").cast("double") / F.sum("n").over(wt), 4),
     )
 
 
@@ -248,7 +237,7 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "value",
-            F.round(z.cast("decimal(28,10)"), 4).cast("double").alias("z"),
+            exact_round(z, 4).alias("z"),
         )
     )
 
@@ -299,6 +288,13 @@ def activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # X61 — deterministic k-fold assignment -----------------------------------
+def _fold_col() -> F.Column:
+    """The fold of ``doc_id``, a salted content hash; ``kfold_assign``
+    and ``curation_pipeline`` share it."""
+    salted = F.concat(F.lit("fold-"), F.col("doc_id").cast("string"))
+    return (md5_int(salted, 7).cast("bigint") % KFOLDS).cast("int")
+
+
 @query(
     "kfold_assign",
     oracle=f"""
@@ -315,19 +311,7 @@ def kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (sampling.py determinism discipline: survives repartitioning,
     retries, and engine swaps; no RNG). Narrow map, zero shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fold-"), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % KFOLDS
-    ).cast("int")
-    return docs.select("doc_id", fold.alias("fold"))
+    return docs.select("doc_id", _fold_col().alias("fold"))
 
 
 # X62 — adjacent-token PMI ------------------------------------------------
@@ -371,7 +355,7 @@ def token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary and the two scalar totals join back as explicit
     broadcasts — the only exchange carries (w1, w2, count) rows."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     tok = docs.select(F.explode(t).alias("w"))
     marg = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     n_tok = tok.agg(F.count(F.lit(1)).cast("bigint").alias("n_tok"))
@@ -392,16 +376,16 @@ def token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pairs = pr.agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     m1 = marg.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
     m2 = marg.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
-    pmi = F.round(
+    pmi = exact_round(
         F.log(
             (F.col("n_pair").cast("double") / F.col("n_pairs"))
             / (
                 (F.col("c1").cast("double") / F.col("n_tok"))
                 * (F.col("c2").cast("double") / F.col("n_tok"))
             )
-        ).cast("decimal(28,10)"),
+        ),
         4,
-    ).cast("double")
+    )
     return (
         pc.crossJoin(F.broadcast(n_pairs))
         .crossJoin(F.broadcast(n_tok))
@@ -454,7 +438,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-banded candidates (near_dedup_lsh_verified framing,
     dedup.py)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     n_sh = F.size(t) - CONTAIN_SHINGLE + 1
     shingles = F.when(
         n_sh > 0,
@@ -491,9 +475,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.round(containment.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("containment"),
+            exact_round(containment, 4).alias("containment"),
         )
     )
 
@@ -517,21 +499,6 @@ _FOLD_SQL = (
     f"CAST(CAST(('0x' || substr(md5('fold-' || CAST(doc_id AS VARCHAR)), 1, 7))"
     f" AS BIGINT) % {KFOLDS} AS INT)"
 )
-
-
-def _fold_col() -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fold-"), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % KFOLDS
-    ).cast("int")
 
 
 def _chunk_hashes(t: F.Column) -> F.Column:
@@ -625,7 +592,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunk hashes pinned once (hash-only rows): the a/b self-join legs
     # each recomputed the tokenize+md5 chunk projection otherwise.
     ch = surv.select(
-        "doc_id", F.explode(_chunk_hashes(_tokens())).alias("h")
+        "doc_id", F.explode(_chunk_hashes(tokens())).alias("h")
     ).localCheckpoint(eager=True)
     a = ch.select(F.col("doc_id").alias("da"), "h")
     b = ch.select(F.col("doc_id").alias("db"), "h")
@@ -709,12 +676,9 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: narrow explode + single partial-agg exchange keyed on
     (doc_id, bucket)."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w")), 1, 7), 16, 10).cast("bigint")
-        % HASH_BUCKETS
-    ).cast("int")
+    bucket = (md5_int(F.col("w"), 7).cast("bigint") % HASH_BUCKETS).cast("int")
     return (
-        docs.select("doc_id", F.explode(_tokens()).alias("w"))
+        docs.select("doc_id", F.explode(tokens()).alias("w"))
         .select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -761,7 +725,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rounded once at the end. Plan: token marginals broadcast back
     onto the exploded stream, one (doc_id)-keyed partial agg."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_tokens()).alias("w"))
+    tok = docs.select("doc_id", F.explode(tokens()).alias("w"))
     marg = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     tot = tok.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     surp = (
@@ -780,14 +744,9 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", surp)
     )
     return s.groupBy("doc_id").agg(
-        F.round(
-            (F.sum("surp").cast("double") / F.count(F.lit(1))).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("mean_surprisal"),
+        exact_round(
+            F.sum("surp").cast("double") / F.count(F.lit(1)), 4
+        ).alias("mean_surprisal"),
         F.count(F.lit(1)).alias("n_tokens"),
     )
 
@@ -832,12 +791,8 @@ def incremental_corpus_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("source") == "src0")
     batch = docs.filter(F.col("source") != "src0")
-    corpus_idx = corpus.select(
-        F.explode(_chunk_hashes(_tokens())).alias("h")
-    ).distinct()
-    batch_ch = batch.select(
-        "doc_id", F.explode(_chunk_hashes(_tokens())).alias("h")
-    )
+    corpus_idx = corpus.select(F.explode(_chunk_hashes(tokens())).alias("h")).distinct()
+    batch_ch = batch.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     dup_new = (
         batch_ch.join(corpus_idx, "h", "left_semi")
         .select("doc_id")
@@ -938,7 +893,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Lloyd training: keep plan analysis flat instead of nesting K
     rounds of joins in one tree)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     adj = F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -1083,7 +1038,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     term) pairs), df/doc-length/corpus stats broadcast back, top-K via
     ``orderBy().limit()``."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_tokens()).alias("w"))
+    tok = docs.select("doc_id", F.explode(tokens()).alias("w"))
     dl = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("len_d")
     )
@@ -1125,13 +1080,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scored.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum("part").cast("double").cast("decimal(28,10)"), 4
-            )
-            .cast("double")
-            .alias("bm25")
-        )
+        .agg(exact_round(F.sum("part").cast("double"), 4).alias("bm25"))
         .orderBy(F.desc("bm25"), "doc_id")
         .limit(BM25_TOP)
     )
@@ -1188,7 +1137,7 @@ def fuzzy_dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (catalog.spread_scan).
     ch = (
         spread_scan(docs, "doc_id")
-        .select("doc_id", F.explode(_chunk_hashes(_tokens())).alias("h"))
+        .select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
         .localCheckpoint(eager=True)
     )
     a = ch.select(F.col("doc_id").alias("doc_a"), "h")
@@ -1216,9 +1165,7 @@ def fuzzy_dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             ed.cast("bigint").alias("edit_dist"),
-            F.round(rel.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("rel_dist"),
+            exact_round(rel, 4).alias("rel_dist"),
         )
     )
 
@@ -1279,7 +1226,7 @@ def bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner is again a scalar — the BPE training loop distributes as
     k narrow passes)."""
     docs = load_table(spark, sf_dir, "documents")
-    cur = docs.select(_tokens().alias("t"))
+    cur = docs.select(tokens().alias("t"))
     merged = _bpe_apply(cur, _bpe_top1(cur)).select(F.col("t").alias("m"))
     m = F.col("m")
     new_pairs = F.when(
@@ -1336,7 +1283,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is the bounded one, and AQE broadcasts whichever actually
     fits."""
     docs = load_table(spark, sf_dir, "documents")
-    ch = docs.select("doc_id", F.explode(_chunk_hashes(_tokens())).alias("h"))
+    ch = docs.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     a = ch.select(F.col("doc_id").alias("doc_a"), "h")
     b = ch.select(F.col("doc_id").alias("doc_b"), "h")
     pairs = (
@@ -1410,7 +1357,7 @@ def curation_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     surv = docs.join(gq, "doc_id").select("doc_id", "text")
-    ch = surv.select("doc_id", F.explode(_chunk_hashes(_tokens())).alias("h"))
+    ch = surv.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     a = ch.select(F.col("doc_id").alias("da"), "h")
     b = ch.select(F.col("doc_id").alias("db"), "h")
     dup = (
@@ -1563,7 +1510,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-op at deploy scale (catalog.spread_scan); round-robin is safe
     # because every downstream op (pair-count agg, broadcast-apply) is
     # partitioning-insensitive.
-    cur = spread_scan(docs, "doc_id").select(_tokens().alias("t"))
+    cur = spread_scan(docs, "doc_id").select(tokens().alias("t"))
     steps = []
     for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
         # 1-row winner, materialized once: it feeds BOTH the output and
@@ -1639,7 +1586,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back on their hash keys (shuffle carries tokens + one decimal,
     never text); one (doc_id)-keyed partial agg."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     pair_structs = F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -1669,14 +1616,9 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", surp)
     )
     return s.groupBy("doc_id").agg(
-        F.round(
-            (F.sum("surp").cast("double") / F.count(F.lit(1))).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("mean_bigram_surprisal"),
+        exact_round(
+            F.sum("surp").cast("double") / F.count(F.lit(1)), 4
+        ).alias("mean_bigram_surprisal"),
         F.count(F.lit(1)).alias("n_bigrams"),
     )
 
@@ -1729,7 +1671,7 @@ def _bpe_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar, the merge a narrow JVM fold, rounds checkpointed
     like the trainer."""
     docs = load_table(spark, sf_dir, "documents")
-    cur = docs.select("doc_id", _tokens().alias("t"))
+    cur = docs.select("doc_id", tokens().alias("t"))
     for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
         top1 = _bpe_top1(cur).localCheckpoint(eager=True)
         cur = _bpe_apply(cur, top1)
@@ -1745,6 +1687,13 @@ def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", (F.col("p0") + 1).cast("bigint").alias("pos"), "token"
     )
+
+
+def _content_token_id() -> F.Column:
+    """The 28-bit content-hash token id of ``token``, shared by
+    ``bpe_encode_corpus`` and ``bpe_decode_roundtrip`` (layout-stable
+    across runs and engines)."""
+    return md5_int("token", 7).cast("bigint").alias("token_id")
 
 
 @query(
@@ -1768,10 +1717,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized between rounds like the trainer; the final posexplode
     is row-expanding but narrow — no shuffle anywhere except the
     per-round pair counts."""
-    return _bpe_encoded(spark, sf_dir).withColumn(
-        "token_id",
-        F.conv(F.substring(F.md5("token"), 1, 7), 16, 10).cast("bigint"),
-    )
+    return _bpe_encoded(spark, sf_dir).select("*", _content_token_id())
 
 
 # X103 — CCNet-style chunk-dedup REWRITE ----------------------------------
@@ -1842,7 +1788,7 @@ def chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     program. No exchange in the plan carries a text column
     (plan-asserted)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     n = (F.size(t) / CHUNK_WORDS).cast("int")
     chunk_structs = F.when(
         n > 0,
@@ -2074,16 +2020,6 @@ def _bpe_decode_oracle() -> str:
     )
 
 
-def _content_token_id(col: str = "token") -> F.Column:
-    """The 28-bit content-hash token id shared with ``bpe_encode_corpus``
-    (md5-prefix trick — layout-stable across runs and engines)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 7), 16, 10)
-        .cast("bigint")
-        .alias("token_id")
-    )
-
-
 @query(
     "bpe_decode_roundtrip",
     oracle=_bpe_decode_oracle(),
@@ -2099,7 +2035,7 @@ def bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token stream with a single-space join applies ALL merge
     inversions at once, so decode(encode(doc)) equals the document
     under the engine's documented normalization (lowercase +
-    whitespace collapse — ``_tokens``'s token space). ``roundtrip_ok``
+    whitespace collapse — ``tokens()``'s token space). ``roundtrip_ok``
     states that equality per document; zero-token documents round-trip
     to the empty string. The decoder consumes ONLY ids: the id→token
     table is re-derived from the encoded corpus (a deployment reads
@@ -2134,9 +2070,7 @@ def bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id",
-        F.coalesce(F.array_join(_tokens(), " "), F.lit("")).alias(
-            "norm_text"
-        ),
+        F.coalesce(F.array_join(tokens(), " "), F.lit("")).alias("norm_text"),
     )
     return norm.join(dec, "doc_id", "left").select(
         "doc_id",
@@ -2207,7 +2141,7 @@ def perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     are vocabulary-sized and broadcast back; V is a broadcast scalar;
     one partial-agg shuffle per stats table plus the per-doc rollup."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     pair_structs = F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -2253,14 +2187,9 @@ def perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(vs))
         .select("doc_id", surp)
     )
-    ppl = F.round(
-        F.exp(F.sum("surp").cast("double") / F.count(F.lit(1))).cast(
-            "decimal(28,10)"
-        ),
-        4,
-    )
+    ppl = exact_round(F.exp(F.sum("surp").cast("double") / F.count(F.lit(1))), 4)
     return s.groupBy("doc_id").agg(
-        ppl.cast("double").alias("ppl"),
+        ppl.alias("ppl"),
         (ppl <= PPL_MAX).alias("keep"),
     )
 
@@ -2356,7 +2285,7 @@ def perplexity_filter_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized exchange is the per-doc rollup carrying (doc_id,
     decimal surprisal)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     pair_structs = F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -2409,14 +2338,9 @@ def perplexity_filter_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tt))
         .select("doc_id", surp)
     )
-    ppl = F.round(
-        F.exp(F.sum("surp").cast("double") / F.count(F.lit(1))).cast(
-            "decimal(28,10)"
-        ),
-        4,
-    )
+    ppl = exact_round(F.exp(F.sum("surp").cast("double") / F.count(F.lit(1))), 4)
     return s.groupBy("doc_id").agg(
-        ppl.cast("double").alias("ppl"),
+        ppl.alias("ppl"),
         (ppl <= KN_PPL_MAX).alias("keep"),
     )
 
@@ -2479,12 +2403,7 @@ def perplexity_kn_vs_addone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("keep").alias("keep_addone"),
     )
     gap = (F.col("ppl_addone") - F.col("ppl_kn")).cast("decimal(18,4)")
-    avg_gap = F.round(
-        (F.sum(gap).cast("double") / F.count(F.lit(1))).cast(
-            "decimal(28,10)"
-        ),
-        4,
-    ).cast("double")
+    avg_gap = exact_round(F.sum(gap).cast("double") / F.count(F.lit(1)), 4)
     return (
         kn.join(ao, "doc_id")
         .groupBy("keep_kn", "keep_addone")
@@ -2730,7 +2649,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew from one giant domain is the (source, hash) key, salting-
     ready, never a global hot key."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     n = (F.size(t) / CHUNK_WORDS).cast("int")
     chunk_structs = F.when(
         n > 0,
@@ -2861,7 +2780,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME projection, so the one exchange (partial-agg on
     chunk_hash) carries hashes, never text."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens()
+    t = tokens()
     empty = F.array().cast("array<string>")
 
     def is_boundary(x: F.Column) -> F.Column:
@@ -2962,7 +2881,7 @@ def compression_ratio_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", "source", F.length("text").alias("nc"),
-        F.size(_tokens()).alias("n0"),
+        F.size(tokens()).alias("n0"),
     )
     merged = _bpe_merged(spark, sf_dir).select(
         "doc_id", F.size("t").alias("n1")
@@ -2973,22 +2892,12 @@ def compression_ratio_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nc").cast("bigint").alias("n_chars"),
         F.sum("n0").cast("bigint").alias("n_tokens_base"),
         F.sum("n1").cast("bigint").alias("n_tokens_merged"),
-        F.round(
-            (F.sum("nc").cast("double") / F.sum("n1")).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("chars_per_token"),
-        F.round(
-            (F.lit(1.0) - F.sum("n1").cast("double") / F.sum("n0")).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("merge_savings"),
+        exact_round(
+            F.sum("nc").cast("double") / F.sum("n1"), 4
+        ).alias("chars_per_token"),
+        exact_round(
+            F.lit(1.0) - F.sum("n1").cast("double") / F.sum("n0"), 4
+        ).alias("merge_savings"),
     )
 
 
@@ -3070,9 +2979,7 @@ def frequent_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs more than it saves at this scale.
     dt = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit(r"\S+"), 0)
-        ).alias("token"),
+        F.explode(tokens()).alias("token"),
     ).distinct()
     df = dt.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
@@ -3113,21 +3020,17 @@ def frequent_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "support",
             "df_a",
             "df_b",
-            F.round(
+            exact_round(
                 (
-                    (
-                        F.col("support").cast("double")
-                        * F.col("n_docs").cast("double")
-                    )
-                    / (
-                        F.col("df_a").cast("double")
-                        * F.col("df_b").cast("double")
-                    )
-                ).cast("decimal(28,10)"),
+                    F.col("support").cast("double")
+                    * F.col("n_docs").cast("double")
+                )
+                / (
+                    F.col("df_a").cast("double")
+                    * F.col("df_b").cast("double")
+                ),
                 4,
-            )
-            .cast("double")
-            .alias("lift"),
+            ).alias("lift"),
         )
     )
 
@@ -3183,9 +3086,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit(r"\S+"), 0)
-            ).alias("token"),
+            F.explode(tokens()).alias("token"),
         )
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
@@ -3287,11 +3188,7 @@ def dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
     )
     st = base.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -3337,35 +3234,19 @@ def dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_docs",
             "total_tokens",
-            F.round(
-                (
-                    F.col("total_tokens").cast("double")
-                    / F.col("n_docs").cast("double")
-                ).cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("mean_tokens"),
+            exact_round(
+                F.col("total_tokens").cast("double") / F.col("n_docs").cast("double"), 4
+            ).alias("mean_tokens"),
             "n_langs",
             "top_lang",
-            F.round(
-                (
-                    F.col("n_pass").cast("double")
-                    / F.col("n_docs").cast("double")
-                ).cast("decimal(28,10)"),
+            exact_round(
+                F.col("n_pass").cast("double") / F.col("n_docs").cast("double"), 4
+            ).alias("gopher_pass_rate"),
+            exact_round(
+                (F.col("n_docs") - F.col("n_kept")).cast("double")
+                / F.col("n_docs").cast("double"),
                 4,
-            )
-            .cast("double")
-            .alias("gopher_pass_rate"),
-            F.round(
-                (
-                    (F.col("n_docs") - F.col("n_kept")).cast("double")
-                    / F.col("n_docs").cast("double")
-                ).cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("exact_dup_rate"),
+            ).alias("exact_dup_rate"),
         )
     )
 
@@ -3542,7 +3423,7 @@ def batch_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     of incremental_substring_update, not a rescan). Integer counts,
     one rounded IEEE ratio."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     sh = F.transform(
         F.sequence(F.lit(0), F.size(F.col("t")) - NOVELTY_K),
         lambda i: F.substring(
@@ -3582,15 +3463,9 @@ def batch_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
         F.sum(novel).cast("bigint").alias("n_novel"),
-        F.round(
-            (
-                F.sum(novel).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("novelty"),
+        exact_round(
+            F.sum(novel).cast("double") / F.count(F.lit(1)).cast("double"), 6
+        ).alias("novelty"),
     )
 
 
@@ -3667,7 +3542,7 @@ def collocation_llr_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus); margins join back vocabulary-sized (AQE broadcasts);
     the single-row N crossJoins; top-K is TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     big = (
         docs.select(t.alias("t"))
         .filter(F.size("t") >= 2)
@@ -3733,7 +3608,7 @@ def collocation_llr_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w1",
         "w2",
         "c12",
-        F.round(g2.cast("decimal(28,10)"), 6).cast("double").alias("llr"),
+        exact_round(g2, 6).alias("llr"),
     )
     return scored.orderBy(F.col("llr").desc(), "w1", "w2").limit(LLR_TOPK)
 
@@ -3767,10 +3642,6 @@ def _cls_label_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("passes").alias("label")
     )
     return c.join(g, "doc_id")
-
-
-def _r6(c: F.Column) -> F.Column:
-    return F.round(c.cast("decimal(28,10)"), 6).cast("double")
 
 
 @query(
@@ -3842,16 +3713,17 @@ def classifier_confusion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fp",
         "fn",
         "tn",
-        _r6(prec).alias("precision"),
-        _r6(rec).alias("recall"),
-        _r6(
-            F.lit(2.0) * prec * rec / F.nullif(prec + rec, F.lit(0.0))
+        exact_round(prec, 6).alias("precision"),
+        exact_round(rec, 6).alias("recall"),
+        exact_round(
+            F.lit(2.0) * prec * rec / F.nullif(prec + rec, F.lit(0.0)), 6
         ).alias("f1"),
-        _r6(
+        exact_round(
             (F.col("tp") + F.col("tn")).cast("double")
             / (
                 F.col("tp") + F.col("fp") + F.col("fn") + F.col("tn")
-            ).cast("double")
+            ).cast("double"),
+            6,
         ).alias("accuracy"),
     )
 
@@ -3934,12 +3806,13 @@ def classifier_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_pos",
         (F.col("n") - F.col("n_pos")).alias("n_neg"),
-        _r6(
+        exact_round(
             (
                 F.col("r2").cast("double") / F.lit(2.0)
                 - npd * (npd + F.lit(1.0)) / F.lit(2.0)
             )
-            / F.nullif(npd * nnd, F.lit(0.0))
+            / F.nullif(npd * nnd, F.lit(0.0)),
+            6,
         ).alias("auc"),
     )
 
@@ -4005,9 +3878,9 @@ def calibration_bins_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "bin",
         "n_docs",
-        _r6(mean_s).alias("mean_score"),
-        _r6(frac_p).alias("frac_pos"),
-        _r6(F.abs(mean_s - frac_p)).alias("calibration_gap"),
+        exact_round(mean_s, 6).alias("mean_score"),
+        exact_round(frac_p, 6).alias("frac_pos"),
+        exact_round(F.abs(mean_s - frac_p), 6).alias("calibration_gap"),
     )
 
 
@@ -4081,9 +3954,7 @@ def classifier_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bounds = s.agg(F.percentile("score", fr).alias("qv")).select(
         *[
-            F.round(F.element_at("qv", i).cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias(f"d{i}")
+            exact_round(F.element_at("qv", i), 4).alias(f"d{i}")
             for i in range(1, LIFT_DECILES)
         ]
     )
@@ -4113,8 +3984,8 @@ def classifier_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_docs",
         "n_pos",
-        _r6(rate).alias("pos_rate"),
-        _r6(rate / base).alias("lift"),
+        exact_round(rate, 6).alias("pos_rate"),
+        exact_round(rate / base, 6).alias("lift"),
     )
 
 
@@ -4221,14 +4092,7 @@ def source_reputation_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def rate(num):
-        return (
-            F.round(
-                (num.cast("double") / F.col("n_docs")).cast(
-                    "decimal(28,10)"
-                ),
-                6,
-            ).cast("double")
-        )
+        return exact_round(num.cast("double") / F.col("n_docs"), 6)
 
     m = per.select(
         "source",
@@ -4243,16 +4107,12 @@ def source_reputation_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gopher_rate",
         "mean_score",
         "dup_rate",
-        F.round(
-            (
-                F.lit(REP_W_GOPHER) * F.col("gopher_rate")
-                + F.lit(REP_W_SCORE) * F.col("mean_score")
-                + F.lit(REP_W_UNIQ) * (F.lit(1.0) - F.col("dup_rate"))
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.lit(REP_W_GOPHER) * F.col("gopher_rate")
+            + F.lit(REP_W_SCORE) * F.col("mean_score")
+            + F.lit(REP_W_UNIQ) * (F.lit(1.0) - F.col("dup_rate")),
             6,
-        )
-        .cast("double")
-        .alias("reputation"),
+        ).alias("reputation"),
     )
 
 
@@ -4433,7 +4293,7 @@ def intra_doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     n_full = F.floor(F.size("t") / CHUNK_WORDS).cast("bigint")
     # sequence(0, -1) DESCENDS (Spark never returns empty) — guard the
     # no-full-chunk docs with an explicit empty array.
@@ -4515,7 +4375,7 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set — the classic positional-index merge, expressed as
     joins Catalyst can reorder."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     e = docs.select(
         "doc_id", F.posexplode(t).alias("pos", "tok")
     ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tok")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, no_pushdown, spread_scan
+from ..functions.parity import exact_round, md5_int, tokens
 from ..functions.vectors import as_double, cosine, cosine_oracle_sql
 from ..memo import ARTIFACTS, input_identity
 from ..registry import query
@@ -34,12 +35,6 @@ from ..session import scratch_dir
 
 JACCARD_THRESHOLD = 0.6
 COSINE_THRESHOLD = 0.30
-
-
-def _tokens() -> F.Column:
-    """Lowercased whitespace tokens of ``text`` (column API — immune to
-    SQL string-literal backslash mangling)."""
-    return F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
 
 
 def _with_shingles(
@@ -78,7 +73,7 @@ def _with_shingles(
     # carried size(regexp_extract_all(...)) in the scan's DataFilters,
     # ~3 s on one core at sf0.1, then tokenized AGAIN post-exchange).
     out = (
-        spread.select("doc_id", _tokens().alias("__toks"))
+        spread.select("doc_id", tokens().alias("__toks"))
         .filter(no_pushdown(F.size(toks) >= n))
         .select("doc_id", sh.alias("sh"))
     )
@@ -228,9 +223,7 @@ def near_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.filter(jac >= JACCARD_THRESHOLD).select(
         "doc_a",
         "doc_b",
-        # recovery-mirror of the oracle's DECIMAL(28,10) round — the
-        # plain double round is tie-unstable across engines
-        F.round(jac.cast("decimal(28,10)"), 4).cast("double").alias("jaccard"),
+        exact_round(jac, 4).alias("jaccard"),
     )
 
 
@@ -601,11 +594,11 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_tokens())).alias("tok"),
+        F.explode(F.array_distinct(tokens())).alias("tok"),
     )
     h = toks.select(
         "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long").alias("h"),
+        md5_int("tok", 15).cast("long").alias("h"),
     )
     bit_sums = [
         F.sum(
@@ -649,7 +642,7 @@ def _mh_sig_of(t: DataFrame) -> DataFrame:
     path and the persisted-artifact path so they cannot drift."""
     coeffs = _mh_coeffs()
     e = t.select("doc_id", F.explode("sh").alias("shingle"))
-    h = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
+    h = md5_int("shingle", 7).cast("long")
     return e.groupBy("doc_id").agg(
         *[
             F.min((h * a + b) % _MH_P).cast("long").alias(f"m{i}")
@@ -982,9 +975,7 @@ def near_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.round(jac.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("jaccard"),
+            exact_round(jac, 4).alias("jaccard"),
         )
     )
 
@@ -1390,7 +1381,7 @@ def dedup_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each family contributes two scalar aggregates over
     its existing (already scale-shaped) pipeline; the four rows union.
     No new join shapes are introduced."""
-    from .corpus import _chunk_hashes, _tokens
+    from .corpus import _chunk_hashes
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -1418,9 +1409,7 @@ def dedup_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_docs"),
     ).select(F.lit("exact").alias("family"), "n_units", "n_docs")
 
-    chd = docs.select(
-        "doc_id", F.explode(_chunk_hashes(_tokens())).alias("h")
-    )
+    chd = docs.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     duph = (
         chd.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -1557,7 +1546,7 @@ def _gram_frame(docs: DataFrame) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<struct<i:bigint,h:string>>"))
     return (
-        docs.select("doc_id", _tokens().alias("__toks"))
+        docs.select("doc_id", tokens().alias("__toks"))
         .select("doc_id", F.explode(gram_structs).alias("g"))
         .select("doc_id", "g.i", "g.h")
     )
@@ -1768,7 +1757,7 @@ def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join RAW docs first, tokenize AFTER (the chunk_dedup_rewrite
     # discipline): the reconstruction is then a narrow array program
     # on the preserved side of the join.
-    t = _tokens()
+    t = tokens()
     kept = F.when(
         F.col("drop_pos").isNull(), t
     ).otherwise(
@@ -1801,7 +1790,7 @@ def _mh_band_structs() -> F.Column:
     shingle index; per-row array folds give bit-identical signatures).
     Documents with < 3 tokens band to an empty array (they have no
     shingles, hence no signature — same as the batch path's filter)."""
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    toks = tokens()
     n = 3
     sh_raw = F.array_distinct(
         F.transform(
@@ -1814,9 +1803,7 @@ def _mh_band_structs() -> F.Column:
     sh = F.when(F.size(toks) >= n, sh_raw).otherwise(
         F.array().cast("array<string>")
     )
-    hs = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-    )
+    hs = F.transform(sh, lambda s: md5_int(s, 7).cast("long"))
     sigs = [
         F.array_min(F.transform(hs, lambda h: (h * a + b) % _MH_P)).cast(
             "long"
@@ -1925,7 +1912,7 @@ def ingest_admission_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs); the final assembly is three id-only left joins onto the
     batch id list. Corpus text/vectors are touched only to build the
     per-leg indexes — the artifacts a deployment persists."""
-    from .corpus import _chunk_hashes, _tokens as _corpus_tokens
+    from .corpus import _chunk_hashes
     from .similarity import _assign_nearest, _trained_cents
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1933,12 +1920,8 @@ def ingest_admission_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("source") != "src0")
 
     # chunk leg
-    corpus_idx = corpus.select(
-        F.explode(_chunk_hashes(_corpus_tokens())).alias("h")
-    ).distinct()
-    batch_ch = batch.select(
-        "doc_id", F.explode(_chunk_hashes(_corpus_tokens())).alias("h")
-    )
+    corpus_idx = corpus.select(F.explode(_chunk_hashes(tokens())).alias("h")).distinct()
+    batch_ch = batch.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     chunk_dup = (
         batch_ch.join(corpus_idx, "h", "left_semi").select("doc_id").distinct()
     )
@@ -2135,7 +2118,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides — candidate list is n·w but per-doc frames are
     corpus-sized)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    toks = tokens()
     key = F.array_join(F.slice(toks, 1, SNM_KEY_TOKENS), " ")
     cand = _snm_cand(docs, key)
     sh = shingle_index(spark, sf_dir).select("doc_id", "sh")
@@ -2161,9 +2144,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             F.col("rank_gap").cast("bigint").alias("rank_gap"),
-            F.round(jac.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("jaccard"),
+            exact_round(jac, 4).alias("jaccard"),
         )
     )
 
@@ -2255,14 +2236,7 @@ def minhash_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("sha", "shb"))
     na, nb = F.size("sha"), F.size("shb")
     exact = (
-        F.round(
-            (inter.cast("double") / (na + nb - inter)).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("exact_jaccard")
+        exact_round(inter.cast("double") / (na + nb - inter), 4).alias("exact_jaccard")
     )
     est = (agree.cast("double") / _MH_K).alias("est_jaccard")
     j = (
@@ -2277,14 +2251,9 @@ def minhash_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         "est_jaccard",
         "exact_jaccard",
-        F.round(
-            F.abs(F.col("est_jaccard") - F.col("exact_jaccard")).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("abs_err"),
+        exact_round(
+            F.abs(F.col("est_jaccard") - F.col("exact_jaccard")), 4
+        ).alias("abs_err"),
         (F.col("est_jaccard") >= JACCARD_THRESHOLD).alias("est_positive"),
         (F.col("exact_jaccard") >= JACCARD_THRESHOLD).alias(
             "exact_positive"
@@ -2371,7 +2340,7 @@ def snm_multipass_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the written key index the SNM literature assumes).
     toks_cp = (
         spread_scan(docs.select("doc_id", "text"), "doc_id")
-        .select("doc_id", _tokens().alias("__toks"))
+        .select("doc_id", tokens().alias("__toks"))
         .localCheckpoint(eager=True)
     )
     toks = F.col("__toks")
@@ -2414,9 +2383,7 @@ def snm_multipass_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             F.col("n_passes").cast("bigint").alias("n_passes"),
-            F.round(jac.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("jaccard"),
+            exact_round(jac, 4).alias("jaccard"),
         )
     )
 
@@ -2672,17 +2639,15 @@ def dedup_family_overlap_report(
                     F.lit(0.0),
                 )
                 .otherwise(
-                    F.round(
-                        (
-                            F.col("n_both").cast("double")
-                            / (
-                                F.col("n_a")
-                                + F.col("n_b")
-                                - F.col("n_both")
-                            )
-                        ).cast("decimal(28,10)"),
+                    exact_round(
+                        F.col("n_both").cast("double")
+                        / (
+                            F.col("n_a")
+                            + F.col("n_b")
+                            - F.col("n_both")
+                        ),
                         4,
-                    ).cast("double")
+                    )
                 )
                 .alias("overlap_jaccard"),
             )
@@ -2788,13 +2753,11 @@ def dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_closed",
             F.when(F.col("n_wedges") == 0, F.lit(0.0))
             .otherwise(
-                F.round(
-                    (
-                        F.col("n_closed").cast("double")
-                        / F.col("n_wedges").cast("double")
-                    ).cast("decimal(28,10)"),
+                exact_round(
+                    F.col("n_closed").cast("double")
+                    / F.col("n_wedges").cast("double"),
                     4,
-                ).cast("double")
+                )
             )
             .alias("transitivity"),
         )
@@ -2830,7 +2793,7 @@ def _winnow_grams_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row-group local parquet); at deploy scale the gate is a
     no-op and the projection stays fused into the many-file scan."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     grams = F.transform(
         F.sequence(F.lit(0), F.size(F.col("t")) - WINNOW_K),
         lambda i: F.substring(
@@ -3203,7 +3166,7 @@ def winnowing_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("drop_pos").cast("bigint").alias("n_drop"),
     )
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    t = tokens()
     kept = F.when(F.col("drop_pos").isNull(), t).otherwise(
         F.filter(
             t,
@@ -3272,11 +3235,7 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "dup_count",
-        F.round(
-            (F.lit(1.0) / F.col("dup_count")).cast("decimal(28,10)"), 6
-        )
-        .cast("double")
-        .alias("weight"),
+        exact_round(F.lit(1.0) / F.col("dup_count"), 6).alias("weight"),
     )
 
 
@@ -3464,9 +3423,7 @@ def prefix_filter_jaccard_pairs(
     return v.filter(jac >= PPJOIN_TAU).select(
         "doc_a",
         "doc_b",
-        F.round(jac.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("jaccard"),
+        exact_round(jac, 4).alias("jaccard"),
     )
 
 
@@ -3533,7 +3490,7 @@ def shard_stitch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is a hash-join of two fingerprint columns, linear
     in docs."""
     docs = load_table(spark, sf_dir, "documents")
-    tk = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    tk = tokens()
     base = docs.select("doc_id", tk.alias("tk")).filter(
         F.size("tk") >= 2 * STITCH_K
     )

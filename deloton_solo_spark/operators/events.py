@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.epoch import epoch_ms, epoch_us
+from ..functions.parity import exact_round, md5_int
 from ..registry import query
 
 SESSION_GAP_MIN = 30
@@ -559,26 +560,20 @@ def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return legs.groupBy("step_pair").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.round(
-            (F.percentile("gap_us", F.lit(0.5)) / 1000000.0).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("p50_sec"),
-        F.round(
-            (F.percentile("gap_us", F.lit(0.9)) / 1000000.0).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("p90_sec"),
+        exact_round(F.percentile("gap_us", F.lit(0.5)) / 1000000.0, 4).alias("p50_sec"),
+        exact_round(F.percentile("gap_us", F.lit(0.9)) / 1000000.0, 4).alias("p90_sec"),
     )
 
 
 # X163 — deterministic A/B experiment readout -------------------------------
+def _ab_arm() -> F.Column:
+    """The A/B arm of ``user_id``: ``A`` when the first hex digit of its
+    salted hash is below 8. Shared by the experiment and its SRM check,
+    so both split users the same way."""
+    salted = F.concat(F.lit("ab-"), F.col("user_id").cast("string"))
+    return F.when(md5_int(salted, 1).cast("bigint") < 8, "A").otherwise("B")
+
+
 @query(
     "ab_experiment_report",
     oracle="""
@@ -642,19 +637,7 @@ def ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one user-keyed partial agg, then a 2-group agg — the whole
     experiment reads in two exchanges at any scale."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        < 8,
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
+    arm = _ab_arm()
     y = (
         ev.groupBy("user_id")
         .agg(
@@ -686,14 +669,13 @@ def ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_a = (F.col("syy_a") - F.col("sy_a") * F.col("sy_a") / na) / (na - 1)
     var_b = (F.col("syy_b") - F.col("sy_b") * F.col("sy_b") / nb) / (nb - 1)
     z = (mean_b - mean_a) / F.sqrt(var_a / na + var_b / nb)
-    r4 = lambda c, n: F.round(c.cast("decimal(28,10)"), n).cast("double")  # noqa: E731
     return a.crossJoin(b).select(
         "n_a",
         "n_b",
-        r4(mean_a, 4).alias("mean_a"),
-        r4(mean_b, 4).alias("mean_b"),
-        r4(mean_b - mean_a, 4).alias("diff"),
-        r4(z, 4).alias("z_welch"),
+        exact_round(mean_a, 4).alias("mean_a"),
+        exact_round(mean_b, 4).alias("mean_b"),
+        exact_round(mean_b - mean_a, 4).alias("diff"),
+        exact_round(z, 4).alias("z_welch"),
     )
 
 
@@ -831,9 +813,7 @@ def rolling_median_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "minute",
         "close",
-        F.round(med.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias(f"med{ROLL_MED_BARS}"),
+        exact_round(med, 4).alias(f"med{ROLL_MED_BARS}"),
     )
 
 
@@ -913,18 +893,14 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum("w_us").cast("bigint").alias("covered_us"),
-            F.round(
-                (
-                    F.sum(
-                        (F.col("cents") * F.col("w_us")).cast("decimal(38,0)")
-                    ).cast("double")
-                    / 100.0
-                    / F.sum("w_us").cast("double")
-                ).cast("decimal(28,10)"),
+            exact_round(
+                F.sum(
+                    (F.col("cents") * F.col("w_us")).cast("decimal(38,0)")
+                ).cast("double")
+                / 100.0
+                / F.sum("w_us").cast("double"),
                 4,
-            )
-            .cast("double")
-            .alias("twap"),
+            ).alias("twap"),
         )
     )
 
@@ -992,12 +968,8 @@ def hour_of_week_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "hr",
         "n",
-        F.round(cell_mean.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("mean_value"),
-        F.round((cell_mean / global_mean).cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("seasonality_index"),
+        exact_round(cell_mean, 4).alias("mean_value"),
+        exact_round(cell_mean / global_mean, 4).alias("seasonality_index"),
     )
 
 
@@ -1129,15 +1101,9 @@ def markov_sequence_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.groupBy("user_id", "session_seq")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_trans"),
-            F.round(
-                (
-                    F.sum("nll").cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                ).cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("avg_nll"),
+            exact_round(
+                F.sum("nll").cast("double") / F.count(F.lit(1)).cast("double"), 4
+            ).alias("avg_nll"),
         )
         .filter(F.col("n_trans") >= MKV_MIN_TRANS)
         .orderBy(F.col("avg_nll").desc(), "user_id", "session_seq")
@@ -1244,12 +1210,8 @@ def seasonal_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "value",
-            F.round(F.col("expected").cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("expected"),
-            F.round(rz.cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("rz"),
+            exact_round(F.col("expected"), 4).alias("expected"),
+            exact_round(rz, 4).alias("rz"),
         )
     )
 
@@ -1350,18 +1312,10 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cohort",
         "week_offset",
         "n_users",
-        F.round(F.col("revenue").cast("double").cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("revenue"),
-        F.round(
-            (
-                F.col("cum_rev").cast("double")
-                / F.col("n_users").cast("double")
-            ).cast("decimal(28,10)"),
-            4,
-        )
-        .cast("double")
-        .alias("cum_ltv_per_user"),
+        exact_round(F.col("revenue").cast("double"), 4).alias("revenue"),
+        exact_round(
+            F.col("cum_rev").cast("double") / F.col("n_users").cast("double"), 4
+        ).alias("cum_ltv_per_user"),
     )
 
 
@@ -1436,15 +1390,11 @@ def funnel_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_int(viewed).alias("step_view"),
         as_int(clicked).alias("step_click"),
         as_int(purchased).alias("step_purchase"),
-        F.round(
-            (
-                F.sum(F.when(purchased, 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(F.when(purchased, 1).otherwise(0)).cast("double")
+            / F.count(F.lit(1)).cast("double"),
             4,
-        )
-        .cast("double")
-        .alias("conversion_rate"),
+        ).alias("conversion_rate"),
     )
 
 
@@ -1602,9 +1552,7 @@ def rolling_correlation_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (F.col("n") >= 3) & (vx > 0) & (vy > 0),
-            F.round((num / F.sqrt(vx * vy)).cast("decimal(28,10)"), 4).cast(
-                "double"
-            ),
+            exact_round(num / F.sqrt(vx * vy), 4),
         ).alias("roll_corr"),
     )
 
@@ -1677,17 +1625,13 @@ def churn_feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             cnt("click"),
             cnt("purchase"),
             cnt("error"),
-            F.round(
-                (
-                    F.sum(F.col("value").cast("decimal(18,2)")).cast(
-                        "double"
-                    )
-                    / F.count(F.lit(1)).cast("double")
-                ).cast("decimal(28,10)"),
+            exact_round(
+                F.sum(F.col("value").cast("decimal(18,2)")).cast(
+                    "double"
+                )
+                / F.count(F.lit(1)).cast("double"),
                 4,
-            )
-            .cast("double")
-            .alias("avg_value"),
+            ).alias("avg_value"),
         )
         .select(
             "user_id",
@@ -1758,17 +1702,13 @@ def event_order_inversion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum(inv).cast("bigint").alias("n_inversions"),
-        F.round(
-            (
-                F.sum(inv).cast("double")
-                / F.greatest(F.count(F.lit(1)) - 1, F.lit(1)).cast(
-                    "double"
-                )
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(inv).cast("double")
+            / F.greatest(F.count(F.lit(1)) - 1, F.lit(1)).cast(
+                "double"
+            ),
             6,
-        )
-        .cast("double")
-        .alias("inversion_rate"),
+        ).alias("inversion_rate"),
         F.coalesce(
             F.max(
                 F.when(
@@ -1832,15 +1772,7 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one user-distinct reduction (the experiment's unit of
     randomization) + a two-cell conditional count to a single row."""
     ev = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    arm = F.when(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))),
-            1,
-            1,
-        ), 16, 10).cast("bigint")
-        < 8,
-        "A",
-    ).otherwise("B")
+    arm = _ab_arm()
     s = ev.select(arm.alias("arm")).agg(
         F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))
         .cast("bigint")
@@ -1856,9 +1788,7 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n_a",
         "n_b",
-        F.round(chi2.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("chi2_srm"),
+        exact_round(chi2, 6).alias("chi2_srm"),
         (chi2 > SRM_CHI2_CRIT).alias("srm_detected"),
     )
 
@@ -2053,12 +1983,8 @@ def event_burstiness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "event_type",
         "n_hours",
-        F.round(mean.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("mean_per_hour"),
-        F.round(fano.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("fano"),
+        exact_round(mean, 6).alias("mean_per_hour"),
+        exact_round(fano, 6).alias("fano"),
         (fano > FANO_BURSTY).alias("is_bursty"),
     )
 
@@ -2203,15 +2129,9 @@ def autocorrelation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "lag",
             "n_pairs",
-            F.round(
-                (
-                    F.col("sp").cast("double")
-                    / F.col("ss").cast("double")
-                ).cast("decimal(28,10)"),
-                6,
-            )
-            .cast("double")
-            .alias("acf"),
+            exact_round(
+                F.col("sp").cast("double") / F.col("ss").cast("double"), 6
+            ).alias("acf"),
         )
     )
 
@@ -2503,17 +2423,8 @@ def survival_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t_days",
             "n_risk",
             "d",
-            F.round(
-                (F.col("d").cast("double") / F.col("n_risk")).cast(
-                    "decimal(28,10)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("hazard"),
-            F.round(F.sum("term").over(wc).cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("cum_hazard"),
+            exact_round(F.col("d").cast("double") / F.col("n_risk"), 6).alias("hazard"),
+            exact_round(F.sum("term").over(wc), 6).alias("cum_hazard"),
         )
         .filter(F.col("d") > 0)
         .select(
@@ -2635,15 +2546,11 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("i_end") - F.col("i_start"))
         .cast("bigint")
         .alias("covered_us"),
-        F.round(
-            (
-                F.sum(F.col("i_end") - F.col("i_start")).cast("double")
-                / (F.max("i_end") - F.min("i_start")).cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(F.col("i_end") - F.col("i_start")).cast("double")
+            / (F.max("i_end") - F.min("i_start")).cast("double"),
             6,
-        )
-        .cast("double")
-        .alias("coverage_ratio"),
+        ).alias("coverage_ratio"),
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.parity import exact_round
 from ..registry import query
 
 META_SCHEMA = "doc_id long, n_bytes long, width long, height long"
@@ -494,8 +495,6 @@ def multimodal_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "frame_idx",
         "rms_energy",
-        F.round(delta.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("energy_delta"),
+        exact_round(delta, 6).alias("energy_delta"),
         F.coalesce(delta > SCENE_CUT_DELTA, F.lit(False)).alias("is_cut"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.parity import exact_round, md5_int, tokens
 from ..functions.quantiles import exact_quantiles_two_pass
 from ..functions.windows import prefix_sum
 from ..registry import query
@@ -114,14 +115,8 @@ def importance_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     p = F.least(F.lit(1.0), F.col("n_chars") / SAMPLE_SAT_CHARS)
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("samp-"), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
+        md5_int(
+            F.concat(F.lit("samp-"), F.col("doc_id").cast("string")), 7
         ).cast("long")
         / _U_DENOM
     )
@@ -170,11 +165,7 @@ def doc_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
     )
     c = prefix_sum(t, F.col("n_tokens"), "doc_id", "__cum_incl")
     cum_excl = F.col("__cum_incl") - F.col("n_tokens")
@@ -287,15 +278,7 @@ def dataset_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 1
     ) / float(_MIX_DENOM)
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix-"), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("mix-"), F.col("doc_id").cast("string")), 7).cast("long")
         / _U_DENOM
     )
     return docs.filter(u < rate).select(
@@ -633,15 +616,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a K-row driver merge, never a global sort exchange."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wsk-"), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("wsk-"), F.col("doc_id").cast("string")), 7).cast("long")
         / _U_DENOM
     )
     key_raw = F.pow(u, F.lit(1.0) / F.col("n_chars"))
@@ -652,9 +627,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.col("n_chars").cast("bigint").alias("weight"),
-            F.round(F.col("key_raw").cast("decimal(28,10)"), 4)
-            .cast("double")
-            .alias("es_key"),
+            exact_round(F.col("key_raw"), 4).alias("es_key"),
         )
     )
 
@@ -724,21 +697,14 @@ def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     raw = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("neg-"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("-"),
-                        F.col("j").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        md5_int(
+            F.concat(
+                F.lit("neg-"),
+                F.col("doc_id").cast("string"),
+                F.lit("-"),
+                F.col("j").cast("string"),
             ),
-            16,
-            10,
+            12,
         ).cast("bigint")
         % F.col("n_docs")
     )
@@ -836,11 +802,7 @@ def doc_pack_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "text",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
     )
     c = prefix_sum(
         t.select("doc_id", "n_tokens"),
@@ -934,11 +896,7 @@ def padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal idiom. One scan at any scale."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
     )
     g = t.agg(F.max("n_tokens").cast("bigint").alias("global_max"))
     b = (
@@ -968,13 +926,9 @@ def padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             pad_n.alias("pad_naive"),
             F.when(
                 pad_n > 0,
-                F.round(
-                    (
-                        F.lit(1.0)
-                        - pad_b.cast("double") / pad_n.cast("double")
-                    ).cast("decimal(28,10)"),
-                    4,
-                ).cast("double"),
+                exact_round(
+                    F.lit(1.0) - pad_b.cast("double") / pad_n.cast("double"), 4
+                ),
             ).alias("pad_savings"),
         )
     )
@@ -1043,20 +997,12 @@ def curriculum_bucket_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary frame, broadcast back via crossJoin; the phase ladder is
     a narrow CASE — no per-row shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-    )
+    ws = F.size(tokens())
     scored = docs.select(
         "doc_id",
-        F.round(
-            (
-                F.col("n_chars").cast("double")
-                / F.greatest(ws, F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
-            4,
-        )
-        .cast("double")
-        .alias("difficulty"),
+        exact_round(
+            F.col("n_chars").cast("double") / F.greatest(ws, F.lit(1)).cast("double"), 4
+        ).alias("difficulty"),
     ).localCheckpoint()
     # ^ pinned once: the two-pass quantile's three scans plus the final
     # assignment would each replay the regex tokenization otherwise
@@ -1068,11 +1014,7 @@ def curriculum_bucket_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bounds = q.select(
         *[
-            F.round(
-                F.element_at("qv", i).cast("decimal(28,10)"), 4
-            )
-            .cast("double")
-            .alias(f"d{i}")
+            exact_round(F.element_at("qv", i), 4).alias(f"d{i}")
             for i in range(1, CURRICULUM_PHASES)
         ]
     )
@@ -1257,15 +1199,9 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_classes"),
         F.min("k").cast("bigint").alias("min_k"),
         F.sum(risky).cast("bigint").alias("n_rows_at_risk"),
-        F.round(
-            (
-                F.sum(risky).cast("double")
-                / F.sum("k").cast("double")
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("at_risk_share"),
+        exact_round(
+            F.sum(risky).cast("double") / F.sum("k").cast("double"), 6
+        ).alias("at_risk_share"),
         F.min("l").cast("bigint").alias("min_l"),
     )
 
@@ -1418,9 +1354,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_true")
     )
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dp-"), F.col("lang"))), 1, 7), 16, 10).cast(
-            "long"
-        )
+        md5_int(F.concat(F.lit("dp-"), F.col("lang")), 7).cast("long")
         + F.lit(0.5)
     ) / F.lit(_U_DENOM)
     b = F.lit(1.0 / DP_EPSILON)
@@ -1429,9 +1363,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_true",
         b.alias("b_scale"),
-        F.round((F.col("n_true") + noise).cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("noisy_count"),
+        exact_round(F.col("n_true") + noise, 4).alias("noisy_count"),
     )
 
 
@@ -1655,9 +1587,7 @@ def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. At 100 TB the heavy stage is exactly one pass over
     text."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-    ).cast("bigint")
+    toks = F.size(tokens()).cast("bigint")
     # Pin the LANGUAGE-sized aggregate once: the ladder, the budget,
     # the segment row, and the level scalar all branch from it, and
     # without the barrier each branch re-runs the full tokenize pass

@@ -26,19 +26,18 @@ from ..functions.windows import prefix_sum
 from ..registry import query
 
 _MARKER = "signup"
+#: prefix-sum bucket width, deliberately small at test scale so the
+#: multi-bucket carry path of the prefix sum is exercised.
+_RIDE_BUCKET_SIZE = 100
 
 
-def _with_ride(spark: SparkSession, sf_dir: str, bucket_size: int = 100) -> DataFrame:
-    """events + ride id = running count of marker rows (T1/T2).
-
-    ``bucket_size`` is deliberately small at test scale so the
-    multi-bucket carry path of the prefix sum is exercised.
-    """
+def _with_ride(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events + ride id = running count of marker rows (T1/T2)."""
     ev = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("msg_idx"), "user_id", "event_type", "ts", "value"
     )
     marker = (F.col("event_type") == _MARKER).cast("long")
-    return prefix_sum(ev, marker, "msg_idx", "ride_id", bucket_size=bucket_size)
+    return prefix_sum(ev, marker, "msg_idx", "ride_id", bucket_size=_RIDE_BUCKET_SIZE)
 
 
 # T1/T2 -------------------------------------------------------------------

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_scan
+from ..functions.parity import exact_round
 from ..functions.vectors import as_double, cosine, cosine_oracle_sql, dot
 from ..memo import ARTIFACTS, input_identity
 from ..registry import query
@@ -1281,15 +1282,11 @@ def semantic_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = lab.groupBy("cent_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("lang").alias("n_langs"),
-        F.round(
-            (
-                F.sum(F.col("score").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(F.col("score").cast("decimal(18,4)")).cast("double")
+            / F.count(F.lit(1)),
             4,
-        )
-        .cast("double")
-        .alias("mean_score"),
+        ).alias("mean_score"),
     )
     return stats.join(F.broadcast(top), "cent_id").select(
         "cent_id", "n_docs", "n_langs", "top_lang", "mean_score"
@@ -1371,15 +1368,11 @@ def cross_modal_alignment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cls = classifier_frame(docs, feature_cols=False).select("doc_id", "score")
     lab = assign.withColumnRenamed("vec_id", "doc_id").join(cls, "doc_id")
     cm = lab.groupBy("cent_id").agg(
-        F.round(
-            (
-                F.sum(F.col("score").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(F.col("score").cast("decimal(18,4)")).cast("double")
+            / F.count(F.lit(1)),
             4,
-        )
-        .cast("double")
-        .alias("cell_mean_score")
+        ).alias("cell_mean_score")
     )
     diff = F.col("score") - F.col("cell_mean_score")
     return (
@@ -1458,15 +1451,9 @@ def semantic_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lab.groupBy("cent_id").agg(
         F.sum("is_corpus").cast("bigint").alias("n_corpus"),
         F.sum(1 - F.col("is_corpus")).cast("bigint").alias("n_new"),
-        F.round(
-            (
-                F.sum(1 - F.col("is_corpus")).cast("double")
-                / F.count(F.lit(1))
-            ).cast("decimal(28,10)"),
-            4,
-        )
-        .cast("double")
-        .alias("new_share"),
+        exact_round(
+            F.sum(1 - F.col("is_corpus")).cast("double") / F.count(F.lit(1)), 4
+        ).alias("new_share"),
     )
 
 
@@ -1727,15 +1714,9 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign.groupBy(F.col("s").cast("bigint").alias("s")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.count_distinct("k").cast("bigint").alias("codes_used"),
-        F.round(
-            (
-                F.sum("l2").cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("mse"),
+        exact_round(
+            F.sum("l2").cast("double") / F.count(F.lit(1)).cast("double"), 6
+        ).alias("mse"),
         F.max("l2").cast("double").alias("max_sq_err"),
     )
 
@@ -1848,12 +1829,8 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(
         "label",
         "n_vecs",
-        F.round(F.col("mean_norm_raw").cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("mean_norm"),
-        F.round(F.col("std_norm_raw").cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("std_norm"),
+        exact_round(F.col("mean_norm_raw"), 6).alias("mean_norm"),
+        exact_round(F.col("std_norm_raw"), 6).alias("std_norm"),
     ).agg(F.sum(out_flag).cast("bigint").alias("n_outliers"))
 
 
@@ -1946,12 +1923,8 @@ def embedding_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "dim",
         "n_vecs",
-        F.round(mean.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("mean_val"),
-        F.round(std.cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("std_val"),
+        exact_round(mean, 6).alias("mean_val"),
+        exact_round(std, 6).alias("std_val"),
         (std < DIM_DEAD_STD).alias("is_dead"),
     )
 
@@ -2019,15 +1992,9 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "k_exact",
         "n_hit",
-        F.round(
-            (
-                F.col("n_hit").cast("double")
-                / F.col("k_exact").cast("double")
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("recall_at_k"),
+        exact_round(
+            F.col("n_hit").cast("double") / F.col("k_exact").cast("double"), 6
+        ).alias("recall_at_k"),
     )
 
 
@@ -2228,20 +2195,11 @@ def embedding_top_pc_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select(
             "dim",
-            F.round(F.col("v").cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("loading"),
-            F.round((F.col("lam") / F.col("n")).cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("eigenvalue"),
-            F.round(
-                (F.col("lam") / F.col("ss").cast("double")).cast(
-                    "decimal(28,10)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("var_share"),
+            exact_round(F.col("v"), 6).alias("loading"),
+            exact_round(F.col("lam") / F.col("n"), 6).alias("eigenvalue"),
+            exact_round(
+                F.col("lam") / F.col("ss").cast("double"), 6
+            ).alias("var_share"),
         )
     )
 
@@ -2334,19 +2292,14 @@ def embedding_debias_toppc(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2d = F.col("n2").cast("double")
     pd = F.col("p").cast("double")
 
-    def r6(c):
-        return F.round(c.cast("decimal(28,10)"), 6).cast("double")
-
     return per.select(
         "vec_id",
-        r6(F.sqrt(n2d)).alias("norm"),
-        r6(pd).alias("proj_pc1"),
-        r6(F.sqrt(F.greatest(n2d - pd * pd, F.lit(0.0)))).alias(
+        exact_round(F.sqrt(n2d), 6).alias("norm"),
+        exact_round(pd, 6).alias("proj_pc1"),
+        exact_round(F.sqrt(F.greatest(n2d - pd * pd, F.lit(0.0))), 6).alias(
             "resid_norm"
         ),
-        r6((pd * pd) / F.nullif(n2d, F.lit(0.0))).alias(
-            "pc1_energy_share"
-        ),
+        exact_round((pd * pd) / F.nullif(n2d, F.lit(0.0)), 6).alias("pc1_energy_share"),
     )
 
 
@@ -2804,16 +2757,9 @@ def knn_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_edges",
             "n_triangles",
             "n_wedges",
-            F.round(
-                (
-                    F.lit(3.0)
-                    * F.col("n_triangles")
-                    / F.col("n_wedges")
-                ).cast("decimal(28,10)"),
-                6,
-            )
-            .cast("double")
-            .alias("global_clustering"),
+            exact_round(
+                F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), 6
+            ).alias("global_clustering"),
         )
     )
 
@@ -2966,14 +2912,9 @@ def label_propagation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(seeded, 1).otherwise(0)).cast("bigint").alias("n_seeds"),
         n_prop.alias("n_propagated"),
         n_corr.alias("n_correct"),
-        F.round(
-            (
-                n_corr.cast("double") / F.nullif(n_prop, F.lit(0))
-            ).cast("decimal(28,10)"),
-            4,
-        )
-        .cast("double")
-        .alias("accuracy"),
+        exact_round(
+            n_corr.cast("double") / F.nullif(n_prop, F.lit(0)), 4
+        ).alias("accuracy"),
     )
 
 
@@ -3046,9 +2987,7 @@ def int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         lambda x: F.greatest(
             F.least(
-                F.round((x / sc).cast("decimal(28,10)"), 0).cast(
-                    "double"
-                ),
+                exact_round(x / sc, 0),
                 F.lit(float(INT8_LEVELS)),
             ),
             F.lit(float(-INT8_LEVELS)),
@@ -3056,12 +2995,11 @@ def int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * sc,
     )
     qz = m.select("vec_id", "v", sc.alias("sc"), dq.alias("dq"))
-    r = lambda c, n: F.round(c.cast("decimal(28,10)"), n).cast("double")
     return qz.select(
         "vec_id",
-        r(F.col("sc"), 6).alias("scale"),
-        r(cosine(F.col("v"), F.col("dq")), 4).alias("cos_quantized"),
-        r(
+        exact_round(F.col("sc"), 6).alias("scale"),
+        exact_round(cosine(F.col("v"), F.col("dq")), 4).alias("cos_quantized"),
+        exact_round(
             F.array_max(
                 F.zip_with("v", "dq", lambda a, b: F.abs(a - b))
             ),

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..catalog import TABLES, load_table, register_views
+from ..functions.parity import exact_round, md5_int
 from ..registry import query
 
 DELETE_KEYS = (1, 2, 3)
@@ -794,15 +795,11 @@ def incremental_agg_maintenance(
         )
         .cast("bigint")
         .alias("n_orders"),
-        F.round(
-            (
-                F.coalesce(F.col("r_b").cast("decimal(28,2)"), zero)
-                + F.coalesce(F.col("r_d").cast("decimal(28,2)"), zero)
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.coalesce(F.col("r_b").cast("decimal(28,2)"), zero)
+            + F.coalesce(F.col("r_d").cast("decimal(28,2)"), zero),
             4,
-        )
-        .cast("double")
-        .alias("revenue"),
+        ).alias("revenue"),
     )
 
 
@@ -835,22 +832,17 @@ def _manifest_sql(src: str) -> str:
     """
 
 
+def _manifest_shard() -> F.Column:
+    """The manifest shard of ``doc_id``, a salted content hash."""
+    salted = F.concat(F.lit("m-"), F.col("doc_id").cast("string"))
+    return md5_int(salted, 4).cast("bigint") % MANIFEST_SHARDS
+
+
 def _manifest_frame(docs: DataFrame) -> DataFrame:
     """Spark twin of ``_manifest_sql`` over any (doc_id, text,
     n_chars) frame — shared by X277 and the X280 release gate."""
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("m-"), F.col("doc_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % MANIFEST_SHARDS
-    )
-    h = F.conv(F.substring(F.md5("text"), 1, 13), 16, 10).cast("bigint")
+    shard = _manifest_shard()
+    h = md5_int("text", 13).cast("bigint")
     return (
         docs.select(
             shard.alias("shard"),
@@ -1042,18 +1034,7 @@ def corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nm = _manifest_frame(docs)
     pm = _manifest_frame(prev)
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("m-"), F.col("doc_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % MANIFEST_SHARDS
-    )
+    shard = _manifest_shard()
     exp = (
         docs.select(
             shard.alias("shard"),

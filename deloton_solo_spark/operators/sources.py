@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import parsing as P
 from ..functions.logsim import LOG_CTE, synthetic_log
+from ..functions.parity import exact_round
 from ..registry import query
 
 #: Simulated topic/partition-count (main.py:42 topic "deloton").
@@ -270,14 +271,9 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = bo.hint("merge").join(bl, bo.o_orderkey == bl.l_orderkey)
     return j.groupBy("o_orderkey", "o_custkey").agg(
         F.count(F.lit(1)).alias("n_items"),
-        F.round(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("total_qty"),
+        exact_round(
+            F.sum(F.col("l_quantity").cast("decimal(18,2)")), 4
+        ).alias("total_qty"),
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.logsim import LOG_CTE, synthetic_log
+from ..functions.parity import exact_round
 from ..functions.ridelog import RIDE_LOG_CTE, well_formed_ride_log
 from ..operators import events as _events
 from ..operators.sources import WIRE_CTE, kafka_wire
@@ -759,9 +760,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(raw)
     return s.select(
         "event_type",
-        F.round(corrected.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("est_users"),
+        exact_round(corrected, 4).alias("est_users"),
     )
 
 

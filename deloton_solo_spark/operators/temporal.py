@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.parity import exact_round
 from ..registry import query
 
 _BIN_DAYS = 30
@@ -414,9 +415,7 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("v").isNotNull(), F.col("v"))
         .when(F.col("pv").isNull(), F.col("nv"))
         .when(F.col("nv").isNull(), F.col("pv"))
-        .otherwise(
-            F.round(interp.cast("decimal(28,10)"), 4).cast("double")
-        )
+        .otherwise(exact_round(interp, 4))
         .alias("value_interp"),
     )
 
@@ -520,9 +519,7 @@ def ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("minute_ts", "yyyy-MM-dd HH:mm").alias("minute"),
         "bar",
         navail.cast("bigint").alias("n_bars_used"),
-        F.round((num / den).cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("ewma"),
+        exact_round(num / den, 4).alias("ewma"),
     )
 
 
@@ -739,34 +736,18 @@ def shipping_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     within = F.col("lag_days").between(0, SLA_DAYS)
     return lag.groupBy("priority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-        F.round(
-            F.percentile("lag_days", F.lit(0.5)).cast("decimal(28,10)"), 4
-        )
-        .cast("double")
-        .alias("p50_days"),
-        F.round(
-            F.percentile("lag_days", F.lit(0.9)).cast("decimal(28,10)"), 4
-        )
-        .cast("double")
-        .alias("p90_days"),
-        F.round(
-            (
-                F.sum(F.when(within, 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(F.percentile("lag_days", F.lit(0.5)), 4).alias("p50_days"),
+        exact_round(F.percentile("lag_days", F.lit(0.9)), 4).alias("p90_days"),
+        exact_round(
+            F.sum(F.when(within, 1).otherwise(0)).cast("double")
+            / F.count(F.lit(1)).cast("double"),
             4,
-        )
-        .cast("double")
-        .alias("pct_within_sla"),
-        F.round(
-            (
-                F.sum(F.when(F.col("lag_days") < 0, 1).otherwise(0)).cast(
-                    "double"
-                )
-                / F.count(F.lit(1)).cast("double")
-            ).cast("decimal(28,10)"),
+        ).alias("pct_within_sla"),
+        exact_round(
+            F.sum(F.when(F.col("lag_days") < 0, 1).otherwise(0)).cast(
+                "double"
+            )
+            / F.count(F.lit(1)).cast("double"),
             4,
-        )
-        .cast("double")
-        .alias("pct_negative"),
+        ).alias("pct_negative"),
     )

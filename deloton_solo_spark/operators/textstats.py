@@ -13,11 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.parity import exact_round, tokens
 from ..registry import query
 
-#: whitespace tokens / BPE-ish word-number-punct split — same regex
-#: accepted by Java regex (Spark) and RE2 (DuckDB).
-_WS = r"\S+"
+#: BPE-ish word-number-punct split — a regex Java (Spark) and RE2
+#: (DuckDB) read alike; whitespace tokens are ``parity.tokens()``.
 _BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 _PUNCT = r"[^A-Za-z0-9\s]"
 
@@ -31,15 +31,15 @@ _LANG_PATTERNS = {
 _STOP = _LANG_PATTERNS["en"]
 
 
-def _count(pattern: str, col: str = "text", lower: bool = True) -> F.Column:
+def _count(pattern: str, lower: bool = True) -> F.Column:
     # Column API with F.lit(pattern): avoids Spark SQL string-literal
     # backslash mangling, and pins group index 0 (Spark defaults to 1).
-    src = F.lower(F.col(col)) if lower else F.col(col)
+    src = F.lower(F.col("text")) if lower else F.col("text")
     return F.size(F.regexp_extract_all(src, F.lit(pattern), 0))
 
 
-def _count_sql(pattern: str, col: str = "text", lower: bool = True) -> str:
-    src = f"lower({col})" if lower else col
+def _count_sql(pattern: str, lower: bool = True) -> str:
+    src = "lower(text)" if lower else "text"
     return f"len(regexp_extract_all({src}, '{pattern}'))"
 
 
@@ -48,7 +48,7 @@ def _count_sql(pattern: str, col: str = "text", lower: bool = True) -> str:
     "token_count",
     oracle=f"""
     SELECT doc_id,
-           {_count_sql(_WS)} AS n_ws_tokens,
+           len(regexp_extract_all(lower(text), '\\S+')) AS n_ws_tokens,
            {_count_sql(_BPE)} AS n_bpe_tokens,
            length(text) AS n_chars_actual
     FROM documents
@@ -61,7 +61,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, simplified to a Java∩RE2-portable pattern)."""
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        _count(_WS).cast("long").alias("n_ws_tokens"),
+        F.size(tokens()).cast("long").alias("n_ws_tokens"),
         _count(_BPE).cast("long").alias("n_bpe_tokens"),
         F.length("text").cast("long").alias("n_chars_actual"),
     )
@@ -73,8 +73,8 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang, source,
            COUNT(*) AS n_docs,
-           CAST(SUM({_count_sql(_WS)}) AS BIGINT) AS total_tokens,
-           CAST(ROUND(CAST(CAST(SUM({_count_sql(_WS)}) AS DOUBLE) / COUNT(*)
+           CAST(SUM(len(regexp_extract_all(lower(text), '\\S+'))) AS BIGINT) AS total_tokens,
+           CAST(ROUND(CAST(CAST(SUM(len(regexp_extract_all(lower(text), '\\S+'))) AS DOUBLE) / COUNT(*)
                            AS DECIMAL(28,10)), 4) AS DOUBLE) AS avg_tokens,
            CAST(ROUND(CAST(CAST(SUM(length(text)) AS DOUBLE) / COUNT(*)
                            AS DECIMAL(28,10)), 4) AS DOUBLE) AS avg_chars
@@ -88,7 +88,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume, averages. Integer sums → exact parity; one partial-agg
     shuffle on a low-cardinality key."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = _count(_WS).cast("long")
+    ws = F.size(tokens()).cast("long")
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(ws).alias("total_tokens"),
@@ -163,7 +163,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH m AS (
       SELECT doc_id,
              length(text) AS n_chars_actual,
-             {_count_sql(_WS)} AS n_tokens,
+             len(regexp_extract_all(lower(text), '\\S+')) AS n_tokens,
              {_count_sql(_PUNCT)} AS n_punct,
              {_count_sql(_STOP)} AS n_stop
       FROM documents
@@ -196,28 +196,23 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars_actual"),
-        _count(_WS).cast("long").alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
         _count(_PUNCT).cast("long").alias("n_punct"),
         _count(_STOP).cast("long").alias("n_stop"),
     )
-    def r4(c: F.Column) -> F.Column:
-        # recovery-mirror of the oracle: recover the double into
-        # DECIMAL(28,10), round half-up, back to double — identical
-        # transform of identical inputs on both engines, so ties can't
-        # split (operators/pipeline.py note)
-        return F.round(c.cast("decimal(28,10)"), 4).cast("double")
-
-    punct_ratio = r4(
+    punct_ratio = exact_round(
         F.col("n_punct").cast("double")
-        / F.greatest(F.col("n_chars_actual"), F.lit(1))
+        / F.greatest(F.col("n_chars_actual"), F.lit(1)),
+        4,
     )
-    stop_ratio = r4(
-        F.col("n_stop").cast("double") / F.greatest(F.col("n_tokens"), F.lit(1))
+    stop_ratio = exact_round(
+        F.col("n_stop").cast("double") / F.greatest(F.col("n_tokens"), F.lit(1)), 4
     )
-    quality = r4(
+    quality = exact_round(
         0.5 * F.least(F.col("n_tokens").cast("double") / 100, F.lit(1.0))
         + 0.3 * (1.0 - punct_ratio)
-        + 0.2 * F.least(stop_ratio * 5, F.lit(1.0))
+        + 0.2 * F.least(stop_ratio * 5, F.lit(1.0)),
+        4,
     )
     return m.select(
         "doc_id",
@@ -260,7 +255,7 @@ TOP_NGRAMS_K = 5
     "top_ngrams_per_lang",
     oracle=f"""
     WITH toks AS (
-      SELECT lang, regexp_extract_all(lower(text), '{_WS}') AS t
+      SELECT lang, regexp_extract_all(lower(text), '\\S+') AS t
       FROM documents
     ),
     grams AS (
@@ -287,7 +282,7 @@ def top_ngrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, bigram); final ranking window over the (tiny) per-lang
     count table."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0)
+    t = tokens()
     grams = (
         docs.select("lang", t.alias("t"))
         .filter(F.size("t") >= 2)
@@ -409,9 +404,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit(r"\S+"), 0
-            ).alias("__toks"),
+            tokens().alias("__toks"),
         )
         .filter(F.size(toks) >= 3)
         .select(
@@ -425,7 +418,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_total",
         "n_distinct",
-        F.round(ratio.cast("decimal(28,10)"), 4).cast("double").alias("rep_ratio"),
+        exact_round(ratio, 4).alias("rep_ratio"),
     )
 
 
@@ -474,9 +467,7 @@ def doc_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit(r"\S+"), 0
-            ).alias("__toks"),
+            tokens().alias("__toks"),
         )
         .filter(F.size(toks) > 0)
         .select("doc_id", F.posexplode(chunks).alias("chunk_idx", "__chunk"))
@@ -532,13 +523,7 @@ def doc_rarity_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     e = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit(r"\S+"), 0
-                )
-            )
-        ).alias("tok"),
+        F.explode(F.array_distinct(tokens())).alias("tok"),
     )
     df = e.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     tot = docs.agg(F.count(F.lit(1)).alias("d"))
@@ -556,9 +541,7 @@ def doc_rarity_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sc.select(
         "doc_id",
         "n_distinct_tokens",
-        F.round(score.cast("decimal(28,10)"), 4)
-        .cast("double")
-        .alias("idf_score"),
+        exact_round(score, 4).alias("idf_score"),
     )
 
 
@@ -587,11 +570,7 @@ def token_frequency_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking runs over the (vocabulary-sized) count table and the top-K
     is a TakeOrderedAndProject, never a full sort of the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        ).alias("token")
-    )
+    toks = docs.select(F.explode(tokens()).alias("token"))
     counted = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     # Top-K via orderBy().limit(): Catalyst compiles this to
     # TakeOrderedAndProject (per-partition heap + tiny driver merge) —
@@ -620,7 +599,7 @@ _SYMBOL = r"[#]|\.\.\."
     oracle=f"""
     WITH m AS (
       SELECT doc_id,
-             {_count_sql(_WS)} AS n_words,
+             len(regexp_extract_all(lower(text), '\\S+')) AS n_words,
              length(regexp_replace(text, '\\s', '', 'g')) AS n_tok_chars,
              {_count_sql(_ALPHA_TOK)} AS n_alpha_words,
              {_count_sql(_SYMBOL, lower=False)} AS n_symbols
@@ -664,7 +643,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     m = docs.select(
         "doc_id",
-        _count(_WS).cast("long").alias("n_words"),
+        F.size(tokens()).cast("long").alias("n_words"),
         F.length(F.regexp_replace(F.col("text"), r"\s", ""))
         .cast("long")
         .alias("n_tok_chars"),
@@ -673,14 +652,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def ratio4(num: F.Column, den: F.Column) -> F.Column:
-        return (
-            F.round(
-                (num.cast("double") / F.greatest(den, F.lit(1))).cast(
-                    "decimal(28,10)"
-                ),
-                4,
-            ).cast("double")
-        )
+        return exact_round(num.cast("double") / F.greatest(den, F.lit(1)), 4)
 
     r = m.select(
         "doc_id",
@@ -715,7 +687,7 @@ _VOCAB_V = 100
     "vocab_coverage",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{_WS}')) AS tok
+      SELECT unnest(regexp_extract_all(lower(text), '\\S+')) AS tok
       FROM documents
     ),
     freq AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY tok),
@@ -747,11 +719,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (documented in the window-sweep allowlist)."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0)
-            ).alias("tok")
-        )
+        docs.select(F.explode(tokens()).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -768,13 +736,9 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             "tok",
             "freq",
-            F.round(
-                (F.sum("freq").over(w_cum).cast("double") / F.col("total"))
-                .cast("decimal(28,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("cum_coverage"),
+            exact_round(
+                F.sum("freq").over(w_cum).cast("double") / F.col("total"), 4
+            ).alias("cum_coverage"),
         )
     )
 
@@ -850,7 +814,7 @@ def classifier_sql(extra_cols: str = "", feature_cols: bool = True) -> str:
                    AS BIGINT) ELSE 0 END AS n_distinct3
           FROM (
             SELECT doc_id{extra_cols},  text,
-                   regexp_extract_all(lower(text), '{_WS}') AS t
+                   regexp_extract_all(lower(text), '\\S+') AS t
             FROM documents
           )
         )
@@ -867,9 +831,6 @@ def classifier_frame(
     features, a rounded linear logit, logistic calibration. No shuffle,
     no UDF; at 100 TB this is a single pass fused into the scan."""
 
-    def r4(c: F.Column) -> F.Column:
-        return F.round(c.cast("decimal(28,10)"), 4).cast("double")
-
     t = F.col("__t")
     base = docs.select(
         "doc_id",
@@ -878,9 +839,7 @@ def classifier_frame(
         _count(_STOP).cast("long").alias("n_stop"),
         _count(_SYMBOL, lower=False).cast("long").alias("n_symbols"),
         _count(_PUNCT).cast("long").alias("n_punct"),
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0).alias(
-            "__t"
-        ),
+        tokens().alias("__t"),
     ).select(
         "doc_id",
         *extra,
@@ -913,38 +872,41 @@ def classifier_frame(
     feats = base.select(
         "doc_id",
         *extra,
-        r4(F.least(F.col("n_words").cast("double") / 100, F.lit(1.0))).alias(
-            "f_len"
-        ),
-        r4(F.col("n_alpha").cast("double") / nw1).alias("f_alpha"),
-        r4(
-            F.least(F.col("n_stop").cast("double") / nw1 * 5, F.lit(1.0))
+        exact_round(
+            F.least(F.col("n_words").cast("double") / 100, F.lit(1.0)), 4
+        ).alias("f_len"),
+        exact_round(F.col("n_alpha").cast("double") / nw1, 4).alias("f_alpha"),
+        exact_round(
+            F.least(F.col("n_stop").cast("double") / nw1 * 5, F.lit(1.0)), 4
         ).alias("f_stop"),
-        r4(F.col("n_symbols").cast("double") / nw1).alias("f_sym"),
-        r4(
+        exact_round(F.col("n_symbols").cast("double") / nw1, 4).alias("f_sym"),
+        exact_round(
             F.when(
                 F.col("n_words") >= 3,
                 F.lit(1.0)
                 - F.col("n_distinct3").cast("double")
                 / (F.col("n_words") - 2),
-            ).otherwise(F.lit(0.0))
+            ).otherwise(F.lit(0.0)),
+            4,
         ).alias("f_rep"),
-        r4(
+        exact_round(
             F.col("n_punct").cast("double")
-            / F.greatest(F.col("n_chars_actual"), F.lit(1))
+            / F.greatest(F.col("n_chars_actual"), F.lit(1)),
+            4,
         ).alias("f_punct"),
     )
-    z = r4(
+    z = exact_round(
         F.lit(_CLS_BIAS)
         + _CLS_W_LEN * F.col("f_len")
         + _CLS_W_ALPHA * F.col("f_alpha")
         + _CLS_W_STOP * F.col("f_stop")
         + _CLS_W_SYM * F.col("f_sym")
         + _CLS_W_REP * F.col("f_rep")
-        + _CLS_W_PUNCT * F.col("f_punct")
+        + _CLS_W_PUNCT * F.col("f_punct"),
+        4,
     )
     scored = feats.withColumn("logit", z)
-    score = r4(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("logit"))))
+    score = exact_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("logit"))), 4)
     keep_feats = (
         ["f_len", "f_alpha", "f_stop", "f_sym", "f_rep", "f_punct"]
         if feature_cols
@@ -992,7 +954,7 @@ TFIDF_TOP = 3
     "tfidf_top_terms",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{_WS}')) AS w
+      SELECT doc_id, unnest(regexp_extract_all(lower(text), '\\S+')) AS w
       FROM documents
     ),
     tf AS (
@@ -1033,25 +995,16 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0)
-        ).alias("w"),
+        F.explode(tokens()).alias("w"),
     )
     tf = tok.groupBy("doc_id", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     df = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n = tf.agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
-    tfidf = F.round(
-        (
-            F.col("tf")
-            * (
-                F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0))
-                + 1.0
-            )
-        ).cast("decimal(28,10)"),
-        4,
-    ).cast("double")
+    tfidf = exact_round(
+        F.col("tf") * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0), 4
+    )
     scored = (
         tf.join(F.broadcast(df), "w")
         .crossJoin(F.broadcast(n))
@@ -1142,11 +1095,7 @@ def per_source_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "score"
     )
     med = cls.groupBy("source").agg(
-        F.round(
-            F.percentile("score", F.lit(0.5)).cast("decimal(28,10)"), 4
-        )
-        .cast("double")
-        .alias("source_median")
+        exact_round(F.percentile("score", F.lit(0.5)), 4).alias("source_median")
     )
     return (
         cls.join(F.broadcast(med), "source")
@@ -1209,9 +1158,7 @@ def vocab_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        ).alias("w"),
+        F.explode(tokens()).alias("w"),
     )
     sw = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c_sw"))
     cw = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
@@ -1239,9 +1186,7 @@ def vocab_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return terms.groupBy("source").agg(
         F.any_value("n_s").cast("bigint").alias("n_tokens"),
-        F.round(F.sum("term").cast("double").cast("decimal(28,10)"), 6)
-        .cast("double")
-        .alias("kl_vs_corpus"),
+        exact_round(F.sum("term").cast("double"), 6).alias("kl_vs_corpus"),
     )
 
 
@@ -1323,14 +1268,9 @@ def encoding_anomaly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(flagged).alias("n_flagged"),
         F.sum("n_repl").alias("n_replacement_chars"),
         F.sum("n_ctrl").alias("n_control_chars"),
-        F.round(
-            (F.sum(flagged) * F.lit(1.0) / F.count(F.lit(1))).cast(
-                "decimal(28,10)"
-            ),
-            4,
-        )
-        .cast("double")
-        .alias("flagged_share"),
+        exact_round(
+            F.sum(flagged) * F.lit(1.0) / F.count(F.lit(1)), 4
+        ).alias("flagged_share"),
     )
 
 
@@ -1537,11 +1477,7 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        )
-        .cast("long")
-        .alias("x"),
+        F.size(tokens()).cast("long").alias("x"),
         F.substring(
             F.md5(F.concat(F.lit("ps-"), F.col("doc_id").cast("string"))),
             1,
@@ -1586,12 +1522,8 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             n_a.alias("n_a"),
             n_b.alias("n_b"),
-            F.round(p_a.cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("p_a"),
-            F.round(p_b.cast("decimal(28,10)"), 6)
-            .cast("double")
-            .alias("p_b"),
+            exact_round(p_a, 6).alias("p_a"),
+            exact_round(p_b, 6).alias("p_b"),
             F.round(
                 ((p_a - p_b) * F.log2(p_a / p_b)).cast("decimal(18,12)"),
                 12,
@@ -1663,9 +1595,7 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit(r"\S+"), 0
-            ).alias("__toks"),
+            tokens().alias("__toks"),
         )
         .filter(F.size(toks) > 0)
         .select("doc_id", F.posexplode(chunks).alias("chunk_idx", "__c"))
@@ -1685,11 +1615,11 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM({_count_sql(_WS)}) AS BIGINT) AS ws_tokens,
+           CAST(SUM(len(regexp_extract_all(lower(text), '\\S+'))) AS BIGINT) AS ws_tokens,
            CAST(SUM({_count_sql(_BPE)}) AS BIGINT) AS bpe_tokens,
            CAST(ROUND(CAST(
              CAST(SUM({_count_sql(_BPE)}) AS DOUBLE)
-             / GREATEST(CAST(SUM({_count_sql(_WS)}) AS DOUBLE), 1.0)
+             / GREATEST(CAST(SUM(len(regexp_extract_all(lower(text), '\\S+'))) AS DOUBLE), 1.0)
              AS DECIMAL(28,10)), 6) AS DOUBLE) AS fertility,
            CAST(ROUND(CAST(
              CAST(SUM(n_chars) AS DOUBLE)
@@ -1706,8 +1636,9 @@ def tokenizer_fertility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout for "how expensive is this slice to train on" and the
     first thing checked when a tokenizer underserves a language
     (fertility spikes on scripts the merges never saw). Uses the
-    engine's two tokenizers (``_WS`` words, ``_BPE`` pretokenizer) so
-    the ratio is consistent with token_count / compression_ratio.
+    engine's two tokenizers (``parity.tokens()`` words, ``_BPE``
+    pretokenizer) so the ratio is consistent with token_count /
+    compression_ratio.
 
     Plan: both token counts are narrow JVM regexp projections fused
     into the scan; one (lang, source) partial-agg exchange of five
@@ -1717,19 +1648,13 @@ def tokenizer_fertility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     agg = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(_count(_WS)).alias("ws_tokens"),
+        F.sum(F.size(tokens())).alias("ws_tokens"),
         F.sum(_count(_BPE)).alias("bpe_tokens"),
         F.sum("n_chars").alias("sum_chars"),
     )
     def ratio(num, den):
-        return (
-            F.round(
-                (
-                    num.cast("double")
-                    / F.greatest(den.cast("double"), F.lit(1.0))
-                ).cast("decimal(28,10)"),
-                6,
-            ).cast("double")
+        return exact_round(
+            num.cast("double") / F.greatest(den.cast("double"), F.lit(1.0)), 6
         )
     return agg.select(
         "lang",
@@ -1812,25 +1737,15 @@ def doclen_power_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "n_total",
         "n_tail",
-        F.round(
-            (
-                F.col("n_tail").cast("double")
-                / F.col("n_total").cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.col("n_tail").cast("double") / F.col("n_total").cast("double"), 6
+        ).alias("tail_share"),
+        exact_round(
+            F.lit(1.0)
+            + F.col("n_tail").cast("double")
+            / F.nullif(F.col("sum_ln").cast("double"), F.lit(0.0)),
             6,
-        )
-        .cast("double")
-        .alias("tail_share"),
-        F.round(
-            (
-                F.lit(1.0)
-                + F.col("n_tail").cast("double")
-                / F.nullif(F.col("sum_ln").cast("double"), F.lit(0.0))
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("alpha"),
+        ).alias("alpha"),
     )
 
 
@@ -1908,17 +1823,13 @@ def sentence_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_sentences",
         "sum_sent_chars",
-        F.round(
-            (
-                F.col("sum_sent_chars").cast("double")
-                / F.greatest(F.col("n_sentences"), F.lit(1)).cast(
-                    "double"
-                )
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.col("sum_sent_chars").cast("double")
+            / F.greatest(F.col("n_sentences"), F.lit(1)).cast(
+                "double"
+            ),
             4,
-        )
-        .cast("double")
-        .alias("mean_sent_len"),
+        ).alias("mean_sent_len"),
         "max_sent_len",
     )
 
@@ -1933,7 +1844,7 @@ _HEAPS_DENOMS = (64, 32, 16, 8, 4, 2, 1)
     "heaps_law_curve",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, regexp_extract_all(lower(text), '{_WS}') AS t
+      SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS t
       FROM documents
     ),
     e AS (
@@ -1979,7 +1890,7 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.windows import prefix_sum
 
     docs = load_table(spark, sf_dir, "documents")
-    t = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0)
+    t = tokens()
     toks = docs.select("doc_id", t.alias("t"))
     counts = toks.select("doc_id", F.size("t").cast("bigint").alias("n"))
     offsets = prefix_sum(counts, F.col("n"), "doc_id", "cum").select(
@@ -2025,7 +1936,7 @@ KAPPA_TOKENS_MIN = 80
     oracle=f"""
     WITH r AS (
       SELECT CASE WHEN n_chars >= {KAPPA_CHARS_MIN} THEN 1 ELSE 0 END AS a,
-             CASE WHEN {_count_sql(_WS)} >= {KAPPA_TOKENS_MIN}
+             CASE WHEN len(regexp_extract_all(lower(text), '\\S+')) >= {KAPPA_TOKENS_MIN}
                   THEN 1 ELSE 0 END AS b
       FROM documents
     ),
@@ -2079,7 +1990,7 @@ def rater_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     `regexp_extract_all` (no UDF). At 100 TB: a single pass,
     map-side-combined to 32 partial rows."""
     a = F.when(F.col("n_chars") >= KAPPA_CHARS_MIN, 1).otherwise(0)
-    b = F.when(_count(_WS) >= KAPPA_TOKENS_MIN, 1).otherwise(0)
+    b = F.when(F.size(tokens()) >= KAPPA_TOKENS_MIN, 1).otherwise(0)
     r = load_table(spark, sf_dir, "documents").select(
         a.alias("a"), b.alias("b")
     )
@@ -2096,16 +2007,15 @@ def rater_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     po = (F.col("n11") + F.col("n00")).cast("double") / nd
     pa, pb = F.col("na").cast("double") / nd, F.col("nb").cast("double") / nd
     pe = pa * pb + (1.0 - pa) * (1.0 - pb)
-    r6 = lambda col: F.round(col.cast("decimal(28,10)"), 6).cast("double")
     return c.select(
         "n",
         "n11",
         "n00",
         "na",
         "nb",
-        r6(po).alias("p_observed"),
-        r6(pe).alias("p_expected"),
-        r6((po - pe) / (1.0 - pe)).alias("kappa"),
+        exact_round(po, 6).alias("p_observed"),
+        exact_round(pe, 6).alias("p_expected"),
+        exact_round((po - pe) / (1.0 - pe), 6).alias("kappa"),
     )
 
 
@@ -2122,7 +2032,7 @@ def _nb_oracle() -> str:
     return f"""
     WITH tok AS (
       SELECT doc_id, lang,
-             unnest(regexp_extract_all(lower(text), '{_WS}')) AS t
+             unnest(regexp_extract_all(lower(text), '\\S+')) AS t
       FROM documents
     ),
     train AS (SELECT * FROM tok WHERE doc_id % {NB_HOLD_MOD} <> 0),
@@ -2235,9 +2145,7 @@ def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_WS), 0)
-        ).alias("t"),
+        F.explode(tokens()).alias("t"),
     )
     train = tok.filter(F.col("doc_id") % NB_HOLD_MOD != 0)
     vocab = (
@@ -2406,25 +2314,22 @@ def good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
-        ).alias("w"),
+        F.explode(tokens()).alias("w"),
     )
     cnt = tok.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     n1 = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
     n2 = F.sum(F.when(F.col("c") == 2, 1).otherwise(0))
-    r6 = lambda c: F.round(c.cast("decimal(28,10)"), 6).cast("double")
     return cnt.groupBy("lang").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("vocab"),
         n1.cast("bigint").alias("n_singletons"),
         n2.cast("bigint").alias("n_doubletons"),
-        r6(n1.cast("double") / F.sum("c")).alias("p_unseen"),
+        exact_round(n1.cast("double") / F.sum("c"), 6).alias("p_unseen"),
         F.when(
             n1 == 0, F.lit(None).cast("double")
         )
-        .otherwise(r6(F.lit(2.0) * n2 / n1))
+        .otherwise(exact_round(F.lit(2.0) * n2 / n1, 6))
         .alias("r_star_1"),
     )

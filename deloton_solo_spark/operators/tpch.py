@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.parity import exact_round
 from ..registry import query
 
 def _rev():
@@ -429,16 +430,12 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "ship_month",
         F.col("promo_dec").cast("double").alias("promo_revenue"),
-        F.round(
-            (
-                F.lit(100.0)
-                * F.col("promo_dec").cast("double")
-                / F.col("total_dec").cast("double")
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.lit(100.0)
+            * F.col("promo_dec").cast("double")
+            / F.col("total_dec").cast("double"),
             6,
-        )
-        .cast("double")
-        .alias("promo_share_pct"),
+        ).alias("promo_share_pct"),
     )
 
 
@@ -591,15 +588,9 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "o_year",
         F.col("nat_dec").cast("double").alias("nation_revenue"),
-        F.round(
-            (
-                F.col("nat_dec").cast("double")
-                / F.col("tot_dec").cast("double")
-            ).cast("decimal(28,10)"),
-            6,
-        )
-        .cast("double")
-        .alias("mkt_share"),
+        exact_round(
+            F.col("nat_dec").cast("double") / F.col("tot_dec").cast("double"), 6
+        ).alias("mkt_share"),
     )
 
 
@@ -709,17 +700,13 @@ def small_qty_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         thr, branded.l_partkey == thr.t_partkey
     ).filter(F.col("l_quantity").cast("double") < F.col("qty_thr"))
     return small.agg(
-        F.round(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast(
-                    "double"
-                )
-                / F.lit(7.0)
-            ).cast("decimal(28,10)"),
+        exact_round(
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast(
+                "double"
+            )
+            / F.lit(7.0),
             4,
-        )
-        .cast("double")
-        .alias("avg_yearly")
+        ).alias("avg_yearly")
     )
 
 

@@ -92,16 +92,11 @@ def wire_projection(raw: DataFrame) -> DataFrame:
     )
 
 
-def file_wire_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def file_wire_stream(spark: SparkSession, path: str) -> DataFrame:
     """Deterministic replay source: a directory of JSON files in the
     wire schema. Column-compatible with ``kafka_stream_reader`` output,
     so the whole downstream pipeline is source-agnostic."""
-    reader = spark.readStream.schema(WIRE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+    return spark.readStream.schema(WIRE_SCHEMA).json(path)
 
 
 def parse_wire_stream(wire: DataFrame) -> DataFrame:

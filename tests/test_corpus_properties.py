@@ -94,12 +94,13 @@ def test_curation_pipeline_is_intersection_of_its_stages(spark):
     assert final <= passing
     assert final <= mixed
     # no two surviving docs may share an 8-word chunk
-    from deloton_solo_spark.operators.corpus import _chunk_hashes, _tokens
+    from deloton_solo_spark.functions.parity import tokens
+    from deloton_solo_spark.operators.corpus import _chunk_hashes
 
     docs = load_table(spark, SF_DIR, "documents").filter(
         F.col("doc_id").isin(list(final))
     )
-    ch = docs.select("doc_id", F.explode(_chunk_hashes(_tokens())).alias("h"))
+    ch = docs.select("doc_id", F.explode(_chunk_hashes(tokens())).alias("h"))
     dup_pairs = (
         ch.alias("a")
         .join(ch.alias("b"), "h")

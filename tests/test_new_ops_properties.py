@@ -831,9 +831,9 @@ def test_cdc_chunking_matches_python_and_survives_shift(spark):
         .collect()
     }
     from pyspark.sql import functions as F
-    from deloton_solo_spark.operators import corpus as C
+    from deloton_solo_spark.functions.parity import tokens
 
-    t = C._tokens()
+    t = tokens()
     df = (
         load_table(spark, SF_DIR, "documents")
         .filter(F.col("doc_id").isin(*docs))

@@ -92,22 +92,6 @@ def test_date_partitioned_layout_prunes(spark):
     assert "event_date" in p.split("PartitionFilters")[1].splitlines()[0]
 
 
-def test_cached_hot_table_reads_from_memory(spark):
-    import contextlib
-    import io
-
-    from deloton_solo_spark.catalog import cache_hot_table
-
-    df = cache_hot_table(spark, SF_DIR, "nation")
-    try:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.filter("n_regionkey = 0").explain("formatted")
-        assert "InMemoryTableScan" in buf.getvalue()
-    finally:
-        df.unpersist()
-
-
 def test_bucketed_join_has_no_exchange(spark):
     a = plan_audit(spark, "bucketed_colocated_join")
     # the whole join+agg rides the bucketed layout: zero shuffles
