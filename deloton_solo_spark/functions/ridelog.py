@@ -27,12 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .logsim import _TS_FMT_DUCK, _TS_FMT_SPARK, MARKER_TEXT
 
 #: Users cycle with this period so each user owns several rides.
 N_USERS = 37
 _T0 = "2024-01-01 00:00:00"
-_TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-_TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
 def well_formed_ride_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,12 +51,7 @@ def well_formed_ride_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     line = (
         F.when(
             p == 0,
-            F.concat(
-                ts_s,
-                F.lit(
-                    " [SYSTEM] --------- beginning of a new ride ---------"
-                ),
-            ),
+            F.concat(ts_s, F.lit(f" [SYSTEM] {MARKER_TEXT}")),
         )
         .when(
             p == 1,
@@ -113,7 +107,7 @@ RIDE_LOG_CTE = f"""
         WHEN event_id % 20 = 0 THEN
           strftime(TIMESTAMP '{_T0}' + event_id * INTERVAL 1 SECOND,
                    '{_TS_FMT_DUCK}')
-          || ' [SYSTEM] --------- beginning of a new ride ---------'
+          || ' [SYSTEM] {MARKER_TEXT}'
         WHEN event_id % 20 = 1 THEN
           strftime(TIMESTAMP '{_T0}' + event_id * INTERVAL 1 SECOND,
                    '{_TS_FMT_DUCK}')

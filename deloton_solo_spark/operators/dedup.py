@@ -264,66 +264,15 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the canonical representative a dedup pipeline keeps).
 
     Runs :func:`cc_large_small_star` — the O(log² n)-round,
-    shuffle-efficient CC for massive graphs. The simpler diameter-round
-    :func:`cc_min_label` propagation is kept as a library function;
-    a property test asserts both reach the identical fixpoint on random
-    graphs. The DuckDB oracle states the same fixpoint as a recursive
+    shuffle-efficient CC for massive graphs; a property test asserts it
+    reaches a driver-side union-find's fixpoint on generated graphs.
+    The DuckDB oracle states the same fixpoint as a recursive
     transitive closure."""
     pairs = near_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.toDF("src", "dst")
     return cc_large_small_star(edges).select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-
-
-def cc_min_label(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    every round each vertex takes the min of its own and its neighbors'
-    labels — one distributed join + aggregate per round,
-    ``localCheckpoint`` truncating lineage between rounds. Converges in
-    graph-diameter rounds (fine for the tiny chain-shaped components of
-    near-dup graphs; for arbitrary 100 TB graphs use
-    :func:`cc_large_small_star`).
-
-    ``edges``: (src, dst) pairs, either orientation. Returns
-    (id, label) for every vertex appearing in ``edges``, label = the
-    component's minimum vertex id. Raises if the diameter exceeds
-    ``max_rounds`` — an unconverged labeling must never pass silently
-    as a correct clustering."""
-    sym = edges.union(edges.select("dst", "src")).toDF("src", "dst")
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    changed = -1
-    for _ in range(max_rounds):
-        nmin = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new = labels.join(nmin, labels.id == nmin.src, "left").select(
-            labels.id,
-            F.col("label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-            ).alias("label2"),
-        )
-        changed = new.filter(F.col("label2") != F.col("label")).count()
-        labels = new.select(
-            "id", F.col("label2").alias("label")
-        ).localCheckpoint()
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"cc_min_label did not converge in {max_rounds} rounds "
-            f"({changed} labels still changing)"
-        )
-    return labels
 
 
 def cc_large_small_star(edges: DataFrame, max_rounds: int = 50) -> DataFrame:

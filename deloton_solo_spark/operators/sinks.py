@@ -52,7 +52,11 @@ def idempotent_append(df: DataFrame, path: str, keys: list[str]) -> None:
             raise
         existing = None
     if existing is not None:
-        batch = batch.join(existing, on=keys, how="left_anti")
+        # the join puts the keys first; every append keeps the frame's
+        # column order so all of the sink's footers agree
+        batch = batch.join(existing, on=keys, how="left_anti").select(
+            *df.columns
+        )
     batch.write.mode("append").parquet(path)
 
 
@@ -131,9 +135,10 @@ def _execute_jdbc_statement(
 
 
 def upsert_writer(keys: list[str], **sink_config):
-    """Build a ``foreachBatch`` callable around :func:`staged_upsert` —
-    `stream.writeStream.foreachBatch(upsert_writer(keys, parquet_path=…))`
-    or `…upsert_writer(keys, jdbc_url=…, table=…)` for a real database."""
+    """Build a ``foreachBatch`` callable around :func:`staged_upsert`,
+    the sink of a ``streaming.pipeline`` drain:
+    `upsert_writer(keys, parquet_path=…)`, or
+    `upsert_writer(keys, jdbc_url=…, table=…)` for a real database."""
 
     def _write(batch: DataFrame, _epoch: int) -> None:
         staged_upsert(batch, keys, **sink_config)

@@ -1,47 +1,46 @@
 """Streaming pipeline queries — real Structured Streaming runs,
 oracle-checked (SURVEY.md §2.6).
 
-Each query executes an actual ``readStream`` → transform →
-``writeStream`` pipeline with ``Trigger.AvailableNow`` inside the query
-function (scratch dirs for source/sink/checkpoint), then returns the
-materialized sink as a DataFrame. The DuckDB oracle computes the same
-result relationally — so the correctness gate covers the streaming
-engine path end-to-end, not just the batch twins.
+Each query replays its input through an actual streaming pipeline —
+JSON source rounds → transform → ``Trigger.AvailableNow`` drain into a
+sink — inside the query function, then returns the materialized sink as
+a DataFrame. The replay mechanics (scratch directories, source rounds,
+drains, watermark-flushing sentinels, the sink read) are
+``streaming.pipeline.Replay``'s; a query here states its transform, its
+kernel and its oracle. The DuckDB oracle computes the same result
+relationally — so the correctness gate covers the streaming engine path
+end-to-end, not just the batch twins.
 """
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.logsim import LOG_CTE, synthetic_log
+from ..functions.logsim import LOG_CTE, MARKER_TEXT, synthetic_log
 from ..functions.parity import exact_round
 from ..functions.ridelog import RIDE_LOG_CTE, well_formed_ride_log
 from ..operators import events as _events
+from ..operators.sinks import upsert_writer
 from ..operators.sources import WIRE_CTE, kafka_wire
 from ..registry import query
 from ..streaming.pipeline import (
-    file_wire_stream,
-    ingest_available_now,
+    WIRE_SCHEMA,
+    Replay,
+    high_water_mark,
+    keyed_state,
     parse_wire_stream,
-    run_stream_to_parquet,
     sessionize_stream,
 )
 from ..streaming.stateful import parse_lines_for_state, rides_stream
 
 
-def _scratch(prefix: str) -> str:
-    # Stable path per purpose (ADVICE r3: no mkdtemp leak across reruns);
-    # cleared on entry so each replay starts from empty source/checkpoint
-    # state — a reused streaming checkpoint would resume and emit nothing.
-    from ..session import scratch_dir
-
-    path = scratch_dir(prefix.rstrip("_"))
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+def _even_then_odd(frame: DataFrame, key: str) -> list[DataFrame]:
+    """The two-round replay split: even ``key`` values in round 1, odd
+    in round 2 — the batch boundary the oracles' (round, key) orders
+    state."""
+    return [frame.filter(F.col(key) % 2 == parity) for parity in (0, 1)]
 
 
 # §2.6 ingest: S1/S2/S3/S5 as one streaming run ---------------------------
@@ -82,20 +81,20 @@ def streaming_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pipeline runs TWICE with independent checkpoints (simulated
     redelivery of every message); the upsert keeps the sink exact-once,
     which is what the oracle asserts."""
-    src, out = _scratch("stream_src_"), _scratch("stream_out_")
-    kafka_wire(synthetic_log(spark, sf_dir)).coalesce(4).write.json(src)
-    for attempt in range(2):
-        parsed = parse_wire_stream(file_wire_stream(spark, src)).select(
-            "partition",
-            "offset",
-            "user_id",
-            F.date_format("line_ts", "yyyy-MM-dd HH:mm:ss").alias("line_ts"),
-            "line_type",
-        )
-        ingest_available_now(
-            parsed, out, _scratch(f"stream_ckpt{attempt}_"), keys=["offset"]
-        )
-    return spark.read.parquet(out)
+    r = Replay(spark, "stream", WIRE_SCHEMA)
+    parsed = parse_wire_stream(r.stream()).select(
+        "partition",
+        "offset",
+        "user_id",
+        F.date_format("line_ts", "yyyy-MM-dd HH:mm:ss").alias("line_ts"),
+        "line_type",
+    )
+    upsert = upsert_writer(["offset"], parquet_path=r.path("out"))
+    r.feed(
+        kafka_wire(synthetic_log(spark, sf_dir)).coalesce(4),
+        *(r.hop(parsed, upsert, f"ckpt{attempt}") for attempt in range(2)),
+    )
+    return r.read("out")
 
 
 # X5 streaming twin -------------------------------------------------------
@@ -139,28 +138,11 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of "the stream keeps running and late sessions eventually
     finalize"; the sentinel key is dropped from the result."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    src, out = _scratch("sess_src_"), _scratch("sess_out_")
-    ckpt = _scratch("sess_ckpt_")
-    schema = "user_id bigint, ts timestamp, event_id bigint"
-    ev.coalesce(4).write.json(src)
-    # Single-row scalar collect: computes the replay's high-water mark
-    # to build watermark-flushing sentinels. Deterministic and inherent
-    # to the bounded-replay test design, but it costs a full source scan
-    # — a production pipeline tracks this in ingest metadata instead.
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-
-    def _run() -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        run_stream_to_parquet(sessionize_stream(stream), out, ckpt)
-
-    _run()
-    for round_no, days in enumerate((10, 20)):
-        sentinel = spark.createDataFrame(
-            [(-1, max_ts, -1)], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    r = Replay(spark, "sess", "user_id bigint, ts timestamp, event_id bigint")
+    run = r.hop(sessionize_stream(r.stream()), "out", "ckpt")
+    r.feed(ev.coalesce(4), run)
+    r.flush_watermark(ev, [{"user_id": -1, "event_id": -1}], run)
+    return r.read("out").filter(F.col("user_id") >= 0)
 
 
 # Streaming dedup: state-backed dropDuplicates over a replay ------------
@@ -183,22 +165,14 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    src, out = _scratch("sdedup_src_"), _scratch("sdedup_out_")
-    ckpt = _scratch("sdedup_ckpt_")
-    schema = "event_id bigint, user_id bigint, event_type string"
+    r = Replay(
+        spark, "sdedup", "event_id bigint, user_id bigint, event_type string"
+    )
+    run = r.hop(r.stream().dropDuplicates(["event_id"]), "out", "ckpt")
     dup = ev.unionAll(ev)
-
-    def _run() -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        run_stream_to_parquet(
-            stream.dropDuplicates(["event_id"]), out, ckpt
-        )
-
-    dup.coalesce(4).write.json(src)
-    _run()
-    dup.coalesce(2).write.mode("append").json(src)  # full redelivery
-    _run()
-    return spark.read.parquet(out)
+    r.feed(dup.coalesce(4), run)
+    r.feed(dup.coalesce(2), run)  # full redelivery
+    return r.read("out")
 
 
 # Bounded-state streaming dedup: watermark-evicted seen-keys --------------
@@ -226,25 +200,22 @@ def streaming_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    src, out = _scratch("sdedupb_src_"), _scratch("sdedupb_out_")
-    ckpt = _scratch("sdedupb_ckpt_")
-    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
+    r = Replay(
+        spark,
+        "sdedupb",
+        "event_id bigint, user_id bigint, event_type string, ts timestamp",
+    )
+    deduped = (
+        r.stream()
+        .withWatermark("ts", "30 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .drop("ts")
+    )
+    run = r.hop(deduped, "out", "ckpt")
     dup = ev.unionAll(ev)
-
-    def _run() -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        deduped = (
-            stream.withWatermark("ts", "30 minutes")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .drop("ts")
-        )
-        run_stream_to_parquet(deduped, out, ckpt)
-
-    dup.coalesce(4).write.json(src)
-    _run()
-    dup.coalesce(2).write.mode("append").json(src)  # full redelivery
-    _run()
-    return spark.read.parquet(out)
+    r.feed(dup.coalesce(4), run)
+    r.feed(dup.coalesce(2), run)  # full redelivery
+    return r.read("out")
 
 
 # Custom stateful operator: applyInPandasWithState ------------------------
@@ -331,35 +302,16 @@ def stateful_ride_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("msg_idx").alias("offset"),
         "log",
     )
-    src, out = _scratch("state_src_"), _scratch("state_out_")
-    ckpt = _scratch("state_ckpt_")
-    lines.coalesce(4).write.json(src)
-    # Single-row scalar collect: computes the replay's high-water mark
-    # to build watermark-flushing sentinels. Deterministic and inherent
-    # to the bounded-replay test design, but it costs a full source scan
-    # — a production pipeline tracks this in ingest metadata instead.
-    max_off = lines.agg(F.max("offset")).collect()[0][0]
-
-    def _run() -> None:
-        stream = spark.readStream.schema(
-            "partition int, offset long, log string"
-        ).json(src)
-        rides = rides_stream(parse_lines_for_state(stream))
-        run_stream_to_parquet(rides, out, ckpt)
-
-    _run()
-    sentinels = spark.createDataFrame(
-        [
-            (p, max_off + 1 + p,
-             "2099-01-01 00:00:00.000000 [SYSTEM] --------- beginning of"
-             " a new ride ---------")
-            for p in range(_N_STATE_PARTS)
-        ],
-        "partition int, offset long, log string",
-    )
-    sentinels.write.mode("append").json(src)
-    _run()
-    return spark.read.parquet(out)
+    r = Replay(spark, "state", "partition int, offset long, log string")
+    run = r.hop(rides_stream(parse_lines_for_state(r.stream())), "out", "ckpt")
+    r.feed(lines.coalesce(4), run)
+    max_off = high_water_mark(lines, "offset")
+    marker = f"2099-01-01 00:00:00.000000 [SYSTEM] {MARKER_TEXT}"
+    sentinels = [
+        (p, max_off + 1 + p, marker) for p in range(_N_STATE_PARTS)
+    ]
+    r.feed(spark.createDataFrame(sentinels, r.schema), run)
+    return r.read("out")
 
 
 # Streaming windowed trending top-K ---------------------------------------
@@ -401,43 +353,24 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.epoch import epoch_ms
 
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    src, out = _scratch("trend_src_"), _scratch("trend_out_")
-    ckpt = _scratch("trend_ckpt_")
-    schema = "ts timestamp, event_type string"
-    ev.coalesce(4).write.json(src)
-    # Single-row scalar collect: computes the replay's high-water mark
-    # to build watermark-flushing sentinels. Deterministic and inherent
-    # to the bounded-replay test design, but it costs a full source scan
-    # — a production pipeline tracks this in ingest metadata instead.
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-
-    def _run() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .json(src)
-            .withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("window.start").alias("window_start"),
-                "event_type",
-                "n_events",
-            )
+    r = Replay(spark, "trend", "ts timestamp, event_type string")
+    counts = (
+        r.stream()
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("window.start").alias("window_start"),
+            "event_type",
+            "n_events",
         )
-        run_stream_to_parquet(stream, out, ckpt)
-
-    _run()
-    for round_no, days in enumerate((10, 20)):
-        sentinel = spark.createDataFrame(
-            [(max_ts, "__sentinel__")], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run()
+    )
+    run = r.hop(counts, "out", "ckpt")
+    r.feed(ev.coalesce(4), run)
+    r.flush_watermark(ev, [{"event_type": "__sentinel__"}], run)
     from pyspark.sql import Window
 
-    sink = spark.read.parquet(out).filter(
-        F.col("event_type") != "__sentinel__"
-    )
+    sink = r.read("out").filter(F.col("event_type") != "__sentinel__")
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), "event_type"
     )
@@ -453,6 +386,53 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Stream-stream interval join: click→purchase attribution -----------------
+_EVENT_STREAM = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string"
+)
+
+
+def _attribution(stream: DataFrame, how: str) -> DataFrame:
+    """Every click joined to the same user's purchases in the following
+    hour, both sides watermarked so the join state can be evicted."""
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    return clicks.join(
+        purchases,
+        F.expr(
+            """
+            c_user = p_user
+            AND purchase_ts >= click_ts
+            AND purchase_ts <= click_ts + INTERVAL 1 HOUR
+            """
+        ),
+        how,
+    ).select(
+        F.col("c_user").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        F.floor(
+            (F.unix_micros("purchase_ts") - F.unix_micros("click_ts"))
+            / F.lit(1_000_000)
+        ).alias("lag_s"),
+    )
+
+
 @query(
     "streaming_attribution_join",
     oracle="""
@@ -490,52 +470,12 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    src, out = _scratch("attr_src_"), _scratch("attr_out_")
-    ckpt = _scratch("attr_ckpt_")
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
+    r = Replay(spark, "attr", _EVENT_STREAM)
     # split the replay across files so clicks and purchases of the same
     # user land in different micro-batch inputs (cross-batch matching).
-    ev.coalesce(8).write.json(src)
-
-    stream = spark.readStream.schema(schema).json(src)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user = p_user
-            AND purchase_ts >= click_ts
-            AND purchase_ts <= click_ts + INTERVAL 1 HOUR
-            """
-        ),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        F.floor(
-            (F.unix_micros("purchase_ts") - F.unix_micros("click_ts"))
-            / F.lit(1_000_000)
-        ).alias("lag_s"),
-    )
-    run_stream_to_parquet(joined, out, ckpt)
-    return spark.read.parquet(out)
+    run = r.hop(_attribution(r.stream(), "inner"), "out", "ckpt")
+    r.feed(ev.coalesce(8), run)
+    return r.read("out")
 
 
 # Stream-static broadcast enrich ------------------------------------------
@@ -573,18 +513,15 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
         )
     )
-    src, out = _scratch("enrich_src_"), _scratch("enrich_ckpt_")
-    ckpt = _scratch("enrich_ckpt2_")
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    ev.coalesce(4).write.json(src)
-    stream = spark.readStream.schema(schema).json(src)
+    r = Replay(spark, "enrich", _EVENT_STREAM)
     enriched = (
-        stream.filter(F.col("event_type").isin("click", "purchase"))
+        r.stream()
+        .filter(F.col("event_type").isin("click", "purchase"))
         .join(F.broadcast(dim), "user_id")
         .select("event_id", "user_id", "event_type", "segment", "nation")
     )
-    run_stream_to_parquet(enriched, out, ckpt)
-    return spark.read.parquet(out)
+    r.feed(ev.coalesce(4), r.hop(enriched, "ckpt", "ckpt2"))
+    return r.read("ckpt")
 
 
 # Stream-stream LEFT OUTER interval join ----------------------------------
@@ -621,65 +558,15 @@ def streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    src, out = _scratch("attro_src_"), _scratch("attro_out_")
-    ckpt = _scratch("attro_ckpt_")
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    ev.coalesce(8).write.json(src)
-    # Single-row scalar collect: computes the replay's high-water mark
-    # to build watermark-flushing sentinels. Deterministic and inherent
-    # to the bounded-replay test design, but it costs a full source scan
-    # — a production pipeline tracks this in ingest metadata instead.
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-
-    def _run() -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "1 hour")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "1 hour")
-        )
-        joined = clicks.join(
-            purchases,
-            F.expr(
-                """
-                c_user = p_user
-                AND purchase_ts >= click_ts
-                AND purchase_ts <= click_ts + INTERVAL 1 HOUR
-                """
-            ),
-            "leftOuter",
-        ).select(
-            F.col("c_user").alias("user_id"),
-            "click_id",
-            "purchase_id",
-            F.floor(
-                (F.unix_micros("purchase_ts") - F.unix_micros("click_ts"))
-                / F.lit(1_000_000)
-            ).alias("lag_s"),
-        )
-        run_stream_to_parquet(joined, out, ckpt)
-
-    _run()
-    for round_no, days in enumerate((10, 20)):
-        sentinel = spark.createDataFrame(
-            [(-1, max_ts, -1, "click"), (-2, max_ts, -1, "purchase")], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run()
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    r = Replay(spark, "attro", _EVENT_STREAM)
+    run = r.hop(_attribution(r.stream(), "leftOuter"), "out", "ckpt")
+    r.feed(ev.coalesce(8), run)
+    sentinels = [
+        {"event_id": -1, "user_id": -1, "event_type": "click"},
+        {"event_id": -2, "user_id": -1, "event_type": "purchase"},
+    ]
+    r.flush_watermark(ev, sentinels, run)
+    return r.read("out").filter(F.col("user_id") >= 0)
 
 
 # Streaming HLL: sketch mergeability as streaming correctness -------------
@@ -709,9 +596,9 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .analytics import _HLL_ALPHA, _HLL_M, _HLL_MAX_RHO_POW
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    src = _scratch("shll_src_")
-    ckpt = _scratch("shll_ckpt_")
-    ev.coalesce(8).write.json(src)  # 8 files → several micro-batches
+    r = Replay(
+        spark, "shll", "event_type string, user_id bigint", files_per_trigger=2
+    )
 
     h = F.md5(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
     bucket = (
@@ -720,24 +607,20 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.conv(F.substring(h, 3, 13), 16, 10).cast("bigint")
     rho = F.when(v == 0, F.lit(53)).otherwise(F.lit(53) - F.length(F.bin(v)))
 
-    stream = (
-        spark.readStream.schema("event_type string, user_id bigint")
-        .option("maxFilesPerTrigger", 2)
-        .json(src)
-    )
-    regs_q = (
-        stream.select("event_type", bucket, rho.alias("rho"))
+    grid = (
+        r.stream()
+        .select("event_type", bucket, rho.alias("rho"))
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("m_j"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("shll_registers")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    regs_q.awaitTermination()
-    regs = spark.table("shll_registers")
+    out = r.path("out")
+
+    def _snapshot(registers: DataFrame, _epoch: int) -> None:
+        # complete mode: each micro-batch carries the whole grid
+        registers.write.mode("overwrite").parquet(out)
+
+    r.feed(ev.coalesce(8), r.hop(grid, _snapshot, "ckpt", "complete"))
+    regs = r.read("out")
     s = regs.groupBy("event_type").agg(
         (
             F.sum(
@@ -792,21 +675,11 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import classifier_frame
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src, out = _scratch("squal_src_"), _scratch("squal_out_")
-    ckpt = _scratch("squal_ckpt_")
-    schema = "doc_id bigint, text string"
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    rest = docs.filter(F.col("doc_id") % 2 == 1)
-
-    def _run() -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        run_stream_to_parquet(classifier_frame(stream), out, ckpt)
-
-    half.coalesce(4).write.json(src)
-    _run()
-    rest.coalesce(4).write.mode("append").json(src)
-    _run()
-    return spark.read.parquet(out)
+    r = Replay(spark, "squal", "doc_id bigint, text string")
+    run = r.hop(classifier_frame(r.stream()), "out", "ckpt")
+    for half in _even_then_odd(docs, "doc_id"):
+        r.feed(half.coalesce(4), run)
+    return r.read("out")
 
 
 # Streaming OHLC bars: min_by/max_by in windowed streaming state ---------
@@ -854,51 +727,39 @@ def streaming_minute_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_id", "event_type", "value"
     )
-    src, out = _scratch("bars_src_"), _scratch("bars_out_")
-    ckpt = _scratch("bars_ckpt_")
-    schema = (
-        "ts timestamp, event_id bigint, event_type string, value double"
+    r = Replay(
+        spark,
+        "bars",
+        "ts timestamp, event_id bigint, event_type string, value double",
     )
-    ev.coalesce(4).write.json(src)
-    # Single-row scalar collect: the replay's high-water mark for the
-    # watermark-flushing sentinels (see note at the other replays).
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-
-    def _run() -> None:
-        key = F.struct(F.col("ts"), F.col("event_id"))
-        stream = (
-            spark.readStream.schema(schema)
-            .json(src)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 minute"), "event_type")
-            .agg(
-                F.min_by("value", key).alias("open"),
-                F.max("value").alias("high"),
-                F.min("value").alias("low"),
-                F.max_by("value", key).alias("close"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                F.col("window.start").alias("minute_ts"),
-                "event_type",
-                "open",
-                "high",
-                "low",
-                "close",
-                "n",
-            )
+    key = F.struct(F.col("ts"), F.col("event_id"))
+    bars = (
+        r.stream()
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 minute"), "event_type")
+        .agg(
+            F.min_by("value", key).alias("open"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.max_by("value", key).alias("close"),
+            F.count(F.lit(1)).alias("n"),
         )
-        run_stream_to_parquet(stream, out, ckpt)
-
-    _run()
-    for days in (10, 20):
-        sentinel = spark.createDataFrame(
-            [(max_ts, -1, "__sentinel__", 0.0)], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run()
+        .select(
+            F.col("window.start").alias("minute_ts"),
+            "event_type",
+            "open",
+            "high",
+            "low",
+            "close",
+            "n",
+        )
+    )
+    run = r.hop(bars, "out", "ckpt")
+    r.feed(ev.coalesce(4), run)
+    sentinel = {"event_id": -1, "event_type": "__sentinel__", "value": 0.0}
+    r.flush_watermark(ev, [sentinel], run)
     return (
-        spark.read.parquet(out)
+        r.read("out")
         .filter(F.col("event_type") != "__sentinel__")
         .select(
             "event_type",
@@ -917,28 +778,29 @@ def streaming_minute_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 ADMIT_CAP = 12
 
 
-def _admission_kernel_factory(cap: int):
+def _admission_kernel(key, pdfs, state):
+    """Per source: admit rows in doc_id order until ``ADMIT_CAP`` is
+    used up, emitting (source, doc_id, any further input columns,
+    admit_seq). State = (admitted_count,); rows within a micro-batch
+    are concatenated and sorted by doc_id once (the engine groups by
+    key but does NOT order rows — same discipline as the ride state
+    machine)."""
     import pandas as pd
 
-    def admit(key, pdfs, state):
-        # state = (admitted_count,) per source; rows within a micro-
-        # batch are concatenated and sorted by doc_id once (the engine
-        # groups by key but does NOT order rows — same discipline as
-        # the ride state machine)
-        taken = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdfs)).sort_values("doc_id")
-        room = max(0, cap - taken)
-        admitted = pdf.head(room)
-        state.update((taken + len(admitted),))
-        yield pd.DataFrame(
-            {
-                "source": admitted["source"],
-                "doc_id": admitted["doc_id"],
-                "admit_seq": range(taken + 1, taken + len(admitted) + 1),
-            }
-        )
-
-    return admit
+    taken = state.get[0] if state.exists else 0
+    pdf = pd.concat(list(pdfs)).sort_values("doc_id")
+    room = max(0, ADMIT_CAP - taken)
+    admitted = pdf.head(room)
+    state.update((taken + len(admitted),))
+    carried = [c for c in admitted.columns if c not in ("source", "doc_id")]
+    yield pd.DataFrame(
+        {
+            "source": admitted["source"],
+            "doc_id": admitted["doc_id"],
+            **{c: admitted[c] for c in carried},
+            "admit_seq": range(taken + 1, taken + len(admitted) + 1),
+        }
+    )
 
 
 @query(
@@ -978,43 +840,19 @@ def streaming_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     quota slot — production pairs this with the upstream streaming
     dedup (``streaming_dedup``) or the idempotent sink, exactly as the
     ingest pipeline composes them."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    src, out = _scratch("admit_src_"), _scratch("admit_out_")
-    ckpt = _scratch("admit_ckpt_")
-    schema = "doc_id bigint, source string"
-
-    def _run() -> None:
-        # The replay contract needs each AvailableNow drain to land in
-        # ONE micro-batch (admission order = (batch, doc_id) per
-        # source). Pin maxFilesPerTrigger well above the files-per-drain
-        # count so a default change or a larger SF can never silently
-        # split a drain and diverge from the oracle ranking.
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-            .groupBy("source")
-            .applyInPandasWithState(
-                _admission_kernel_factory(ADMIT_CAP),
-                outputStructType=(
-                    "source string, doc_id bigint, admit_seq bigint"
-                ),
-                stateStructType="taken int",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        run_stream_to_parquet(stream, out, ckpt)
-
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(4).write.json(src)
-    _run()
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(4).write.mode(
-        "append"
-    ).json(src)
-    _run()
-    return spark.read.parquet(out)
+    r = Replay(spark, "admit", "doc_id bigint, source string")
+    admitted = keyed_state(
+        r.stream(),
+        "source",
+        _admission_kernel,
+        "source string, doc_id bigint, admit_seq bigint",
+        "taken int",
+    )
+    run = r.hop(admitted, "out", "ckpt")
+    for half in _even_then_odd(docs, "doc_id"):
+        r.feed(half.coalesce(4), run)
+    return r.read("out")
 
 
 # Composed streaming curation: filter → dedup → admission, two hops ------
@@ -1101,92 +939,40 @@ def streaming_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels hold O(1) state per key (a seen-bit per hash, an int per
     source); exchanges carry (hash/source, doc_id, score) — text never
     leaves hop 1's narrow front-end."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .textstats import classifier_frame
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    src, mid, out = (
-        _scratch("scur_src_"),
-        _scratch("scur_mid_"),
-        _scratch("scur_out_"),
+    r = Replay(spark, "scur", "doc_id bigint, text string, source string")
+    scored = classifier_frame(
+        r.stream().withColumn("h", F.md5("text")),
+        extra=("source", "h"),
+        feature_cols=False,
     )
-    ckpt1, ckpt2 = _scratch("scur_ckpt1_"), _scratch("scur_ckpt2_")
-    schema = "doc_id bigint, text string, source string"
-
-    def _hop1() -> None:
-        # single-micro-batch-per-drain pinned (see streaming_admission_cap)
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-        )
-        scored = classifier_frame(
-            s.withColumn("h", F.md5("text")),
-            extra=("source", "h"),
-            feature_cols=False,
-        )
-        kept = scored.filter(F.col("verdict")).select(
-            "h", "doc_id", "source", "score"
-        )
-        dd = kept.groupBy("h").applyInPandasWithState(
-            _sdedup_keeper_kernel,
-            outputStructType="doc_id bigint, source string, score double",
-            stateStructType="seen boolean",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        run_stream_to_parquet(dd, mid, ckpt1)
-
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(4).write.json(src)
-    _hop1()
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(4).write.mode(
-        "append"
-    ).json(src)
-    _hop1()
-
-    def _admit(key, pdfs, state):
-        import pandas as pd
-
-        taken = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdfs)).sort_values("doc_id")
-        room = max(0, ADMIT_CAP - taken)
-        admitted = pdf.head(room)
-        state.update((taken + len(admitted),))
-        yield pd.DataFrame(
-            {
-                "source": admitted["source"],
-                "doc_id": admitted["doc_id"],
-                "score": admitted["score"],
-                "admit_seq": range(taken + 1, taken + len(admitted) + 1),
-            }
-        )
-
-    def _hop2() -> None:
-        # single-micro-batch-per-drain pinned (see streaming_admission_cap)
-        s = (
-            spark.readStream.schema(
-                "doc_id bigint, source string, score double"
-            )
-            .option("maxFilesPerTrigger", 1000)
-            .parquet(mid)
-        )
-        adm = s.groupBy("source").applyInPandasWithState(
-            _admit,
-            outputStructType=(
-                "source string, doc_id bigint, score double, "
-                "admit_seq bigint"
-            ),
-            stateStructType="taken int",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        run_stream_to_parquet(adm, out, ckpt2)
-
-    _hop2()
-    return spark.read.parquet(out)
+    kept = scored.filter(F.col("verdict")).select(
+        "h", "doc_id", "source", "score"
+    )
+    survivors = "doc_id bigint, source string, score double"
+    hop1 = r.hop(
+        keyed_state(
+            kept, "h", _sdedup_keeper_kernel, survivors, "seen boolean"
+        ),
+        "mid",
+        "ckpt1",
+    )
+    admitted = keyed_state(
+        r.stream_sink("mid", survivors),
+        "source",
+        _admission_kernel,
+        "source string, doc_id bigint, score double, admit_seq bigint",
+        "taken int",
+    )
+    hop2 = r.hop(admitted, "out", "ckpt2")
+    for half in _even_then_odd(docs, "doc_id"):
+        r.feed(half.coalesce(4), hop1)
+    hop2()
+    return r.read("out")
 
 
 # Streaming near-dup screen: ingest batches vs a persisted band index ----
@@ -1227,8 +1013,8 @@ def streaming_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     index = _corpus_band_index(spark, sf_dir)
 
-    src, out = _scratch("ndscreen_src_"), _scratch("ndscreen_out_")
-    ckpt = _scratch("ndscreen_ckpt_")
+    r = Replay(spark, "ndscreen", "doc_id bigint, text string")
+    out = r.path("out")
 
     def _screen(bdf: DataFrame, _epoch: int) -> None:
         bands = bdf.select(
@@ -1258,27 +1044,10 @@ def streaming_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         res.write.mode("append").parquet(out)
 
-    def _run() -> None:
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-        )
-        (
-            stream.writeStream.foreachBatch(_screen)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    batch.filter(F.col("doc_id") % 2 == 0).coalesce(4).write.json(src)
-    _run()
-    batch.filter(F.col("doc_id") % 2 == 1).coalesce(4).write.mode(
-        "append"
-    ).json(src)
-    _run()
-    return spark.read.parquet(out)
+    run = r.hop(r.stream(), _screen, "ckpt")
+    for half in _even_then_odd(batch, "doc_id"):
+        r.feed(half.coalesce(4), run)
+    return r.read("out")
 
 
 # Streaming EWMA: windowed bars → stateful bounded-recurrence kernel -----
@@ -1356,9 +1125,9 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ordering contract (what makes the recurrence correct under
     replay): append-mode window emission is monotone — a window
     flushed by run N is strictly earlier than any window run N+1
-    flushes — and hop 2 drains once per hop-1 run with
-    maxFilesPerTrigger pinned above the per-run file count, so each
-    micro-batch holds whole runs and the in-batch minute sort restores
+    flushes — and hop 2 drains once per hop-1 run, one micro-batch per
+    drain (the replay's ``ONE_BATCH_FILES`` pin), so each micro-batch
+    holds whole runs and the in-batch minute sort restores
     total order. Same oracle as the batch twin: the two engines AND
     the two execution modes must agree bar for bar.
 
@@ -1366,75 +1135,40 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is {EWMA_DEPTH}-1 doubles per TYPE — O(1) per key, the
     smallest recurrence state possible; only exchange is the keyed
     routing."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "value"
     )
-    src = _scratch("sewma_src_")
-    bars_out, ckpt1 = _scratch("sewma_bars_"), _scratch("sewma_ckpt1_")
-    out, ckpt2 = _scratch("sewma_out_"), _scratch("sewma_ckpt2_")
-    schema = "ts timestamp, event_type string, value double"
-    ev.coalesce(4).write.json(src)
-    # Single-row scalar collect: the replay's high-water mark for the
-    # watermark-flushing sentinels. Production form: track the ingest
-    # high-water mark in pipeline metadata, never re-scan the source.
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-
-    def _run_hop1() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 minute"), "event_type")
-            .agg(
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("bar")
-            )
-            .select(
-                F.date_format("window.start", "yyyy-MM-dd HH:mm").alias(
-                    "minute"
-                ),
-                "event_type",
-                "bar",
-            )
+    r = Replay(spark, "sewma", "ts timestamp, event_type string, value double")
+    bars = (
+        r.stream()
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 minute"), "event_type")
+        .agg(
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("bar")
         )
-        run_stream_to_parquet(stream, bars_out, ckpt1)
-
-    def _run_hop2() -> None:
-        bstream = (
-            spark.readStream.schema(
-                "minute string, event_type string, bar double"
-            )
-            .option("maxFilesPerTrigger", 1000)
-            .parquet(bars_out)
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _ewma_kernel,
-                outputStructType=(
-                    "event_type string, minute string, bar double, "
-                    "n_bars_used bigint, ewma double"
-                ),
-                stateStructType="minutes array<string>, bars array<double>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm").alias("minute"),
+            "event_type",
+            "bar",
         )
-        run_stream_to_parquet(bstream, out, ckpt2)
-
-    _run_hop1()
-    _run_hop2()
-    for days in (10, 20):
-        sentinel = spark.createDataFrame(
-            [(max_ts, "__sentinel__", 0.0)], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run_hop1()
-        _run_hop2()
+    )
+    hop1 = r.hop(bars, "bars", "ckpt1")
+    ewma = keyed_state(
+        r.stream_sink("bars", "minute string, event_type string, bar double"),
+        "event_type",
+        _ewma_kernel,
+        "event_type string, minute string, bar double, "
+        "n_bars_used bigint, ewma double",
+        "minutes array<string>, bars array<double>",
+    )
+    hop2 = r.hop(ewma, "out", "ckpt2")
+    r.feed(ev.coalesce(4), hop1, hop2)
+    sentinel = {"event_type": "__sentinel__", "value": 0.0}
+    r.flush_watermark(ev, [sentinel], hop1, hop2)
     return (
-        spark.read.parquet(out)
+        r.read("out")
         .filter(F.col("event_type") != "__sentinel__")
         .select("event_type", "minute", "bar", "n_bars_used", "ewma")
     )
@@ -1516,9 +1250,8 @@ def streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin, plus an engine-to-engine equality test.
 
     Ordering contract: the replay is pinned to a SINGLE micro-batch
-    (maxFilesPerTrigger above the source file count — the round-4
-    single-batch-replay convention), and the kernel sorts its rows by
-    (us, event_id), the batch window's exact order; at deploy, the
+    (the replay's ``ONE_BATCH_FILES`` pin), and the kernel sorts its
+    rows by (us, event_id), the batch window's exact order; at deploy, the
     same kernel is correct for any arrival batching whose batches
     respect event-time order per key (late rows would need the
     watermark + reorder-buffer hop of streaming_ewma's topology).
@@ -1526,8 +1259,6 @@ def streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is three pairs per user — O(1) per key; the only
     exchange is the keyed routing; output is one row per event (the
     feature store append)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..functions.epoch import epoch_us
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1536,31 +1267,20 @@ def streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_us("ts").alias("us"),
         "value",
     )
-    src = _scratch("slag_src_")
-    out, ckpt = _scratch("slag_out_"), _scratch("slag_ckpt_")
-    ev.coalesce(4).write.json(src)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, us bigint, value double"
-        )
-        .option("maxFilesPerTrigger", 1000)
-        .json(src)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _lag_kernel,
-            outputStructType=(
-                "event_id bigint, user_id bigint, value double, "
-                "lag1 double, lag2 double, lag3 double, "
-                "delta1 double, gap_us bigint"
-            ),
-            stateStructType="uss array<long>, vals array<double>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    r = Replay(
+        spark, "slag", "event_id bigint, user_id bigint, us bigint, value double"
     )
-    run_stream_to_parquet(stream, out, ckpt)
-    return spark.read.parquet(out).select(
+    features = keyed_state(
+        r.stream(),
+        "user_id",
+        _lag_kernel,
+        "event_id bigint, user_id bigint, value double, "
+        "lag1 double, lag2 double, lag3 double, "
+        "delta1 double, gap_us bigint",
+        "uss array<long>, vals array<double>",
+    )
+    r.feed(ev.coalesce(4), r.hop(features, "out", "ckpt"))
+    return r.read("out").select(
         "event_id",
         "user_id",
         "value",
@@ -1629,47 +1349,32 @@ def streaming_inversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     that size the downstream watermarks. A producer whose clock starts
     drifting shows up HERE, batches before the batch audit would run.
 
-    Ordering contract: single-micro-batch replay (maxFilesPerTrigger
-    above the source file count, the round-4 convention) with the
-    kernel sorting by event_id — the ARRIVAL sequence; at deploy the
-    kernel is correct for any batching that preserves per-key arrival
-    order (Kafka's per-partition guarantee).
+    Ordering contract: single-micro-batch replay (the replay's
+    ``ONE_BATCH_FILES`` pin) with the kernel sorting by event_id — the
+    ARRIVAL sequence; at deploy the kernel is correct for any batching
+    that preserves per-key arrival order (Kafka's per-partition
+    guarantee).
 
     Scale: state is four scalars per user; the only exchange is the
     keyed routing; output is one row per (user, micro-batch) — the
     monitoring table's upsert stream. Same oracle as the batch twin:
     both engines AND both execution modes must agree row for row."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..functions.epoch import epoch_us
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", epoch_us("ts").alias("us")
     )
-    src = _scratch("sinv_src_")
-    out, ckpt = _scratch("sinv_out_"), _scratch("sinv_ckpt_")
-    ev.coalesce(4).write.json(src)
-
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, us bigint")
-        .option("maxFilesPerTrigger", 1000)
-        .json(src)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _inversion_kernel,
-            outputStructType=(
-                "user_id bigint, n_events bigint, n_inversions bigint, "
-                "inversion_rate double, max_backstep_us bigint"
-            ),
-            stateStructType=(
-                "last_us long, n_ev long, n_inv long, max_back long"
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    r = Replay(spark, "sinv", "event_id bigint, user_id bigint, us bigint")
+    monitor = keyed_state(
+        r.stream(),
+        "user_id",
+        _inversion_kernel,
+        "user_id bigint, n_events bigint, n_inversions bigint, "
+        "inversion_rate double, max_backstep_us bigint",
+        "last_us long, n_ev long, n_inv long, max_back long",
     )
-    run_stream_to_parquet(stream, out, ckpt)
-    return spark.read.parquet(out)
+    r.feed(ev.coalesce(4), r.hop(monitor, "out", "ckpt"))
+    return r.read("out")
 
 
 # X238 — streaming CUSUM level-shift monitor -------------------------------------
@@ -1735,8 +1440,6 @@ def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: hop-1 state is one long per open day window; hop-2 state
     is O(1) for the chart; exchanges are the day-window agg and a
     single-key route."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("timestamp").alias("ts"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -1773,71 +1476,35 @@ def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sigma"),
     ).collect()[0]
     mu, sigma = float(strow["mu"]), float(strow["sigma"])
-    # Single-row scalar collect: the replay's high-water mark for the
-    # watermark-flushing sentinels. Production form: track the ingest
-    # high-water mark in pipeline metadata, never re-scan the source.
-    max_ts = orders.agg(F.max("ts")).collect()[0][0]
 
-    src = _scratch("scusum_src_")
-    bars_out, ckpt1 = _scratch("scusum_bars_"), _scratch("scusum_ckpt1_")
-    out, ckpt2 = _scratch("scusum_out_"), _scratch("scusum_ckpt2_")
-    schema = "ts timestamp, cents long, tag string"
-    orders.withColumn("tag", F.lit("real")).coalesce(4).write.json(src)
-
-    def _run_hop1() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-            .withWatermark("ts", "1 day")
-            .groupBy(F.window("ts", "1 day"), "tag")
-            .agg(F.sum("cents").cast("long").alias("cents"))
-            .select(
-                F.date_format("window.start", "yyyy-MM-dd").alias("day"),
-                "tag",
-                "cents",
-            )
+    r = Replay(spark, "scusum", "ts timestamp, cents long, tag string")
+    bars = (
+        r.stream()
+        .withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day"), "tag")
+        .agg(F.sum("cents").cast("long").alias("cents"))
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd").alias("day"),
+            "tag",
+            "cents",
         )
-        run_stream_to_parquet(stream, bars_out, ckpt1)
-
-    def _run_hop2() -> None:
-        bstream = (
-            spark.readStream.schema("day string, tag string, cents long")
-            .option("maxFilesPerTrigger", 1000)
-            .parquet(bars_out)
-            .filter(F.col("tag") == "real")
-            .withColumn("chart", F.lit(1))
-            .groupBy("chart")
-            .applyInPandasWithState(
-                _cusum_kernel_factory(
-                    mu,
-                    sigma,
-                    _events.CUSUM_SLACK_SIGMA,
-                    _events.CUSUM_ALARM_SIGMA,
-                ),
-                outputStructType=(
-                    "day string, revenue double, s_stat double, "
-                    "is_alarm boolean"
-                ),
-                stateStructType="p long, minp long",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        run_stream_to_parquet(bstream, out, ckpt2)
-
-    _run_hop1()
-    _run_hop2()
-    for days in (10, 20):
-        sentinel = spark.createDataFrame(
-            [(max_ts, 0, "__sentinel__")], schema
-        ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        sentinel.write.mode("append").json(src)
-        _run_hop1()
-        _run_hop2()
-    return spark.read.parquet(out).select(
-        "day", "revenue", "s_stat", "is_alarm"
     )
+    hop1 = r.hop(bars, "bars", "ckpt1")
+    chart = keyed_state(
+        r.stream_sink("bars", "day string, tag string, cents long")
+        .filter(F.col("tag") == "real")
+        .withColumn("chart", F.lit(1)),
+        "chart",
+        _cusum_kernel_factory(
+            mu, sigma, _events.CUSUM_SLACK_SIGMA, _events.CUSUM_ALARM_SIGMA
+        ),
+        "day string, revenue double, s_stat double, is_alarm boolean",
+        "p long, minp long",
+    )
+    hop2 = r.hop(chart, "out", "ckpt2")
+    r.feed(orders.withColumn("tag", F.lit("real")).coalesce(4), hop1, hop2)
+    r.flush_watermark(orders, [{"cents": 0, "tag": "__sentinel__"}], hop1, hop2)
+    return r.read("out").select("day", "revenue", "s_stat", "is_alarm")
 
 
 # X267 — streaming interval-union with islands-in-state ----------------------
@@ -1958,8 +1625,6 @@ def streaming_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     not history (merged islands collapse); the flush frame is
     user-count-sized. The kernel is Arrow-batched, never row-at-a-time
     Python."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1972,39 +1637,23 @@ def streaming_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint")
         ).alias("e"),
     )
-    src, out = _scratch("siu_src_"), _scratch("siu_out_")
-    ckpt = _scratch("siu_ckpt_")
-    schema = "user_id bigint, event_id bigint, s bigint, e bigint, flush boolean"
-
-    def _run() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1000)
-            .json(src)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _interval_union_kernel,
-                outputStructType=(
-                    "user_id bigint, island_start_us bigint, "
-                    "island_end_us bigint, n_events bigint"
-                ),
-                stateStructType=(
-                    "starts array<bigint>, ends array<bigint>, "
-                    "counts array<bigint>"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        run_stream_to_parquet(stream, out, ckpt)
-
-    base = ev.withColumn("flush", F.lit(False))
-    base.filter(F.col("event_id") % 2 == 0).coalesce(4).write.json(src)
-    _run()
-    base.filter(F.col("event_id") % 2 == 1).coalesce(4).write.mode(
-        "append"
-    ).json(src)
-    _run()
+    r = Replay(
+        spark,
+        "siu",
+        "user_id bigint, event_id bigint, s bigint, e bigint, flush boolean",
+    )
+    islands = keyed_state(
+        r.stream(),
+        "user_id",
+        _interval_union_kernel,
+        "user_id bigint, island_start_us bigint, island_end_us bigint, "
+        "n_events bigint",
+        "starts array<bigint>, ends array<bigint>, counts array<bigint>",
+    )
+    run = r.hop(islands, "out", "ckpt")
+    data = ev.withColumn("flush", F.lit(False))
+    for half in _even_then_odd(data, "event_id"):
+        r.feed(half.coalesce(4), run)
     flush = ev.select("user_id").distinct().select(
         "user_id",
         F.lit(-1).cast("bigint").alias("event_id"),
@@ -2012,6 +1661,5 @@ def streaming_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint").alias("e"),
         F.lit(True).alias("flush"),
     )
-    flush.coalesce(2).write.mode("append").json(src)
-    _run()
-    return spark.read.parquet(out)
+    r.feed(flush.coalesce(2), run)
+    return r.read("out")

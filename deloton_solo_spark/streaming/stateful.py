@@ -29,7 +29,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from .pipeline import keyed_state
 
 #: Input: per-line parsed columns (no forward-fill — state does that).
 LINE_SCHEMA = (
@@ -117,15 +119,10 @@ def ride_state_machine(
 
 def rides_stream(parsed_lines: DataFrame) -> DataFrame:
     """Wire the kernel: groupBy(partition) → applyInPandasWithState.
-    State is per-partition (sharded by the state store at scale);
-    NoTimeout because ride closure is data-driven (the marker), not
-    clock-driven."""
-    return parsed_lines.groupBy("partition").applyInPandasWithState(
-        ride_state_machine,
-        outputStructType=RIDE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    State is per-partition (sharded by the state store at scale); ride
+    closure is data-driven (the marker), not clock-driven."""
+    return keyed_state(
+        parsed_lines, "partition", ride_state_machine, RIDE_SCHEMA, STATE_SCHEMA
     )
 
 

@@ -1,10 +1,10 @@
 """Connected-components property tests: the O(log² n) large-star /
-small-star implementation must reach the identical fixpoint as the
-simple min-label propagation AND as a driver-side union-find ground
-truth, on generated graphs of varied shape (chains stress diameter,
-stars stress degree, random graphs stress everything).
+small-star implementation must reach the identical fixpoint as a
+driver-side union-find ground truth, on generated graphs of varied
+shape (chains stress diameter, stars stress degree, random graphs
+stress everything).
 
-Also covers the convergence guards: an unconverged run must raise, not
+Also covers the convergence guard: an unconverged run must raise, not
 return a partial clustering.
 """
 
@@ -14,7 +14,7 @@ import random
 
 import pytest
 
-from deloton_solo_spark.operators.dedup import cc_large_small_star, cc_min_label
+from deloton_solo_spark.operators.dedup import cc_large_small_star
 
 
 def _union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -64,24 +64,21 @@ def test_cc_variants_agree_with_union_find(spark, name, edges):
     got_star = {
         r.id: r.label for r in cc_large_small_star(df).collect()
     }
-    got_label = {r.id: r.label for r in cc_min_label(df).collect()}
-    # min-label only labels vertices with a non-self-loop edge; the
-    # star variant labels every vertex in the input (self-loop
-    # vertices become singletons). Compare on the union-find domain.
+    # the star variant labels every vertex in the input (self-loop
+    # vertices become singletons); compare on the union-find domain
     for v, want in truth.items():
         assert got_star[v] == want, f"{name}: large/small-star wrong at {v}"
-    for v, got in got_label.items():
-        assert truth[v] == got, f"{name}: min-label wrong at {v}"
     # every vertex the star variant labels maps to a component min
     for v, lbl in got_star.items():
         assert truth.get(v, v) == lbl
 
 
-def test_cc_min_label_raises_when_diameter_exceeds_rounds(spark):
-    chain = [(i, i + 1) for i in range(12)]
+def test_cc_large_small_star_raises_when_rounds_run_out(spark):
+    # a 40-chain cannot collapse to stars in one round
+    chain = [(i, i + 1) for i in range(40)]
     df = spark.createDataFrame(chain, "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        cc_min_label(df, max_rounds=3)
+        cc_large_small_star(df, max_rounds=1)
 
 
 def test_cc_large_small_star_logarithmic_rounds(spark):

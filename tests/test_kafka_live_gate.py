@@ -9,7 +9,9 @@ convention, BASELINE.md gate rows; re-checked 2026-08-16 r9: unset).
 Where a broker exists, the test drives ``readStream.format("kafka")``
 through the identical wire projection and asserts the stream starts
 and the schema matches :data:`WIRE_SCHEMA` — the contract the batch
-fixtures pin, proven live.
+fixtures pin, proven live. The broker-free leg of the contract (names
+and types of ``wire_projection`` over the connector's schema) is
+tests/test_wire_contract.py's.
 """
 
 from __future__ import annotations
@@ -19,29 +21,6 @@ import os
 import pytest
 
 BOOTSTRAP = os.environ.get("SPARK_KAFKA_BOOTSTRAP")
-
-
-def test_wire_projection_contract_holds_without_broker(spark):
-    # the broker-free leg of the gate: the projection applied to a
-    # frame with the connector's exact published schema must land on
-    # WIRE_SCHEMA (tests/test_wire_contract.py covers values; this
-    # asserts the gate file itself exercises the same contract)
-    from pyspark.sql import functions as F
-
-    from deloton_solo_spark.streaming.pipeline import (
-        WIRE_SCHEMA,
-        wire_projection,
-    )
-
-    raw = spark.createDataFrame(
-        [("deloton", 0, 0, b"1", b'{"log": "x"}', None, 0)],
-        "topic string, partition int, offset long, key binary, "
-        "value binary, timestamp timestamp, timestampType int",
-    ).withColumn("timestamp", F.current_timestamp())
-    out = wire_projection(raw)
-    assert [f.name for f in out.schema.fields] == [
-        f.name for f in WIRE_SCHEMA.fields
-    ]
 
 
 @pytest.mark.skipif(

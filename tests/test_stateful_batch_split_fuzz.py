@@ -24,38 +24,26 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from deloton_solo_spark.catalog import load_table
 from deloton_solo_spark.operators.streaming_ops import (
     _cusum_kernel_factory,
     _interval_union_kernel,
     _inversion_kernel,
-    _scratch,
 )
-from deloton_solo_spark.streaming.pipeline import run_stream_to_parquet
+from deloton_solo_spark.streaming.pipeline import Replay, keyed_state
 
 from .conftest import SF_DIR
 
 SEEDS = [11, 23, 37, 41, 53]
 
 
-def _drain(spark, src, out, ckpt, schema, key_col, kernel, out_schema,
-           state_schema):
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1000)
-        .json(src)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            kernel,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    run_stream_to_parquet(stream, out, ckpt)
+def _replay(spark, name, schema, key_col, kernel, out_schema, state_schema):
+    """A replay of ``kernel`` keyed by ``key_col``, one micro-batch per
+    drain, and its drain into the replay's ``out`` sink."""
+    r = Replay(spark, name, schema)
+    stream = keyed_state(r.stream(), key_col, kernel, out_schema, state_schema)
+    return r, r.hop(stream, "out", "ckpt")
 
 
 # ---- X267 interval union ---------------------------------------------------
@@ -107,44 +95,35 @@ def test_interval_union_any_random_split(spark, seed):
     for r in ev:
         batches[rng.randrange(n_batches)].append(r)
 
-    src = _scratch(f"fuzz_siu_src_{seed}_")
-    out = _scratch(f"fuzz_siu_out_{seed}_")
-    ckpt = _scratch(f"fuzz_siu_ckpt_{seed}_")
-    schema = (
-        "user_id bigint, event_id bigint, s bigint, e bigint, "
-        "flush boolean"
-    )
-    for i, b in enumerate(batches):
-        rows = [
-            (r["user_id"], r["event_id"], r["s"], r["e"], False) for r in b
-        ]
-        if rows:
-            spark.createDataFrame(rows, schema).coalesce(2).write.mode(
-                "append"
-            ).json(src)
-            _drain(
-                spark, src, out, ckpt, schema, "user_id",
-                _interval_union_kernel,
-                "user_id bigint, island_start_us bigint, "
-                "island_end_us bigint, n_events bigint",
-                "starts array<bigint>, ends array<bigint>, "
-                "counts array<bigint>",
-            )
-    users = sorted({r["user_id"] for r in ev})
-    spark.createDataFrame(
-        [(u, -1, 0, 0, True) for u in users], schema
-    ).coalesce(1).write.mode("append").json(src)
-    _drain(
-        spark, src, out, ckpt, schema, "user_id",
+    replay, drain = _replay(
+        spark,
+        f"fuzz_siu_{seed}",
+        "user_id bigint, event_id bigint, s bigint, e bigint, flush boolean",
+        "user_id",
         _interval_union_kernel,
         "user_id bigint, island_start_us bigint, island_end_us bigint, "
         "n_events bigint",
         "starts array<bigint>, ends array<bigint>, counts array<bigint>",
     )
+    for b in batches:
+        rows = [
+            (r["user_id"], r["event_id"], r["s"], r["e"], False) for r in b
+        ]
+        if rows:
+            replay.feed(
+                spark.createDataFrame(rows, replay.schema).coalesce(2), drain
+            )
+    users = sorted({r["user_id"] for r in ev})
+    replay.feed(
+        spark.createDataFrame(
+            [(u, -1, 0, 0, True) for u in users], replay.schema
+        ).coalesce(1),
+        drain,
+    )
     got = {
         (r["user_id"], r["island_start_us"], r["island_end_us"],
          r["n_events"])
-        for r in spark.read.parquet(out).collect()
+        for r in replay.read("out").collect()
     }
     want = _py_islands([(r["user_id"], r["s"], r["e"]) for r in ev])
     assert got == want
@@ -188,24 +167,25 @@ def test_inversion_monitor_any_contiguous_split(spark, seed):
     chunks = [
         ev[a:b] for a, b in zip([0] + cuts, cuts + [len(ev)])
     ]
-    src = _scratch(f"fuzz_sinv_src_{seed}_")
-    out = _scratch(f"fuzz_sinv_out_{seed}_")
-    ckpt = _scratch(f"fuzz_sinv_ckpt_{seed}_")
-    schema = "event_id bigint, user_id bigint, us bigint"
+    replay, drain = _replay(
+        spark,
+        f"fuzz_sinv_{seed}",
+        "event_id bigint, user_id bigint, us bigint",
+        "user_id",
+        _inversion_kernel,
+        "user_id bigint, n_events bigint, n_inversions bigint, "
+        "inversion_rate double, max_backstep_us bigint",
+        "last_us long, n_ev long, n_inv long, max_back long",
+    )
     for chunk in chunks:
-        spark.createDataFrame(
-            [(r["event_id"], r["user_id"], r["us"]) for r in chunk], schema
-        ).coalesce(1).write.mode("append").json(src)
-        _drain(
-            spark, src, out, ckpt, schema, "user_id", _inversion_kernel,
-            "user_id bigint, n_events bigint, n_inversions bigint, "
-            "inversion_rate double, max_backstep_us bigint",
-            "last_us long, n_ev long, n_inv long, max_back long",
+        rows = [(r["event_id"], r["user_id"], r["us"]) for r in chunk]
+        replay.feed(
+            spark.createDataFrame(rows, replay.schema).coalesce(1), drain
         )
     # monitor emits one row per (user, batch-with-rows): the LAST
     # (max n_events) row per user is the converged state
     final = {}
-    for r in spark.read.parquet(out).collect():
+    for r in replay.read("out").collect():
         cur = final.get(r["user_id"])
         if cur is None or r["n_events"] > cur[0]:
             final[r["user_id"]] = (
@@ -269,23 +249,23 @@ def test_cusum_chart_any_contiguous_bar_split(spark, seed):
     chunks = [
         daily[a:b] for a, b in zip([0] + cuts, cuts + [len(daily)])
     ]
-    src = _scratch(f"fuzz_scusum_src_{seed}_")
-    out = _scratch(f"fuzz_scusum_out_{seed}_")
-    ckpt = _scratch(f"fuzz_scusum_ckpt_{seed}_")
-    schema = "day string, cents long, chart int"
-    kernel = _cusum_kernel_factory(mu, sigma, slack, alarm)
+    replay, drain = _replay(
+        spark,
+        f"fuzz_scusum_{seed}",
+        "day string, cents long, chart int",
+        "chart",
+        _cusum_kernel_factory(mu, sigma, slack, alarm),
+        "day string, revenue double, s_stat double, is_alarm boolean",
+        "p long, minp long",
+    )
     for chunk in chunks:
-        spark.createDataFrame(
-            [(r["day"], r["cents"], 1) for r in chunk], schema
-        ).coalesce(1).write.mode("append").json(src)
-        _drain(
-            spark, src, out, ckpt, schema, "chart", kernel,
-            "day string, revenue double, s_stat double, is_alarm boolean",
-            "p long, minp long",
+        rows = [(r["day"], r["cents"], 1) for r in chunk]
+        replay.feed(
+            spark.createDataFrame(rows, replay.schema).coalesce(1), drain
         )
     got = sorted(
         (r["day"], r["s_stat"], r["is_alarm"])
-        for r in spark.read.parquet(out).collect()
+        for r in replay.read("out").collect()
     )
     want = sorted(
         _py_cusum([(r["day"], r["cents"]) for r in daily],

@@ -9,50 +9,39 @@ message must not take down a 100 TB ingest.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
+from deloton_solo_spark.operators.sinks import upsert_writer
 from deloton_solo_spark.streaming.pipeline import (
-    file_wire_stream,
-    ingest_available_now,
+    WIRE_SCHEMA,
+    Replay,
     parse_wire_stream,
 )
 
 
-def _scratch(prefix: str) -> str:
-    p = tempfile.mkdtemp(prefix=prefix)
-    shutil.rmtree(p, ignore_errors=True)
-    return p
-
-
-def _write_wire(spark, rows, src, mode="append"):
-    spark.createDataFrame(
-        rows,
-        "topic string, partition int, offset long, key string, "
-        "value string, ts timestamp",
-    ).write.mode(mode).json(src)
+def _ingest(r: Replay, parsed):
+    """A drain of ``parsed`` into the replay's idempotent ``out`` sink."""
+    upsert = upsert_writer(["offset"], parquet_path=r.path("out"))
+    return r.hop(parsed, upsert, "ckpt")
 
 
 def test_corrupt_envelope_degrades_to_null_not_crash(spark):
-    src, out = _scratch("rob_src_"), _scratch("rob_out_")
+    r = Replay(spark, "rob", WIRE_SCHEMA)
     good = '{"log": "2024-01-01 10:00:00.000000 [INFO]: Getting user data from server"}'
     rows = [
         ("deloton", 0, 0, "1", good, None),
         ("deloton", 0, 1, "1", "NOT JSON AT ALL {{{", None),
         ("deloton", 0, 2, "1", '{"wrong_field": 1}', None),
     ]
-    _write_wire(spark, rows, src)
-    parsed = parse_wire_stream(file_wire_stream(spark, src)).select(
+    parsed = parse_wire_stream(r.stream()).select(
         "offset",
         "user_id",
         F.date_format("line_ts", "yyyy-MM-dd HH:mm:ss").alias("line_ts"),
         "line_type",
     )
-    ingest_available_now(parsed, out, _scratch("rob_ckpt_"), keys=["offset"])
-    got = {
-        r.offset: r.asDict() for r in spark.read.parquet(out).collect()
-    }
+    r.feed(spark.createDataFrame(rows, r.schema), _ingest(r, parsed))
+    got = {row.offset: row.asDict() for row in r.read("out").collect()}
     assert set(got) == {0, 1, 2}  # nothing dropped, nothing crashed
     assert got[0]["line_type"] == "user_fetch"
     assert got[0]["line_ts"] == "2024-01-01 10:00:00"
@@ -61,37 +50,29 @@ def test_corrupt_envelope_degrades_to_null_not_crash(spark):
 
 
 def test_checkpoint_resume_processes_only_the_delta(spark):
-    src, out = _scratch("delta_src_"), _scratch("delta_out_")
-    ckpt = _scratch("delta_ckpt_")
-
-    def run():
-        parsed = parse_wire_stream(file_wire_stream(spark, src)).select(
-            "offset", "line_type"
-        )
-        ingest_available_now(parsed, out, ckpt, keys=["offset"])
+    r = Replay(spark, "delta", WIRE_SCHEMA)
+    run = _ingest(r, parse_wire_stream(r.stream()).select("offset", "line_type"))
 
     batch1 = [
         ("deloton", 0, i, "1", '{"log": "x Ride - duration = 1; resistance = 2"}', None)
         for i in range(5)
     ]
-    _write_wire(spark, batch1, src)
-    run()
-    assert spark.read.parquet(out).count() == 5
+    r.feed(spark.createDataFrame(batch1, r.schema), run)
+    assert r.read("out").count() == 5
 
     # same checkpoint, new files appear → only the delta is read
     batch2 = [
         ("deloton", 0, 100 + i, "1", '{"log": "x Telemetry - hrt = 1; rpm = 2; power = 3"}', None)
         for i in range(3)
     ]
-    _write_wire(spark, batch2, src)
-    run()
-    df = spark.read.parquet(out)
+    r.feed(spark.createDataFrame(batch2, r.schema), run)
+    df = r.read("out")
     assert df.count() == 8  # 5 + 3, no reprocessing duplicates
     assert df.filter(F.col("line_type") == "telemetry").count() == 3
 
     # rerun with NO new data: a no-op
     run()
-    assert spark.read.parquet(out).count() == 8
+    assert r.read("out").count() == 8
 
 
 def test_bounded_dedup_state_evicts_old_keys(spark):
@@ -103,28 +84,16 @@ def test_bounded_dedup_state_evicts_old_keys(spark):
     state store (and the sink must still be exactly-once)."""
     import datetime
 
-    src, out = _scratch("evict_src_"), _scratch("evict_out_")
-    ckpt = _scratch("evict_ckpt_")
-    schema = "event_id bigint, ts timestamp"
+    r = Replay(spark, "evict", "event_id bigint, ts timestamp")
     t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    deduped = r.stream().withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
+    drain = r.hop(deduped, "out", "ckpt")
 
-    def write(rows, mode="append"):
-        spark.createDataFrame(rows, schema).write.mode(mode).json(src)
-
-    def run():
-        stream = spark.readStream.schema(schema).json(src)
-        deduped = stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def run(rows):
+        r.feed(spark.createDataFrame(rows, r.schema))
+        q = drain()
         totals = [
             p["stateOperators"][0]["numRowsTotal"]
             for p in (q.recentProgress or [])
@@ -133,22 +102,19 @@ def test_bounded_dedup_state_evicts_old_keys(spark):
         return totals[-1] if totals else None
 
     # drain 1: 100 distinct keys (each delivered twice) at t0
-    write([(i, t0) for i in range(100)] * 2)
-    state1 = run()
+    state1 = run([(i, t0) for i in range(100)] * 2)
     assert state1 == 100  # all keys in state, duplicates dropped
 
     # drain 2: 5 keys ten days later — watermark jumps past t0
-    write([(1000 + i, t0 + datetime.timedelta(days=10)) for i in range(5)])
-    run()
+    run([(1000 + i, t0 + datetime.timedelta(days=10)) for i in range(5)])
 
     # drain 3: one more advancing row; the t0 burst must now be evicted
-    write([(2000, t0 + datetime.timedelta(days=10, minutes=1))])
-    state3 = run()
+    state3 = run([(2000, t0 + datetime.timedelta(days=10, minutes=1))])
     assert state3 is not None and state3 <= 10, (
         f"state store kept {state3} rows — watermark eviction not working"
     )
 
-    got = spark.read.parquet(out)
+    got = r.read("out")
     assert got.count() == 106  # 100 + 5 + 1, exactly-once
     assert got.select("event_id").distinct().count() == 106
 
@@ -158,27 +124,41 @@ def test_staged_upsert_writer_is_idempotent(spark):
     upsert_writer) in its parquet degradation: the same stream drained
     twice through fresh checkpoints (full redelivery) must leave the
     sink exactly-once."""
-    from deloton_solo_spark.operators.sinks import upsert_writer
-
-    src, out = _scratch("upsert_src_"), _scratch("upsert_out_")
-    spark.createDataFrame(
-        [(i, f"v{i}") for i in range(50)], "k long, v string"
-    ).write.json(src)
-
-    for attempt in range(2):  # independent checkpoints = redelivery
-        stream = spark.readStream.schema("k long, v string").json(src)
-        (
-            stream.writeStream.foreachBatch(
-                upsert_writer(["k"], parquet_path=out)
-            )
-            .option("checkpointLocation", _scratch(f"upsert_ckpt{attempt}_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    got = spark.read.parquet(out)
+    r = Replay(spark, "upsert", "k long, v string")
+    upsert = upsert_writer(["k"], parquet_path=r.path("out"))
+    r.feed(
+        spark.createDataFrame([(i, f"v{i}") for i in range(50)], r.schema),
+        # independent checkpoints = redelivery
+        *(r.hop(r.stream(), upsert, f"ckpt{attempt}") for attempt in range(2)),
+    )
+    got = r.read("out")
     assert got.count() == 50
     assert got.select("k").distinct().count() == 50
+
+
+def test_idempotent_append_keeps_the_frame_column_order(spark, tmp_path):
+    """Every file of an idempotent sink lists the frame's columns in the
+    frame's order: a later append's anti-join against the existing keys
+    must not move the key columns first, or the sink's footers disagree
+    and a reader's column order depends on which footer it samples."""
+    import pyarrow.parquet as pq
+
+    from deloton_solo_spark.operators.sinks import idempotent_append
+
+    sink = str(tmp_path / "sink")
+    schema = "v string, k long, w double"
+    for rows in ([("a", 1, 0.5), ("b", 2, 1.5)], [("c", 3, 2.5), ("a", 1, 0.5)]):
+        idempotent_append(spark.createDataFrame(rows, schema), sink, ["k"])
+    footers = sorted(tmp_path.glob("sink/*.parquet"))
+    written = [f for f in footers if pq.read_metadata(f).num_rows]
+    assert len(written) >= 2  # both appends wrote rows
+    for f in footers:
+        assert pq.read_schema(f).names == ["v", "k", "w"], f
+    assert sorted(spark.read.parquet(sink).collect()) == sorted(
+        spark.createDataFrame(
+            [("a", 1, 0.5), ("b", 2, 1.5), ("c", 3, 2.5)], schema
+        ).collect()
+    )
 
 
 def test_staged_upsert_builds_not_exists_merge(spark, monkeypatch):

@@ -10,9 +10,9 @@ pinned is the contract that makes the documented swap-in true:
    Integration Guide). We freeze that schema here.
 2. `wire_projection` (the post-`.load()` select shared by the live
    reader) applied to that schema must produce exactly `WIRE_SCHEMA`.
-3. The batch generator `kafka_wire` and the file-replay source
-   `file_wire_stream` must emit the same columns/types, so every
-   downstream operator is source-agnostic.
+3. The batch generator `kafka_wire` and the file-replay source (a
+   `Replay` over `WIRE_SCHEMA`) must emit the same columns/types, so
+   every downstream operator is source-agnostic.
 
 If Spark ever changes the connector schema, or an edit drifts any of
 the three sources apart, this fails naming the column.
@@ -26,7 +26,7 @@ from deloton_solo_spark.functions.logsim import synthetic_log
 from deloton_solo_spark.operators.sources import kafka_wire
 from deloton_solo_spark.streaming.pipeline import (
     WIRE_SCHEMA,
-    file_wire_stream,
+    Replay,
     wire_projection,
 )
 
@@ -61,10 +61,9 @@ def test_batch_generator_matches_wire_schema(spark):
     assert _shape(wire.schema) == _shape(WIRE_SCHEMA)
 
 
-def test_file_replay_matches_wire_schema(spark, tmp_path):
-    wire = kafka_wire(synthetic_log(spark, SF_DIR)).limit(4)
-    path = str(tmp_path / "wire")
-    wire.write.json(path)
-    stream = file_wire_stream(spark, path)
+def test_file_replay_matches_wire_schema(spark):
+    r = Replay(spark, "wire", WIRE_SCHEMA)
+    r.feed(kafka_wire(synthetic_log(spark, SF_DIR)).limit(4))
+    stream = r.stream()
     assert stream.isStreaming
     assert _shape(stream.schema) == _shape(WIRE_SCHEMA)
