@@ -1,6 +1,8 @@
 """The engine's one memo mechanism, :class:`Memo`. ``catalog`` keeps its
 footer schemas in one; ``api`` keeps its resolved route frames in one
-(8 frames, each within the broadcast threshold when held locally);
+(8 entries; a local one holds its relation and its serialized rows,
+each within the broadcast threshold, and key indexes that grow with
+its row count);
 :data:`ARTIFACTS` holds the corpus artifacts (``similarity``'s
 checkpoints, ``dedup``'s parquet indexes and masks). The last two are
 keyed by :func:`input_identity` of their files, so a table or corpus

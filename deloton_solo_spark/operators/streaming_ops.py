@@ -459,10 +459,12 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range bound — that pair is what lets the engine EVICT buffered
     state (a click older than watermark - 1h can never match again), so
     state stays bounded on an infinite stream. Inner joins emit eagerly
-    on match (no watermark wait), so one AvailableNow drain suffices;
-    matching works across micro-batches through the state store. At
-    100 TB state is partitioned by the equi-key (user_id) — the same
-    shuffle shape as the batch join.
+    on match (no watermark wait). The replay is two time-ordered
+    micro-batches, so the first batch's rows reach the second through
+    the state store; a pair can match across them only if it straddles
+    the cut, which in the test catalogs is rare (no pair at sf0.001 or
+    sf0.01, one of 371 at sf0.1). At 100 TB state is partitioned by the
+    equi-key (user_id) — the same shuffle shape as the batch join.
 
     The oracle is the batch self-join: stream-stream inner join
     semantics are exactly batch-join semantics, delivered incrementally.
@@ -471,10 +473,10 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type"
     )
     r = Replay(spark, "attr", _EVENT_STREAM)
-    # split the replay across files so clicks and purchases of the same
-    # user land in different micro-batch inputs (cross-batch matching).
+    # two time-ordered rounds, so a click late in the first and a
+    # purchase early in the second match across micro-batches
     run = r.hop(_attribution(r.stream(), "inner"), "out", "ckpt")
-    r.feed(ev.coalesce(8), run)
+    r.feed_in_time_order(ev, run)
     return r.read("out")
 
 
@@ -595,10 +597,8 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates map-side before touching state."""
     from .analytics import _HLL_ALPHA, _HLL_M, _HLL_MAX_RHO_POW
 
-    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    r = Replay(
-        spark, "shll", "event_type string, user_id bigint", files_per_trigger=2
-    )
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "ts")
+    r = Replay(spark, "shll", "event_type string, user_id bigint, ts timestamp")
 
     h = F.md5(F.concat(F.lit("hll-"), F.col("user_id").cast("string")))
     bucket = (
@@ -619,7 +619,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # complete mode: each micro-batch carries the whole grid
         registers.write.mode("overwrite").parquet(out)
 
-    r.feed(ev.coalesce(8), r.hop(grid, _snapshot, "ckpt", "complete"))
+    r.feed_in_time_order(ev, r.hop(grid, _snapshot, "ckpt", "complete"))
     regs = r.read("out")
     s = regs.groupBy("event_type").agg(
         (

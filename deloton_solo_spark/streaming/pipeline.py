@@ -238,14 +238,9 @@ class Replay:
     parquet sink (:meth:`stream_sink`)."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        name: str,
-        schema: str | StructType,
-        files_per_trigger: int = ONE_BATCH_FILES,
+        self, spark: SparkSession, name: str, schema: str | StructType
     ) -> None:
         self.spark, self.name, self.schema = spark, name, schema
-        self.files_per_trigger = files_per_trigger
         self._paths: dict[str, str] = {}
         self.src = self.path("src")
 
@@ -262,7 +257,7 @@ class Replay:
 
     def _reader(self, schema: str | StructType):
         return self.spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", self.files_per_trigger
+            "maxFilesPerTrigger", ONE_BATCH_FILES
         )
 
     def stream(self) -> DataFrame:
@@ -293,6 +288,21 @@ class Replay:
         frame.write.mode("append").json(self.src)
         for run in hops:
             run()
+
+    def feed_in_time_order(self, frame: DataFrame, *hops) -> None:
+        """Feed ``frame`` as two rounds cut at the midpoint of its
+        ``ts`` span (one min/max collect), draining each hop after each
+        round: a two-batch replay. No row of the second micro-batch is
+        earlier than a row of the first, so a watermark drops none of
+        them as late, and rows on either side of the cut meet across
+        micro-batches through the state store. A row without ``ts``
+        goes in the first round."""
+        us = F.unix_micros("ts")
+        lo, hi = frame.agg(F.min(us), F.max(us)).first()
+        late = F.lit(False) if lo is None else us >= lo + (hi - lo) // 2
+        late = F.coalesce(late, F.lit(False))
+        self.feed(frame.filter(~late), *hops)
+        self.feed(frame.filter(late), *hops)
 
     def flush_watermark(
         self, replayed: DataFrame, sentinels: list[dict], *hops

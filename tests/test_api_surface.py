@@ -160,16 +160,17 @@ _REQUESTS = [
     ("/daily", {"date": "1995-01"}),
     ("/daily", {"date": "1995-01-20"}),
     ("/rides/gender", {"gender": "BUILDING"}),
+    ("/ride/del", {"ride_id": 5, "limit": 50}),
 ]
 
 
 def _fresh_parquet_serve(spark, route, params):
     """``serve`` as it answered before the resolver: each route frame
-    is built over a fresh ``load_table`` relation and serialized with
-    ``toJSON``."""
+    is built over a fresh ``load_table`` relation, filtered by Catalyst
+    and serialized with ``toJSON``."""
 
-    def resolved(spark, sf_dir, name, project):
-        return project(load_table(spark, sf_dir, name))
+    def resolved(spark, idents, frame, size):
+        return api._Frame(frame(), None)
 
     def records(df, limit=None):
         if limit is not None:
@@ -193,21 +194,51 @@ def test_routes_match_fresh_parquet_tojson_bytes(spark, route, params):
     assert got == _fresh_parquet_serve(spark, route, params)
 
 
-def test_resolver_sees_in_place_rewrite(spark, tmp_path):
-    """A table rewritten in place, even at the same size and with its
-    mtime reset, is resolved again: ``/ride`` returns the new value."""
-    path = tmp_path / "orders.parquet"
-    shutil.copy(f"{SF_DIR}/orders.parquet", path)
-    table = pq.read_table(path)
-    row = table["o_orderkey"].to_pylist().index(5)
-    prices = table["o_totalprice"].to_pylist()
-    col = table.schema.get_field_index("o_totalprice")
+def _ride_prices(spark, tmp_path, ride_id):
+    """Ways to read the price of ride ``ride_id`` from the catalog in
+    ``tmp_path``: by ``ride_id``, through the ``user_id`` index of the
+    rides frame, and through the ``gender`` index of the users⋈rides
+    join."""
+    (ride,) = json.loads(serve(spark, str(tmp_path), "/ride", ride_id=ride_id))
+    (rider,) = json.loads(
+        serve(spark, str(tmp_path), "/rider", user_id=ride["user_id"])
+    )
 
-    def ride_price():
-        (rec,) = json.loads(serve(spark, str(tmp_path), "/ride", ride_id=5))
+    def by(route, **params):
+        rides = json.loads(serve(spark, str(tmp_path), route, **params))
+        (rec,) = [r for r in rides if r["ride_id"] == ride_id]
         return rec["duration"]
 
-    assert ride_price() == prices[row]
+    return {
+        "/ride": ride["duration"],
+        "/rider/rides": by("/rider/rides", user_id=ride["user_id"]),
+        "/rides/gender": by("/rides/gender", gender=rider["gender"]),
+    }
+
+
+def _catalog_copy(tmp_path):
+    """A copy of the users and rides tables in ``tmp_path``; returns the
+    orders table, its ``o_totalprice`` column index and prices, and the
+    row of ride 5."""
+    for table in ("customer", "orders"):
+        shutil.copy(f"{SF_DIR}/{table}.parquet", tmp_path / f"{table}.parquet")
+    table = pq.read_table(tmp_path / "orders.parquet")
+    row = table["o_orderkey"].to_pylist().index(5)
+    col = table.schema.get_field_index("o_totalprice")
+    return table, col, table["o_totalprice"].to_pylist(), row
+
+
+def test_resolver_sees_in_place_rewrite(spark, tmp_path):
+    """A table rewritten in place, even at the same size and with its
+    mtime reset, is resolved again: ``/ride``, ``/rider/rides`` and the
+    join route ``/rides/gender`` return the new value."""
+    path = tmp_path / "orders.parquet"
+    table, col, prices, row = _catalog_copy(tmp_path)
+
+    def all_read(price):
+        return set(_ride_prices(spark, tmp_path, 5).values()) == {price}
+
+    assert all_read(prices[row])
     sizes = []
     for bump in (1.0, 2.0):
         prices[row] += bump
@@ -218,8 +249,78 @@ def test_resolver_sees_in_place_rewrite(spark, tmp_path):
         os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
         sizes.append(os.stat(path).st_size)
         assert os.stat(path).st_mtime_ns == before.st_mtime_ns
-        assert ride_price() == prices[row]
+        assert all_read(prices[row])
     assert sizes[0] == sizes[1]  # the second rewrite kept the size too
+
+
+def test_join_is_keyed_by_its_inputs_identities(spark, tmp_path, monkeypatch):
+    """A rides file rewritten after ``/rides/gender`` resolved its
+    inputs, but before it looked up the join, leaves no stale join
+    under the new file's identity: the next request sees the new
+    value."""
+    path = tmp_path / "orders.parquet"
+    table, col, prices, row = _catalog_copy(tmp_path)
+    old = prices[row]
+    prices[row] += 1.0
+    user = table["o_custkey"][row].as_py()
+    (rider,) = json.loads(serve(spark, str(tmp_path), "/rider", user_id=user))
+    resolve, rewrites = api._table, []
+
+    def rewritten_after(spark, sf_dir, name, ident):
+        frame = resolve(spark, sf_dir, name, ident)
+        if name == "orders" and not rewrites:
+            rewrites.append(path)
+            pq.write_table(
+                table.set_column(col, "o_totalprice", pa.array(prices)), path
+            )
+        return frame
+
+    monkeypatch.setattr(api, "_table", rewritten_after)
+
+    def join_price():
+        rides = json.loads(
+            serve(spark, str(tmp_path), "/rides/gender", gender=rider["gender"])
+        )
+        (rec,) = [r for r in rides if r["ride_id"] == 5]
+        return rec["duration"]
+
+    assert join_price() == old  # its inputs were resolved before the rewrite
+    assert join_price() == prices[row]
+
+
+def test_rows_over_the_threshold_stay_parquet(spark, tmp_path):
+    """A table whose Spark estimate is within the broadcast threshold
+    but whose rows' JSON is not (a long name repeated on every row,
+    which parquet stores once) stays a parquet leaf and answers the
+    same; the unchanged table is local under the same threshold."""
+    table = pq.read_table(f"{SF_DIR}/customer.parquet")
+    name = "x" * 5000
+    pq.write_table(
+        table.set_column(
+            table.schema.get_field_index("c_name"),
+            "c_name",
+            pa.array([name] * table.num_rows),
+        ),
+        tmp_path / "customer.parquet",
+    )
+    bound = table.num_rows * 1000  # each row's JSON is over 5000 chars
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(bound))
+    try:
+        users = api._users(spark, str(tmp_path))
+        assert users.rows is None and api._estimate(users.df) <= bound
+        assert api._users(spark, SF_DIR).rows is not None
+        got = json.loads(serve(spark, str(tmp_path), "/rider", user_id=7))
+        segment = got[0]["gender"]
+        riders = json.loads(
+            serve(spark, str(tmp_path), "/riders/gender", gender=segment)
+        )
+    finally:
+        spark.conf.set(conf, old)
+    assert [(r["user_id"], r["name"]) for r in got] == [(7, name)]
+    expect = _get(spark, "/riders/gender", gender=segment)
+    assert [{**r, "name": name} for r in expect] == riders
 
 
 def test_parquet_leaf_answers_the_same(spark):
@@ -263,3 +364,73 @@ def test_concurrent_requests_get_serial_answers(spark, tmp_path):
             assert list(pool.map(one, requests, timeout=600)) == serial
     finally:
         sys.setswitchinterval(interval)
+
+
+#: Each route a local frame answers from its serialized rows, with a
+#: warm-up request and a second request for another key.
+_INDEXED = [
+    ("/ride", "ride_id", 5, 7),
+    ("/rider", "user_id", 7, 8),
+    ("/rider/rides", "user_id", 7, 8),
+    ("/riders/gender", "gender", "BUILDING", "MACHINERY"),
+    ("/riders2", "number", "30", "31"),
+    ("/riders", "limit", 5, 7),
+    ("/rides", "limit", 5, 7),
+    ("/rides/gender", "gender", "BUILDING", "MACHINERY"),
+    ("/ride/del", "ride_id", 5, 7),
+]
+
+
+@pytest.mark.parametrize(
+    "route, param, warm, key", _INDEXED, ids=[r for r, *_ in _INDEXED]
+)
+def test_indexed_routes_launch_no_jobs(spark, route, param, warm, key):
+    """Once its frame is resolved and its key column indexed, a keyed,
+    limit or delete route over a local frame runs no Spark job,
+    including the users⋈rides join of ``/rides/gender``."""
+    serve(spark, SF_DIR, route, **{param: warm})
+    assert _jobs(spark, lambda: serve(spark, SF_DIR, route, **{param: key})) == 0
+
+
+@pytest.mark.parametrize(
+    "route, params",
+    [
+        ("/ride", {"ride_id": -1}),
+        ("/ride", {"ride_id": 10**9}),
+        ("/rider", {"user_id": 10**9}),
+        ("/rider/rides", {"user_id": -5}),
+        ("/riders/gender", {"gender": "NOPE"}),
+        ("/rides/gender", {"gender": "NOPE"}),
+        ("/riders2", {"number": "100"}),
+    ],
+)
+def test_absent_key_returns_empty_array(spark, route, params):
+    assert serve(spark, SF_DIR, route, **params) == "[]"
+
+
+def test_null_key_is_never_matched(spark, tmp_path):
+    """A user whose ``c_mktsegment`` is null is in no segment's answer
+    of ``/riders/gender`` or ``/rides/gender``, as SQL equality never
+    matches null; the user's other routes still find the row."""
+    table = pq.read_table(f"{SF_DIR}/customer.parquet")
+    segments = table["c_mktsegment"].to_pylist()
+    user = table["c_custkey"][0].as_py()
+    col = table.schema.get_field_index("c_mktsegment")
+    pq.write_table(
+        table.set_column(
+            col, "c_mktsegment", pa.array([None] + segments[1:], pa.string())
+        ),
+        tmp_path / "customer.parquet",
+    )
+    shutil.copy(f"{SF_DIR}/orders.parquet", tmp_path / "orders.parquet")
+
+    def get(route, **params):
+        return json.loads(serve(spark, str(tmp_path), route, **params))
+
+    riders = [r for g in set(segments) for r in get("/riders/gender", gender=g)]
+    assert user not in {r["user_id"] for r in riders}
+    assert len(riders) == len(segments) - 1
+    for g in set(segments):
+        assert user not in {r["user_id"] for r in get("/rides/gender", gender=g)}
+    (rider,) = get("/rider", user_id=user)
+    assert "gender" not in rider  # a null field is left out, as by toJSON
