@@ -73,13 +73,15 @@ from .session import apply_runtime_confs
 #: position per row for each indexed column (at most three per entry).
 #: Bound per entry at Spark's default 10 MB threshold: 10 MB JVM-side;
 #: 10 M characters of rows plus about 57 bytes per row of CPython
-#: object overhead; at most about 180 bytes per row and indexed column
-#: (a unique key's dict slot, one-element list and int). So 8 entries
-#: hold at most 80 MB JVM-side and 80 M characters of rows in Python,
-#: plus the per-row overheads. Measured on the benchmark catalog (2000
-#: users, 20000 rides): three entries, 2.78 MB of Spark estimate and
-#: 4.25 M characters of JSON, hold 12.4 MB of Python objects, 6.7 MB
-#: of rows and 5.7 MB of indexes on six columns (173-181 bytes per row
+#: object overhead; at most about 100 bytes per row and indexed column
+#: (a unique key's dict slot, key and bare position int; a key on two
+#: rows shares one slot between them but adds a two-element list). So
+#: 8 entries hold at most 80 MB JVM-side and 80 M characters of rows
+#: in Python, plus the per-row overheads. Measured on the benchmark
+#: catalog (2000 users, 20000 rides) by walking the entries with
+#: ``sys.getsizeof``: three entries, 2.78 MB of Spark estimate and
+#: 4.25 M characters of JSON, hold 10.5 MB of Python objects, 6.7 MB
+#: of rows and 3.8 MB of indexes on six columns (86-93 bytes per row
 #: for the unique ``ride_id`` and ``user_id``, 37-51 for the others).
 #: A serve benchmark run peaks at 3 entries (one catalog's users,
 #: rides and their join); the tier-1 suite, which serves many catalog
@@ -154,13 +156,16 @@ class _Frame:
             kind, index = self._indexes[col]
         if type(key) is not kind or (kind is int and key not in _INT64):
             return None
-        return index.get(key, [])
+        at = index.get(key, [])
+        return [at] if type(at) is int else at
 
 
 def _key_index(df: DataFrame, col: str) -> tuple[type | None, dict]:
     """``(key type, {key: positions})`` of ``df``'s ``col``: ``int``
     for an integral column, ``str`` for a string one, ``None`` (and no
-    positions) for any other."""
+    positions) for any other. A key on one row maps to its bare
+    position, and to a list of positions only from its second row on:
+    a unique column's index then holds no list at all."""
     dtype = df.schema[col].dataType
     if isinstance(dtype, IntegralType):
         kind = int
@@ -170,8 +175,15 @@ def _key_index(df: DataFrame, col: str) -> tuple[type | None, dict]:
         return None, {}
     index: dict = {}
     for i, (key,) in enumerate(df.select(col).collect()):
-        if key is not None:
-            index.setdefault(key, []).append(i)
+        if key is None:
+            continue
+        at = index.get(key)
+        if at is None:
+            index[key] = i
+        elif type(at) is int:
+            index[key] = [at, i]
+        else:
+            at.append(i)
     return kind, index
 
 

@@ -19,6 +19,12 @@ sessionization" row).
 Every stage is shuffle-light and no single task ever sees the whole
 stream, so this holds at 100 TB. The DuckDB oracle for consumers uses a
 plain global window — same semantics, different physical plan.
+
+``range_carry`` is the same scan for any order and per group: it
+range-partitions on ``(group, order)`` instead of bucketing a unique
+integral key, and every distributed rank, running sum and running max
+outside ``prefix_sum`` goes through it (``distributed_row_number`` is
+its rank form).
 """
 
 from __future__ import annotations
@@ -79,74 +85,125 @@ def prefix_sum(
     )
 
 
-#: range-partition fan-out for the distributed rank assignment.
+#: Range-partition fan-out of every :func:`range_carry` scan: each
+#: carry window sees at most this many rows per group, at any scale.
 RANK_PARTS = 8
+
+
+def range_carry(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str | Column],
+    sums: dict[str, Column] | None = None,
+    prior_max: dict[str, Column] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Per-group running aggregates ordered by ``order_cols``, with no
+    window whose state grows with a group or with the table: the
+    range-partitioned form of the two-phase scan (``prefix_sum`` is
+    the bucketed form, for a unique integral key).
+
+    1. ``repartitionByRange(RANK_PARTS, *group_cols, *order_cols)``
+       co-locates each key range; equal keys never straddle partitions.
+    2. One ``localCheckpoint`` pins the reservoir-sampled boundaries,
+       so the carry branch and the scanned branch see the same
+       partitioning (a recompute or task retry could re-sample).
+    3. Running aggregates within each (partition, group), bounded by
+       the partition's size.
+    4. The carry: one row per (partition, group), windowed group-wise
+       over the partition id and broadcast-joined back to every row.
+
+    ``sums`` maps an output name to a value: the output is the running
+    sum of the value up to and including the row (a rank is the
+    running sum of 1). ``prior_max`` maps an output name to a value:
+    the output is the max of the value over the rows BEFORE the row,
+    null for the first. Both frames are ROWS frames, so the
+    ``(group_cols, order_cols)`` keys must be unique, or a duplicate's
+    value depends on physical row order: pre-aggregate to unique keys
+    or end ``order_cols`` with a tie-breaking column.
+
+    Returns ``(scanned, partials)``: ``df``'s rows with the outputs
+    added (``group_cols`` first), and the carry's input, one row per
+    (partition, group) with each output's aggregate over it under the
+    output's name. The checkpoint is a LogicalRDD node of both, so it
+    lives as long as the caller holds either and is reclaimed by the
+    ContextCleaner afterwards."""
+    sums, prior_max = sums or {}, prior_max or {}
+    parted = (
+        df.repartitionByRange(RANK_PARTS, *group_cols, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    partials = parted.groupBy("__pid", *group_cols).agg(
+        *[F.sum(v).alias(n) for n, v in sums.items()],
+        *[F.max(v).alias(n) for n, v in prior_max.items()],
+    )
+    before = (
+        Window.partitionBy(*group_cols)
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = partials.select(
+        "__pid",
+        *group_cols,
+        *[
+            F.coalesce(F.sum(n).over(before), F.lit(0)).alias(f"__o_{n}")
+            for n in sums
+        ],
+        *[F.max(n).over(before).alias(f"__o_{n}") for n in prior_max],
+    )
+    within = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
+    upto_row = within.rowsBetween(Window.unboundedPreceding, 0)
+    before_row = within.rowsBetween(Window.unboundedPreceding, -1)
+    scanned = (
+        parted.withColumns(
+            {
+                **{f"__w_{n}": F.sum(v).over(upto_row) for n, v in sums.items()},
+                **{
+                    f"__w_{n}": F.max(v).over(before_row)
+                    for n, v in prior_max.items()
+                },
+            }
+        )
+        .join(F.broadcast(offsets), ["__pid", *group_cols])
+        .withColumns(
+            {
+                **{n: F.col(f"__o_{n}") + F.col(f"__w_{n}") for n in sums},
+                **{
+                    n: F.greatest(f"__w_{n}", f"__o_{n}")
+                    for n in prior_max
+                },
+            }
+        )
+        .drop(
+            "__pid",
+            *[f"__w_{n}" for n in [*sums, *prior_max]],
+            *[f"__o_{n}" for n in [*sums, *prior_max]],
+        )
+    )
+    return scanned, partials
 
 
 def distributed_row_number(
     df: DataFrame,
-    order_cols: list[Column],
+    order_cols: list[str | Column],
     out_name: str = "rn",
     with_total: str | None = None,
 ) -> DataFrame:
     """Global 1-based ``row_number`` over ``order_cols`` (which must be
-    a UNIQUE total order) WITHOUT a global sort-window — the
-    ``_snm_cand`` fragment (operators/dedup.py) promoted to a shared
-    primitive so dimension-sized ranking queries stop funneling the
-    whole dimension through one WindowExec task:
-
-    ``repartitionByRange`` co-locates each key range (equal keys never
-    straddle partitions); per-partition ``row_number`` is bounded by
-    partition size; the ONLY global window left is the carry over ONE
-    ROW PER RANGE PARTITION (``RANK_PARTS`` rows at any scale — the
-    prefix_sum discipline above). localCheckpoint pins the
-    reservoir-sampled range boundaries so the counts branch and the
-    ranked branch observe identical partitioning (task-retry race).
+    a UNIQUE total order) WITHOUT a global sort-window: the rank form
+    of :func:`range_carry`, a running sum of 1 with no group. The only
+    global window left is the carry over one row per range partition
+    (``RANK_PARTS`` rows at any scale).
 
     ``with_total``: also attach the total row count as a column of this
     name, broadcast from the same per-partition counts (no extra scan).
 
-    Storage lifecycle (ADVICE r7): ONE checkpoint per call — ``counts``
-    (≤ ``RANK_PARTS`` rows) stays lazy, since determinism only needs the
-    pinned ``parted`` it derives from; its two tiny consumers re-scan
-    the in-memory checkpoint instead of materializing a second copy.
-    The ``parted`` checkpoint is a LogicalRDD node of the returned
-    plan, so it lives exactly as long as the caller holds the result
-    and is reclaimed by the ContextCleaner afterwards — a caller that
-    ranks the same base repeatedly (rfm_segmentation: three quartile
-    orders) holds three partition-pinned copies while its result is
-    alive, by construction, not by leak.
-    """
-    parted = (
-        df.repartitionByRange(RANK_PARTS, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = parted.groupBy("__pid").count()
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(
-            F.sum("count").over(
-                Window.orderBy("__pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("__off"),
-    )
-    within = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*order_cols)
-    )
-    ranked = (
-        parted.withColumn("__wrn", within)
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(out_name, F.col("__off") + F.col("__wrn"))
-        .drop("__pid", "__wrn", "__off")
-    )
+    A caller that ranks the same base repeatedly (rfm_segmentation:
+    three quartile orders) holds one partition-pinned checkpoint per
+    rank while its result is alive, by construction, not by leak."""
+    ranked, counts = range_carry(df, [], order_cols, {out_name: F.lit(1)})
     if with_total is not None:
-        total = counts.agg(
-            F.sum("count").cast("bigint").alias(with_total)
-        )
+        total = counts.agg(F.sum(out_name).cast("bigint").alias(with_total))
         ranked = ranked.crossJoin(F.broadcast(total))
     return ranked
 
@@ -171,67 +228,4 @@ def ntile_from_rank(rn: Column, n: Column, k: int) -> Column:
             rem + F.floor((rn - head + safe_base - 1) / safe_base)
         )
         .cast("bigint")
-    )
-
-
-def grouped_prefix_sum(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    value: Column,
-    out_name: str,
-) -> DataFrame:
-    """PER-GROUP running sum of ``value`` ordered by ``order_cols``
-    WITHOUT per-group sort-window state bounded by the group size —
-    the grouped sibling of :func:`distributed_row_number`, for
-    cumulative-weight scans (weighted quantiles, Lorenz/Gini curves)
-    where one group can be most of the table:
-
-    ``repartitionByRange(group, order)`` co-locates each (group, order)
-    range; within-partition running sums are bounded by PARTITION size
-    (not group size); the carry is one row per (partition, group) —
-    ≤ ``RANK_PARTS × |groups|`` rows, windowed group-wise over the partition
-    id and broadcast back. localCheckpoint pins the sampled range
-    boundaries so the carry branch and the ranked branch observe the
-    same partitioning (the distributed_row_number discipline).
-
-    PRECONDITION: (group_cols, order_cols) keys must be UNIQUE —
-    the within-partition running sum uses a ROWS frame ordered only
-    by ``order_cols``, so duplicate keys make each duplicate's
-    cumulative value depend on arbitrary physical row order.
-    Pre-aggregate to unique keys first (as weighted_median_price
-    does), or pass a tie-breaking column at the end of
-    ``order_cols``.
-    """
-    parted = (
-        df.repartitionByRange(RANK_PARTS, *group_cols, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__v", value)
-        .localCheckpoint()
-    )
-    carry = parted.groupBy("__pid", *group_cols).agg(
-        F.sum("__v").alias("__psum")
-    )
-    offsets = carry.select(
-        "__pid",
-        *group_cols,
-        F.coalesce(
-            F.sum("__psum").over(
-                Window.partitionBy(*group_cols)
-                .orderBy("__pid")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__off"),
-    )
-    within = F.sum("__v").over(
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        parted.withColumn("__w", within)
-        .join(F.broadcast(offsets), ["__pid", *group_cols])
-        .withColumn(out_name, F.col("__off") + F.col("__w"))
-        .drop("__pid", "__v", "__w", "__off")
     )

@@ -18,7 +18,11 @@ from ..catalog import load_table
 from ..functions.epoch import epoch_us
 from ..functions.parity import exact_round, md5_int, tokens
 from ..functions.quantiles import exact_quantiles_two_pass
-from ..functions.windows import distributed_row_number, ntile_from_rank
+from ..functions.windows import (
+    distributed_row_number,
+    ntile_from_rank,
+    range_carry,
+)
 from ..registry import query
 
 
@@ -1866,10 +1870,6 @@ def bloom_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # X150 — skyline (Pareto frontier) query -----------------------------------
-#: range-partition fan-out for the distributed frontier scan.
-SKY_PARTS = 8
-
-
 @query(
     "skyline_pareto_orders",
     oracle="""
@@ -1906,13 +1906,12 @@ def skyline_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     price order keeping a running max of date; a row survives iff its
     date beats every higher-price group's max and is its own group's
     max. That prefix runs DISTRIBUTED, never as a global sort-window:
-    ``repartitionByRange(desc(price))`` (localCheckpoint pins the
-    reservoir boundaries — the X131 discipline), per-partition running
-    max windowed by spark_partition_id, and a carry of per-partition
-    maxima (one row per partition, the functions/windows.py prefix
-    discipline; carry window allowlisted). The final attach is one
-    equi-join on price carrying (double, date, date) — no text, no
-    all-pairs, no global sort at any scale.
+    ``functions/windows.range_carry``'s ``prior_max`` over
+    ``desc(price)`` (per-partition running max, then a carry of
+    per-partition maxima, one row per range partition; carry window
+    allowlisted). The final attach is one equi-join on price carrying
+    (double, date, date) — no text, no all-pairs, no global sort at
+    any scale.
 
     Both engines compare unrounded values of identical provenance
     (parquet doubles/dates compared, never arithmetic) — no float
@@ -1923,34 +1922,8 @@ def skyline_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = orders.groupBy(F.col("o_totalprice").alias("p")).agg(
         F.max("o_orderdate").alias("gd")
     )
-    parted = (
-        g.repartitionByRange(SKY_PARTS, F.col("p").desc())
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    lm = F.max("gd").over(
-        Window.partitionBy("pid")
-        .orderBy(F.col("p").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        parted.groupBy("pid")
-        .agg(F.max("gd").alias("pm"))
-        .select(
-            "pid",
-            F.max("pm")
-            .over(
-                Window.orderBy("pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            )
-            .alias("cm"),
-        )
-    )
-    m = (
-        parted.withColumn("lm", lm)
-        .join(F.broadcast(carry), "pid")
-        .select("p", "gd", F.greatest("lm", "cm").alias("mgt"))
+    m, _ = range_carry(
+        g, [], [F.col("p").desc()], prior_max={"mgt": F.col("gd")}
     )
     return (
         orders.join(m, orders.o_totalprice == m.p)
@@ -2660,8 +2633,6 @@ def chi2_independence_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 KS_LANG_A = "en"
 KS_LANG_B = "de"
 KS_COEF_95 = 1.36
-#: range-partition fan-out for the distributed ECDF prefix.
-KS_PARTS = 8
 
 
 @query(
@@ -2728,11 +2699,10 @@ def ks_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape — the ECDF prefix WITHOUT a global sort-window: value
     counts partial-aggregate per distinct length, then the cumulative
-    pair runs as repartitionByRange + per-partition running sums + a
-    one-row-per-partition carry (the X131/X150 prefix discipline;
-    carry window allowlisted; localCheckpoint pins the reservoir
-    boundaries). The max-D reduction is an ordinary aggregate. Ids and
-    ints only on the wire."""
+    pair runs as ONE ``functions/windows.range_carry`` pass with two
+    running sums (per-partition sums + a one-row-per-partition carry;
+    carry window allowlisted). The max-D reduction is an ordinary
+    aggregate. Ids and ints only on the wire."""
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("lang").isin(KS_LANG_A, KS_LANG_B)
     )
@@ -2748,47 +2718,8 @@ def ks_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cb"),
     )
-    parted = (
-        c.repartitionByRange(KS_PARTS, "x")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    win = (
-        Window.partitionBy("pid")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carry = (
-        parted.groupBy("pid")
-        .agg(F.sum("ca").alias("pa"), F.sum("cb").alias("pb"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("pa").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("off_a"),
-            F.coalesce(
-                F.sum("pb").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("off_b"),
-        )
-    )
-    cum = (
-        parted.withColumn("wa", F.sum("ca").over(win))
-        .withColumn("wb", F.sum("cb").over(win))
-        .join(F.broadcast(carry), "pid")
-        .select(
-            (F.col("off_a") + F.col("wa")).cast("bigint").alias("cum_a"),
-            (F.col("off_b") + F.col("wb")).cast("bigint").alias("cum_b"),
-        )
+    cum, _ = range_carry(
+        c, [], ["x"], {"cum_a": F.col("ca"), "cum_b": F.col("cb")}
     )
     nn = c.agg(
         F.sum("ca").cast("bigint").alias("n_a"),
@@ -2986,10 +2917,6 @@ def bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # X187 — market / revenue concentration report ------------------------------
-#: range-partition fan-out for the distributed revenue ranking.
-GINI_PARTS = 8
-
-
 @query(
     "market_concentration_report",
     oracle="""
@@ -3056,10 +2983,9 @@ def market_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering each.
 
     Scale shape — the revenue ranking WITHOUT a global sort-window:
-    ``repartitionByRange(x, custkey)`` + per-partition row_number + a
-    one-row-per-partition count carry (the X131/X150/X173 prefix
-    discipline; carry allowlisted, boundaries pinned by
-    localCheckpoint). Everything after the rank is one partial-agg
+    ``functions/windows.distributed_row_number`` over (x, custkey)
+    (per-partition ranks + a one-row-per-partition count carry; carry
+    allowlisted). Everything after the rank is one partial-agg
     reduction to a single row."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
@@ -3069,34 +2995,7 @@ def market_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,2)")
         .alias("x")
     )
-    parted = (
-        rev.repartitionByRange(GINI_PARTS, "x", "o_custkey")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    within = F.row_number().over(
-        Window.partitionBy("pid").orderBy("x", "o_custkey")
-    )
-    offsets = (
-        parted.groupBy("pid")
-        .count()
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("count").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("off"),
-        )
-    )
-    ranked = (
-        parted.withColumn("wrn", within)
-        .join(F.broadcast(offsets), "pid")
-        .select("x", (F.col("off") + F.col("wrn")).cast("bigint").alias("rk"))
-    )
+    ranked = distributed_row_number(rev, ["x", "o_custkey"], "rk")
     tot_f = rev.agg(F.sum("x").cast("decimal(38,2)").alias("tot"))
     share = F.col("x").cast("double") / F.col("tot").cast("double")
     s = (
@@ -4234,26 +4133,24 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crossing price is tie-order-independent by construction; the
     median itself is an input value, no arithmetic.
 
-    Scale shape: the cumulative scan is `grouped_prefix_sum`
+    Scale shape: the cumulative scan is `range_carry`
     (functions/windows.py) — range-partitioned on (flag, price),
     within-PARTITION windows (state bounded by partition size, never
     group size — one flag can be half the table), carry = one row per
     (partition, flag) broadcast back. Group totals ride the same carry
     frame's partials; the final argmin is a partial-agg groupBy.
     A naive per-flag window would funnel each flag through one task."""
-    from ..functions.windows import grouped_prefix_sum
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("price"),
         F.floor("l_quantity").cast("bigint").alias("w0"),
     )
-    # r11: pinned — dp feeds grouped_prefix_sum (whose
+    # r11: pinned — dp feeds range_carry (whose
     # repartitionByRange SAMPLES its input and then writes it — two
     # computations) plus the totals aggregate: three lineitem
     # scan+agg replays, measured as duplicate ~1.5 s map stages.
     # dp is ≤ |flags × distinct prices| narrow rows; 2.6 -> 2.4 s.
-    # (Scaling grouped_prefix_sum's parts to defaultParallelism was
+    # (Scaling range_carry's parts to defaultParallelism was
     # tried alongside and REVERTED: 2.6 -> 4.8 s — the 32-way range
     # sample + fan-out costs more than the extra window parallelism
     # buys at this row count.)
@@ -4262,9 +4159,7 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("w0").cast("bigint").alias("w"))
         .localCheckpoint(eager=True)
     )
-    c = grouped_prefix_sum(
-        dp, ["l_returnflag"], ["price"], F.col("w"), "cw"
-    )
+    c, _ = range_carry(dp, ["l_returnflag"], ["price"], {"cw": F.col("w")})
     totals = dp.groupBy("l_returnflag").agg(
         F.sum("w").cast("bigint").alias("tw")
     )

@@ -10,7 +10,8 @@ Scale design (100 TB):
   stage you run *after* LSH blocking at scale; here it doubles as the
   oracle-checkable ground truth.
 - minhash-LSH: the scale path (candidate pairs ∝ collisions, not n²),
-  via MLlib MinHashLSH with a fixed seed.
+  over an explicit seeded affine hash family, so the DuckDB oracle
+  states the same signatures and bands.
 - simhash: 60-bit fingerprint; near-dup candidates = small hamming
   distance; fingerprinting itself is a narrow map + one groupBy.
 - embedding cosine: label-blocked pair join (stand-in for LSH/IVF
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, no_pushdown, spread_scan
 from ..functions.parity import exact_round, md5_int, tokens
 from ..functions.vectors import as_double, cosine, cosine_oracle_sql
+from ..functions.windows import distributed_row_number
 from ..memo import ARTIFACTS, input_identity
 from ..registry import query
 from ..session import scratch_dir
@@ -423,41 +425,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# X2b — MinHash LSH (the scale path; no SQL oracle → rows-only check) ----
-def near_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2 (library path, UNREGISTERED): MinHash-LSH candidate pairs via
-    MLlib (HashingTF → MinHashLSH, fixed seed), filtered at Jaccard
-    distance ≤ 1-threshold. Kept as the library-integration path —
-    MLlib's private hash family is not SQL-expressible, so this variant
-    can only ever be rows-only; the REGISTERED ``near_dedup_minhash``
-    uses the explicit seeded affine family and is oracle-exact
-    (r7-verdict task 6). Recall vs the exact all-pairs ground truth is
-    bounded in tests/test_sketches.py."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    docs = load_table(spark, sf_dir, "documents")
-    t = shingle_index(spark, sf_dir).select(
-        "doc_id", F.col("sh").alias("shingles")
-    )
-    htf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    feats = htf.transform(t)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, 1.0 - JACCARD_THRESHOLD, distCol="jaccard_dist"
-    )
-    return (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(1.0 - F.col("jaccard_dist"), 4).alias("jaccard_est"),
-        )
-    )
-
-
 # X44 — benchmark contamination check ------------------------------------
 #: every doc_id divisible by this is "the benchmark/eval set".
 BENCH_MOD = 97
@@ -636,30 +603,43 @@ def _mh_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mh_bands_of_sig(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, bkey) LSH band index rows of a signature frame —
-    the persisted-artifact schema of the incremental screen."""
-    band_keys = [
+def _mh_band_keys(sig: list[F.Column]) -> list[F.Column]:
+    """The ``_MH_BANDS`` LSH band keys of a signature ``m0..m{K-1}``:
+    md5 of each band's ``_MH_R`` components joined by commas — the one
+    statement of the banding, shared by the batch band index and the
+    streaming banding expression."""
+    return [
         F.md5(
             F.concat_ws(
-                ",",
-                *[
-                    F.col(f"m{j * _MH_R + k}").cast("string")
-                    for k in range(_MH_R)
-                ],
+                ",", *[sig[j * _MH_R + k].cast("string") for k in range(_MH_R)]
             )
         )
         for j in range(_MH_BANDS)
     ]
+
+
+def _mh_bands_of_sig(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bkey) LSH band index rows of a signature frame —
+    the persisted-artifact schema of the incremental screen."""
+    band_keys = _mh_band_keys([F.col(f"m{i}") for i in range(_MH_K)])
     return sig.select(
         "doc_id", F.posexplode(F.array(*band_keys)).alias("band", "bkey")
     )
 
 
-def _mh_band_cte() -> str:
-    """CTE chain through ``p`` (the DISTINCT banded candidate pairs) —
-    shared by the banding oracle and the composed verified-pipeline
-    oracle so both state the identical candidate set."""
+def _mh_bands_cte(prefix: str = "", pred: str | None = None) -> str:
+    """CTE chain ``{prefix}t .. {prefix}bands`` (no leading ``WITH``):
+    shingles, signatures and ``(doc_id, band, bkey)`` LSH bands of the
+    documents matching ``pred`` (all of them when ``None``) — the one
+    SQL statement of the signature and band arithmetic. The prefix
+    lets one oracle state corpus and batch bands side by side."""
+    shingles = _SHINGLES_SQL
+    if pred is not None:
+        marker = "FROM documents\n      WHERE"
+        assert marker in shingles
+        shingles = shingles.replace(
+            marker, f"FROM documents\n      WHERE ({pred}) AND"
+        )
     coeffs = _mh_coeffs()
     mins = ",\n             ".join(
         f"CAST(MIN((h * {a} + {b}) % {_MH_P}) AS BIGINT) AS m{i}"
@@ -674,26 +654,34 @@ def _mh_band_cte() -> str:
         for j in range(_MH_BANDS)
     )
     bands_values = ", ".join(f"({j})" for j in range(_MH_BANDS))
-    return f"""
-    WITH t AS ({_SHINGLES_SQL}),
-    e AS (SELECT doc_id, unnest(sh) AS shingle FROM t),
-    hh AS (
+    return f"""{prefix}t AS ({shingles}),
+    {prefix}e AS (SELECT doc_id, unnest(sh) AS shingle FROM {prefix}t),
+    {prefix}hh AS (
       SELECT doc_id,
              CAST(('0x' || substr(md5(shingle), 1, 7)) AS BIGINT) AS h
-      FROM e
+      FROM {prefix}e
     ),
-    sig AS (
+    {prefix}sig AS (
       SELECT doc_id,
              {mins}
-      FROM hh GROUP BY doc_id
+      FROM {prefix}hh GROUP BY doc_id
     ),
-    bands AS (
+    {prefix}bands AS (
       SELECT doc_id, v.j AS band,
              CASE v.j
              {band_cases}
              END AS bkey
-      FROM sig, (VALUES {bands_values}) AS v(j)
-    ),
+      FROM {prefix}sig, (VALUES {bands_values}) AS v(j)
+    )"""
+
+
+def _mh_band_cte() -> str:
+    """``WITH`` chain through ``p`` (the DISTINCT banded candidate
+    pairs) — shared by the banding oracle and the composed
+    verified-pipeline oracle so both state the identical candidate
+    set."""
+    return f"""
+    WITH {_mh_bands_cte()},
     p AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -723,14 +711,13 @@ def _minhash_oracle() -> str:
     tags=("dedup", "extension", "lsh"),
 )
 def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2f: MinHash-LSH with an EXPLICIT seeded hash family — unlike
-    the MLlib variant (rows-only check), every stage here is plain
-    arithmetic both engines evaluate identically, so the full LSH
-    banding pipeline is oracle-checked bit-exactly: 16-component
-    signature (min of affine hashes over 28-bit shingle digests), 4
-    bands of 4 rows hashed to band keys, candidate pairs from the band
-    equi-join, and the signature-agreement Jaccard estimate (n/16 is
-    exact in binary — no rounding needed).
+    """X2f: MinHash-LSH with an EXPLICIT seeded hash family — every
+    stage is plain arithmetic both engines evaluate identically, so
+    the full LSH banding pipeline is oracle-checked bit-exactly:
+    16-component signature (min of affine hashes over 28-bit shingle
+    digests), 4 bands of 4 rows hashed to band keys, candidate pairs
+    from the band equi-join, and the signature-agreement Jaccard
+    estimate (n/16 is exact in binary — no rounding needed).
 
     Scale shape is the canonical one: signatures are one groupBy over
     exploded shingles (map-side partial mins), banding is a narrow map,
@@ -793,64 +780,17 @@ def near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     affine family (``minhash_band_pairs``), so the whole pipeline is
     oracle-exact — agreement/16 is exact binary arithmetic and the
     0.6 threshold sits between representable multiples of 1/16, so
-    the filter has no float boundary. The MLlib variant remains as
-    the unregistered library path ``near_dedup_minhash_mllib``."""
+    the filter has no float boundary."""
     return minhash_band_pairs(spark, sf_dir).filter(
         F.col("est_jaccard") >= JACCARD_THRESHOLD
     )
 
 
-def _mh_bands_cte_for(name: str, pred: str) -> str:
-    """CTE chain ``{name}_t .. {name}_bands`` — the `_mh_band_cte`
-    banding arithmetic, parameterized by a source predicate and
-    name-prefixed so the incremental oracle can state corpus and batch
-    bands side by side from ONE definition."""
-    marker = "FROM documents\n      WHERE"
-    assert marker in _SHINGLES_SQL
-    shingles = _SHINGLES_SQL.replace(
-        marker, f"FROM documents\n      WHERE ({pred}) AND"
-    )
-    coeffs = _mh_coeffs()
-    mins = ",\n             ".join(
-        f"CAST(MIN((h * {a} + {b}) % {_MH_P}) AS BIGINT) AS m{i}"
-        for i, (a, b) in enumerate(coeffs)
-    )
-    band_cases = "\n             ".join(
-        f"WHEN {j} THEN md5("
-        + " || ',' || ".join(
-            f"CAST(m{j * _MH_R + k} AS VARCHAR)" for k in range(_MH_R)
-        )
-        + ")"
-        for j in range(_MH_BANDS)
-    )
-    bands_values = ", ".join(f"({j})" for j in range(_MH_BANDS))
-    return f"""
-    {name}_t AS ({shingles}),
-    {name}_e AS (SELECT doc_id, unnest(sh) AS shingle FROM {name}_t),
-    {name}_hh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(shingle), 1, 7)) AS BIGINT) AS h
-      FROM {name}_e
-    ),
-    {name}_sig AS (
-      SELECT doc_id,
-             {mins}
-      FROM {name}_hh GROUP BY doc_id
-    ),
-    {name}_bands AS (
-      SELECT doc_id, v.j AS band,
-             CASE v.j
-             {band_cases}
-             END AS bkey
-      FROM {name}_sig, (VALUES {bands_values}) AS v(j)
-    )"""
-
-
 #: Shared by the batch screen and its streaming twin
 #: (``streaming_neardup_screen``) — one statement of the semantics.
 INCR_MH_ORACLE = f"""
-    WITH {_mh_bands_cte_for("corpus", "source = 'src0'")},
-    {_mh_bands_cte_for("batch", "source <> 'src0'")},
+    WITH {_mh_bands_cte("corpus_", "source = 'src0'")},
+    {_mh_bands_cte("batch_", "source <> 'src0'")},
     cand AS (
       SELECT b.doc_id,
              COUNT(DISTINCT c.doc_id) AS n_corpus_candidates
@@ -898,9 +838,7 @@ def near_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from the EXPLICIT seeded banding family
     (``minhash_band_pairs``), so since round 3 the WHOLE composed
     pipeline — signatures, bands, candidate join, exact verify — is
-    oracle-checked bit-exactly. (The MLlib variant remains as
-    ``near_dedup_minhash``, rows-only, as the library-integration
-    path.)"""
+    oracle-checked bit-exactly."""
     cand = minhash_band_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = load_table(spark, sf_dir, "documents")
     t = shingle_index(spark, sf_dir).select("doc_id", "sh")
@@ -1759,15 +1697,7 @@ def _mh_band_structs() -> F.Column:
         )
         for (a, b) in _mh_coeffs()
     ]
-    bkeys = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[sigs[j * _MH_R + k].cast("string") for k in range(_MH_R)],
-            )
-        )
-        for j in range(_MH_BANDS)
-    ]
+    bkeys = _mh_band_keys(sigs)
     return F.when(
         F.size(sh) > 0,
         F.array(
@@ -1799,8 +1729,8 @@ def _ingest_admission_oracle() -> str:
       SELECT DISTINCT b.doc_id FROM batch_ch b
       WHERE EXISTS (SELECT 1 FROM corpus_idx c WHERE c.h = b.h)
     ),
-    {_mh_bands_cte_for("mcorpus", "source = 'src0'")},
-    {_mh_bands_cte_for("mbatch", "source <> 'src0'")},
+    {_mh_bands_cte("mcorpus_", "source = 'src0'")},
+    {_mh_bands_cte("mbatch_", "source <> 'src0'")},
     mh_dup AS (
       SELECT DISTINCT b.doc_id FROM mbatch_bands b
       JOIN mcorpus_bands c ON b.band = c.band AND b.bkey = c.bkey
@@ -1936,51 +1866,19 @@ def ingest_admission_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: neighborhood width (rank distance) and verify threshold.
 SNM_W = 4
 SNM_KEY_TOKENS = 3
-#: range-partition fan-out for the distributed rank assignment.
-SNM_RANK_PARTS = 8
 
 
 def _snm_cand(docs: DataFrame, key: F.Column) -> DataFrame:
     """(doc_a, doc_b, rn_a, rn_b) sorted-neighborhood candidate pairs
     for one sort KEY — the pass machinery shared by the single-pass
     query and the multi-pass union. Global ranks WITHOUT a global
-    sort-window: repartitionByRange + per-partition row_number + a
-    carry of per-partition counts (one row per partition — the
-    prefix-sum discipline of functions/windows.py); neighborhood
-    pairing is an equi-join on rank blocks so only (doc_id, rank) ints
-    shuffle."""
+    sort-window: ``functions/windows.distributed_row_number`` (range
+    partitions + per-partition ranks + a carry of one row per
+    partition); neighborhood pairing is an equi-join on rank blocks so
+    only (doc_id, rank) ints shuffle."""
     keyed = docs.select("doc_id", key.alias("key"))
-    # localCheckpoint pins the reservoir-sampled range boundaries: the
-    # counts branch and the ranked branch below MUST observe identical
-    # partition boundaries or the pid->offset carry mis-aligns. Exchange
-    # reuse usually guarantees that, but a recompute (reuse disabled,
-    # task retry) could re-sample — materializing once removes the race.
-    parted = (
-        keyed.repartitionByRange(SNM_RANK_PARTS, "key", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    within = F.row_number().over(
-        Window.partitionBy("pid").orderBy("key", "doc_id")
-    )
-    counts = parted.groupBy("pid").count()
-    offsets = counts.select(
-        "pid",
-        F.coalesce(
-            F.sum("count").over(
-                Window.orderBy("pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("off"),
-    )
-    ranked = (
-        parted.withColumn("wrn", within)
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            "doc_id", (F.col("off") + F.col("wrn")).alias("rn")
-        )
+    ranked = distributed_row_number(keyed, ["key", "doc_id"], "rn").select(
+        "doc_id", "rn"
     )
     blk = ((F.col("rn") - 1) / SNM_W).cast("long")
     a = ranked.select(
@@ -2055,11 +1953,10 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     offers.
 
     Scale shape — the global rank WITHOUT a global sort-window:
-    ``repartitionByRange(key, doc_id)`` (reservoir-sampled boundaries,
-    deterministic result regardless of where boundaries land) + a
-    per-partition ``row_number`` + a carry of per-partition COUNTS
-    (one row per partition — the prefix-sum discipline of
-    functions/windows.py, allowlisted as such). Neighborhood pairing
+    ``functions/windows.distributed_row_number`` over (key, doc_id)
+    (range partitions, deterministic wherever the sampled boundaries
+    land, per-partition ranks and a carry of per-partition COUNTS —
+    one row per partition, allowlisted as such). Neighborhood pairing
     is an equi-join on the rank block ``rank div {SNM_W}`` (each right
     row probes its own and the previous block), so the pair join
     shuffles (doc_id, rank) ints only; shingle sets are attached to

@@ -211,9 +211,9 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # X29 — time-series resample (minute bars) --------------------------------
-@query(
-    "resample_minute_bars",
-    oracle="""
+#: shared with the streaming twin (streaming_minute_bars) — both
+#: execution modes must satisfy the identical oracle.
+MINUTE_BARS_ORACLE = """
     WITH m AS (
       SELECT event_type, value, ts, event_id,
              date_trunc('minute', ts) AS minute
@@ -235,7 +235,12 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            ANY_VALUE(CASE WHEN rn_close = 1 THEN value END) AS close,
            COUNT(*) AS n
     FROM o GROUP BY event_type, strftime(minute, '%Y-%m-%d %H:%M')
-    """,
+    """
+
+
+@query(
+    "resample_minute_bars",
+    oracle=MINUTE_BARS_ORACLE,
     tags=("analytics", "timeseries", "extension"),
 )
 def resample_minute_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2438,11 +2443,10 @@ def survival_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: intervals non-degenerate even for zero-valued events.
 IUC_BASE_US = 60_000_000
 
-
-@query(
-    "interval_union_coverage",
-    oracle=f"""
-    WITH iv AS (
+#: The per-user interval islands (``iv``, ``sweep``, ``isl`` CTEs, no
+#: leading ``WITH``) — shared with the streaming twin
+#: (streaming_interval_union), which emits the islands themselves.
+IUC_ISLANDS_CTE = f"""iv AS (
       SELECT user_id, event_id, epoch_us(ts) AS s,
              epoch_us(ts) + {IUC_BASE_US}
                + CAST(floor(GREATEST(value, 0.0) * 1000000.0) AS BIGINT)
@@ -2465,7 +2469,13 @@ IUC_BASE_US = 60_000_000
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS island
       FROM sweep
-    ),
+    )"""
+
+
+@query(
+    "interval_union_coverage",
+    oracle=f"""
+    WITH {IUC_ISLANDS_CTE},
     per_island AS (
       SELECT user_id, island, MIN(s) AS i_start, MAX(e) AS i_end,
              COUNT(*) AS n_ev

@@ -685,29 +685,7 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming OHLC bars: min_by/max_by in windowed streaming state ---------
 @query(
     "streaming_minute_bars",
-    oracle="""
-    WITH m AS (
-      SELECT event_type, value, ts, event_id,
-             date_trunc('minute', ts) AS minute
-      FROM events
-    ),
-    o AS (
-      SELECT event_type, minute, value, ts, event_id,
-             row_number() OVER (PARTITION BY event_type, minute
-                                ORDER BY ts, event_id) AS rn_open,
-             row_number() OVER (PARTITION BY event_type, minute
-                                ORDER BY ts DESC, event_id DESC) AS rn_close
-      FROM m
-    )
-    SELECT event_type,
-           strftime(minute, '%Y-%m-%d %H:%M') AS minute,
-           ANY_VALUE(CASE WHEN rn_open = 1 THEN value END) AS open,
-           MAX(value) AS high,
-           MIN(value) AS low,
-           ANY_VALUE(CASE WHEN rn_close = 1 THEN value END) AS close,
-           COUNT(*) AS n
-    FROM o GROUP BY event_type, strftime(minute, '%Y-%m-%d %H:%M')
-    """,
+    oracle=_events.MINUTE_BARS_ORACLE,
     tags=("streaming", "timeseries", "extension"),
 )
 def streaming_minute_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1571,30 +1549,7 @@ def _interval_union_kernel(key, pdfs, state):
 @query(
     "streaming_interval_union",
     oracle=f"""
-    WITH iv AS (
-      SELECT user_id, event_id, epoch_us(ts) AS s,
-             epoch_us(ts) + {_events.IUC_BASE_US}
-               + CAST(floor(GREATEST(value, 0.0) * 1000000.0) AS BIGINT)
-               AS e
-      FROM events
-    ),
-    sweep AS (
-      SELECT user_id, s, e,
-             MAX(e) OVER (PARTITION BY user_id ORDER BY s, e, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING) AS prev_e
-      FROM iv
-    ),
-    isl AS (
-      SELECT user_id, s, e,
-             SUM(CASE WHEN prev_e IS NULL OR s > prev_e THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s, e,
-                     CASE WHEN prev_e IS NULL OR s > prev_e
-                          THEN 0 ELSE 1 END
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS island
-      FROM sweep
-    )
+    WITH {_events.IUC_ISLANDS_CTE}
     SELECT user_id,
            CAST(MIN(s) AS BIGINT) AS island_start_us,
            CAST(MAX(e) AS BIGINT) AS island_end_us,

@@ -679,7 +679,7 @@ def test_interval_union_windows_are_user_partitioned(spark):
 
 
 def test_weighted_median_windows_are_partition_bounded(spark):
-    # grouped_prefix_sum discipline: every window in the cumulative
+    # range_carry discipline: every window in the cumulative
     # scan is partitioned (by (__pid, group) for the within-partition
     # sums; by group over ~8 carry rows for the offsets) — a naive
     # per-flag window (3 partitions holding n/3 rows each) is exactly

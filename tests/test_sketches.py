@@ -59,32 +59,6 @@ def test_lsh_verified_pipeline_subset_and_recall(spark):
     assert recall >= 0.8, f"LSH recall {recall:.2f} over {len(exact)} pairs"
 
 
-def test_mllib_minhash_library_path_recall(spark):
-    """The UNREGISTERED MLlib variant (kept as the library-integration
-    path after r8 swapped the registered query to the oracle-exact
-    explicit family) must still find most true near-dup pairs — the
-    same 0.8 recall floor the explicit pipeline is held to."""
-    from deloton_solo_spark.operators.dedup import (
-        near_dedup_minhash_mllib,
-        near_dedup_ngram_jaccard,
-    )
-
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in near_dedup_ngram_jaccard(spark, SF_DIR).collect()
-    }
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in near_dedup_minhash_mllib(spark, SF_DIR).collect()
-    }
-    assert exact
-    # approxSimilarityJoin filters on EXACT distance, so every emitted
-    # pair is a true near-dup; banding misses bound recall below 1
-    assert got <= exact
-    recall = len(got) / len(exact)
-    assert recall >= 0.8, f"MLlib recall {recall:.2f} over {len(exact)}"
-
-
 def test_explicit_hll_estimate_within_sketch_error(spark):
     """The explicit-register HLL (X77) must estimate within the sketch's
     theoretical error: rse ≈ 1.04/sqrt(64) ≈ 13%; assert a 3-sigma-ish

@@ -195,7 +195,7 @@ ALLOWED_GLOBAL_WINDOWS = {
     # embeds the vocab_rank_ids fragment (same bounded window)
     "bpe_encode_rank_ids": ("rank window attached after limit(24)", 24),
     # prefix-sum carry over per-partition COUNTS — one row per range
-    # partition (SNM_RANK_PARTS=8 rows at any scale)
+    # partition (RANK_PARTS=8 rows at any scale)
     "sorted_neighborhood_pairs": (
         "carry window over one row per range partition",
         16,
@@ -206,7 +206,7 @@ ALLOWED_GLOBAL_WINDOWS = {
         16,
     ),
     # distributed prefix-MAX carry over per-partition maxima — one row
-    # per range partition (SKY_PARTS=8 rows at any scale)
+    # per range partition (RANK_PARTS=8 rows at any scale)
     "skyline_pareto_orders": (
         "carry window over one row per range partition",
         16,
@@ -217,7 +217,7 @@ ALLOWED_GLOBAL_WINDOWS = {
         _doc_buckets,
     ),
     # ECDF prefix carry over per-partition (ca, cb) sums — one row per
-    # range partition (KS_PARTS=8 rows at any scale)
+    # range partition (RANK_PARTS=8 rows at any scale)
     "ks_test_report": (
         "carry window over one row per range partition",
         16,
@@ -267,7 +267,7 @@ ALLOWED_GLOBAL_WINDOWS = {
         _event_day_span,
     ),
     # revenue-rank carry over per-partition counts — one row per range
-    # partition (GINI_PARTS=8 rows at any scale)
+    # partition (RANK_PARTS=8 rows at any scale)
     "market_concentration_report": (
         "carry window over one row per range partition",
         16,
